@@ -23,7 +23,8 @@ object Cdc {
     *     changelog mode (`update_every=4`: every 4th position re-emits an
     *     earlier id with a later ts — Task.java:431-432), windowed
     *     INITIAL→INCREMENTAL progression, one page per entity per poll
-    *     (poll loop, Task.java:136-173). Drained with AvailableNow into a
+    *     (poll loop, Task.java:136-173), every poll of the drain in one
+    *     micro-batch. Drained with AvailableNow into a
     *     memory sink — the TEST-SCALE landing zone for this fixed 15 k-
     *     position replay (production path = foreachBatch → partitioned
     *     files, CheckpointSpec); the sink view is dropped on all paths.

@@ -45,7 +45,7 @@ object Streaming {
   /** q_paged_stream: the paged CDC source drained through its genuine
     * `MicroBatchStream` path — a full AvailableNow replay (windowed
     * INITIAL→INCREMENTAL state machine, one 500-row page per poll, 24
-    * micro-batches) into a memory sink, then the same half-open-window
+    * polls committed as one micro-batch) into a memory sink, then the same half-open-window
     * aggregation as q_paged_source over the landed rows. The oracle
     * replays the deterministic generator in SQL, so the differential
     * proves the STREAMING path (offset algebra, page planning, restartable
@@ -176,7 +176,7 @@ object Streaming {
     * 11 + 12 ms with the FileSystem-based one (same rename-based atomic
     * commit, File.renameTo under the hood, no subprocess). Every
     * AvailableNow drain here pays this 2× per micro-batch, so a 24-batch
-    * drain loses ~1.1 s to subprocess forks. Applied once per session,
+    * drain would lose ~1.1 s to subprocess forks. Applied once per session,
     * only when no explicit manager is configured and the session's
     * checkpoint root (if any) is local — on a real cluster with an HDFS/
     * object-store checkpoint dir this never fires and the FileContext

@@ -239,6 +239,17 @@ case class IntSqDist(left: Expression, right: Expression)
   override def prettyName: String = "int_sq_dist"
 }
 
+/** Construction checks shared by the nearest-centroid k-loops: with no
+  * centroids the loop would answer cid 0 for every row, and a cid list
+  * that does not line up with the centroids would mislabel them. */
+private[engine] object NearestCentroid {
+  def requireCentroids(nCids: Int, nCents: Int): Unit = {
+    require(nCents > 0, "nearest-centroid assignment needs at least one centroid")
+    require(nCids == nCents,
+      s"nearest-centroid assignment got $nCids cids for $nCents centroids")
+  }
+}
+
 /** Nearest centroid by cosine over a k-bounded FLOAT centroid set carried
   * as expression parameters — the codegen'd replacement for the
   * `vectors.join(broadcast(centroids))` + `groupBy(vec_id).max_by`
@@ -261,6 +272,7 @@ case class IntSqDist(left: Expression, right: Expression)
   * Returns struct(cid, sim); null vector → null. */
 case class NearestCentroidCosF(child: Expression, cids: Seq[Int],
     cents: Seq[Seq[Float]]) extends UnaryExpression {
+  NearestCentroid.requireCentroids(cids.size, cents.size)
 
   override def dataType: DataType = StructType(Seq(
     StructField("cid", IntegerType, nullable = false),
@@ -345,6 +357,7 @@ object NearestCentroidCosF {
   * Returns struct(cid, d); null code vector → null. */
 case class NearestCentroidSqI(child: Expression, cids: Seq[Long],
     cents: Seq[Seq[Int]]) extends UnaryExpression {
+  NearestCentroid.requireCentroids(cids.size, cents.size)
 
   override def dataType: DataType = StructType(Seq(
     StructField("cid", LongType, nullable = false),

@@ -63,7 +63,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * poll, windowed INITIAL→INCREMENTAL progression, offsets carrying the
   * reference's 7-field state map; multi-entity mode streams every entity
   * with its own independent state machine
-  * ([[PagedMultiMicroBatchStream]]):
+  * ([[PagedMultiMicroBatchStream]]). A micro-batch is one poll under
+  * every trigger but `Trigger.AvailableNow`, where it is every poll up to
+  * the drain target (or up to the first failing poll) — the page-sized
+  * requests stay the same, only the commit unit grows:
   * {{{
   * spark.readStream.format("graft.sources.PagedEntitySource")
   *   .option("rows", 100000).option("pageSize", 500)
@@ -490,6 +493,8 @@ class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
     s"PagedScan(lo=$lo, hi=$hi, pageSize=$pageSize, fields=${required.fieldNames.mkString(",")}$ent)"
   }
 
+  /** One page per partition, so pushdown pruning shows as the partition
+    * count. */
   override def planInputPartitions(): Array[InputPartition] =
     confs.toArray.flatMap { conf =>
       val eLo = math.min(lo, conf.rows)
@@ -498,8 +503,8 @@ class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
       val pages = ((n + pageSize - 1) / pageSize).toInt
       (0 until pages).map { p =>
         val start = eLo + p.toLong * pageSize
-        PagedPartition(start, math.min(eHi, start + pageSize), conf,
-          faults.pageFault(start, pageSize), eLo, eHi): InputPartition
+        PagedPartition(Seq(PagedPage(start, math.min(eHi, start + pageSize), conf,
+          faults.pageFault(start, pageSize), eLo, eHi))): InputPartition
       }
     }
 
@@ -512,13 +517,41 @@ class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
   * request shape exactly: `where=` holds the WINDOW and `offset=` the
   * page's position within it (fetchChangesWithPagination pages a fixed
   * where-window by offset, ChargeOverApiClient.java:86-112). */
-case class PagedPartition(startId: Long, endId: Long,
+case class PagedPage(startId: Long, endId: Long,
   conf: PagedEntitySource.EntityConf,
   fault: PagedEntitySource.PageFault = PagedEntitySource.PageFault.none,
-  windowLoId: Long = -1L, windowHiId: Long = -1L)
-  extends InputPartition {
+  windowLoId: Long = -1L, windowHiId: Long = -1L) {
   def winLo: Long = if (windowLoId >= 0) windowLoId else startId
   def winHi: Long = if (windowHiId >= 0) windowHiId else endId
+  def rows: Long = endId - startId
+}
+
+/** One task's work: a contiguous run of pages, read in order, each page
+  * under its own retry loop. A batch-scan partition is a run of one; a
+  * micro-batch packs its pages into at most the session's default
+  * parallelism runs ([[PagedPartition.pack]]). */
+case class PagedPartition(pages: Seq[PagedPage]) extends InputPartition
+
+object PagedPartition {
+  /** Cut `pages` into at most `slots` contiguous runs of about equal row
+    * count: split the batch's rows into n equal spans and give each page
+    * to the span its middle row falls in, so runs keep the plan order
+    * and a page is never split. */
+  def pack(pages: Seq[PagedPage], slots: Int): Array[InputPartition] = {
+    val ps = pages.toIndexedSeq
+    val n = math.min(math.max(slots, 1), ps.size)
+    val before = ps.scanLeft(0L)(_ + _.rows) // rows before each page, then the total
+    val total = math.max(before.last, 1L)
+    ps.indices.groupBy(i => (before(i) + ps(i).rows / 2) * n / total)
+      .toArray.sortBy(_._1)
+      .map { case (_, run) => PagedPartition(run.map(ps)): InputPartition }
+  }
+
+  /** Runs per micro-batch: the active session's default parallelism. */
+  def slots: Int =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
 }
 
 class PagedReaderFactory(required: StructType) extends PartitionReaderFactory {
@@ -538,7 +571,8 @@ class PagedFetchException(msg: String, val rateLimited: Boolean,
     val permanent: Boolean = false)
   extends java.io.IOException(msg)
 
-/** One page fetch (ChargeOverApiClient.fetchChangesWithPagination analog):
+/** The page fetches of one partition's run, in order
+  * (ChargeOverApiClient.fetchChangesWithPagination analog): a
   * deterministic record generator in place of the HTTP GET. Per-entity
   * `fields=` means unrequested data columns come back null (a schemaless
   * record that lacks the field); `category_mod` stands in for an arbitrary
@@ -553,23 +587,24 @@ class PagedFetchException(msg: String, val rateLimited: Boolean,
   * framework's next poll() provides in the reference. Backoff values come
   * from StateMachine.backoffMillis (the PropertySpec'd formula); only the
   * SLEEP is scaled by retryBackoffScale so specs drain in milliseconds. */
-class PagedPartitionReader(page: PagedPartition, required: StructType)
+class PagedPartitionReader(part: PagedPartition, required: StructType)
     extends PartitionReader[InternalRow] {
-  private var id = page.startId - 1
   private val fields = required.fieldNames
-  private val conf = page.conf
-  private var fetched = false
-  // HTTP mode: the fetched page, already mapped to rows
+  private val pages = part.pages.iterator
+  // the page being read: generator mode walks positions up to its endId,
+  // HTTP mode the fetched page, already mapped to rows
+  private var page: PagedPage = null
+  private var id = 0L
   private var httpRows: Iterator[InternalRow] = Iterator.empty
   private var cur: InternalRow = null
-  private def served(f: String): Boolean = conf.fields.forall(_.contains(f))
+  private def served(f: String): Boolean = page.conf.fields.forall(_.contains(f))
 
   /** One fetch ATTEMPT. Generator mode: a no-op, except the planned fault
     * fails the first `failAttempts` attempts. HTTP mode: a real GET in the
     * reference's request grammar — the server's own status codes (429 /
     * 5xx) raise the same two failure flavors the fault plan simulates, so
     * the retry loop below is identical either way. */
-  private def attemptFetch(attempt: Int): Unit = conf.remote match {
+  private def attemptFetch(attempt: Int): Unit = page.conf.remote match {
     case None =>
       if (attempt < page.fault.failAttempts)
         throw new PagedFetchException(
@@ -581,10 +616,11 @@ class PagedPartitionReader(page: PagedPartition, required: StructType)
 
   /** fetchBatchWithRetry (ChargeOverSourceTask.java:296-343): up to
     * maxRetries+1 attempts, exponential backoff between general failures,
-    * flat 60 s after a 429, rethrow once exhausted. Runs once, lazily, so
-    * a zero-row page costs nothing. */
+    * flat 60 s after a 429, rethrow once exhausted. Runs once per page,
+    * when the reader reaches it. */
   private def fetchWithRetry(): Unit = {
     val f = page.fault
+    var fetched = false
     var attempt = 0
     var lastEx: Exception = null
     while (!fetched && attempt <= f.maxRetries) {
@@ -611,16 +647,26 @@ class PagedPartitionReader(page: PagedPartition, required: StructType)
         s"Failed after ${f.maxRetries + 1} attempts", lastEx)
   }
 
-  override def next(): Boolean = {
-    if (!fetched) fetchWithRetry()
-    if (conf.remote.isDefined) {
+  /** Steps within the current page; false once it is spent. */
+  private def advance(): Boolean =
+    if (page.conf.remote.isDefined) {
       if (httpRows.hasNext) { cur = httpRows.next(); true } else false
     } else { id += 1; id < page.endId }
+
+  override def next(): Boolean = {
+    while (page == null || !advance()) {
+      if (!pages.hasNext) return false
+      page = pages.next()
+      id = page.startId - 1
+      fetchWithRetry()
+    }
+    true
   }
 
-  override def get(): InternalRow = if (conf.remote.isDefined) cur else {
+  override def get(): InternalRow = if (page.conf.remote.isDefined) cur else {
     // `id` here is the stream POSITION; the record id diverges from it
     // only in changelog mode (update positions re-emit an earlier id)
+    val conf = page.conf
     val rid = PagedEntitySource.recordId(id, conf.updateEvery)
     val ver = PagedEntitySource.recordVer(id, conf.updateEvery)
     val vals: Array[Any] = fields.map {
@@ -660,7 +706,7 @@ private[sources] object HttpPageFetch {
     * with the offset-JSON codecs below for the same reason. */
   private[sources] val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  def fetch(api: PagedEntitySource.RemoteApi, page: PagedPartition,
+  def fetch(api: PagedEntitySource.RemoteApi, page: PagedPage,
       required: StructType): Array[InternalRow] = {
     val conf = page.conf
     val qs = new StringBuilder()
@@ -808,6 +854,9 @@ case class PagedStreamOffset(loadMode: String, lastProcessedId: Long,
     retryCount: Int = 0, nextScheduledRunId: Long = 0L)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
   def pos: Long = lastProcessedId + currentOffset
+  /** Left by a poll that failed (retry_count > 0) or reset its batch
+    * (next_scheduled_run set); a successful poll clears both. */
+  def pollFailed: Boolean = retryCount > 0 || nextScheduledRunId > 0L
   override def json(): String =
     s"""{"load_mode":"$loadMode","last_processed_id":$lastProcessedId,""" +
     s""""batch_end_id":$batchEndId,"current_offset":$currentOffset,""" +
@@ -836,30 +885,39 @@ object PagedStreamOffset {
   * (ChargeOverSourceTask.java:136-173 poll loop) — as a genuine DSv2
   * `MicroBatchStream`:
   *
-  *  - one `poll()` == one micro-batch, returning at most one PAGE
-  *    (`getDefaultReadLimit = maxRows(pageSize)` — batch.size, the
-  *    reference's per-poll fetch bound);
+  *  - one `poll()` fetches at most one PAGE (`getDefaultReadLimit =
+  *    maxRows(pageSize)` — batch.size, the reference's per-request
+  *    bound; it sizes the request, not the commit unit);
   *  - the incremental window state machine (INITIAL_LOAD catch-up, then
   *    windowed INCREMENTAL_LOAD, :245-291) drives `latestOffset`: a
   *    window [last, batchEnd) opens, pages through, completes, and the
   *    mode switches exactly once after the first window completes;
+  *  - a micro-batch is ONE poll under every trigger but AvailableNow.
+  *    There `latestOffset` keeps polling until the entity reaches the
+  *    drain target or a poll fails or resets; that failing state ends the
+  *    batch, so retry_count and the reset still reach the offset log. The
+  *    states are the per-poll sequence — a clean drain just logs its last
+  *    one instead of one entry per page;
   *  - offsets are committed by Spark's checkpoint offset log — the exact
   *    role the per-record sourceOffset map plays for Connect (:434-443);
   *    restart resumes from the committed (window, page) position with no
   *    re-emission;
+  *  - `planInputPartitions` replays the polls between the logged start
+  *    and end offsets ([[PagedMicroBatchStream.replay]]), so every page
+  *    keeps its own limit/offset/where= request and a restarted query
+  *    re-plans a logged batch to the same pages; the pages are packed
+  *    into at most the session's default parallelism tasks;
   *  - `SupportsTriggerAvailableNow` caps a run at the data available
-  *    when the trigger fired (the captured "now" of :245-262) and drains
-  *    page-by-page to it.
+  *    when the trigger fired (the captured "now" of :245-262).
   *
-  * At scale the page-per-trigger admission bound is the backpressure
-  * control (maxOffsetsPerTrigger's role); each micro-batch plans its
-  * pages as parallel InputPartitions exactly like the batch path. */
+  * Under the other triggers the page-per-trigger admission bound is the
+  * backpressure control (maxOffsetsPerTrigger's role). */
 class PagedMicroBatchStream(conf: PagedEntitySource.EntityConf, pageSize: Int,
     windowRows: Long, required: StructType,
     faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit, ReadMaxRows}
+  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
 
   /** Rows visible to the stream — the static generator's full extent.
     * A live backend would re-sample this per trigger ("now"). */
@@ -889,22 +947,21 @@ class PagedMicroBatchStream(conf: PagedEntitySource.EntityConf, pageSize: Int,
   @volatile private var activeFails: Map[Long, Int] = faults.pollFailAt
 
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
-    val maxRows = limit match {
-      case r: ReadMaxRows => r.maxRows()
-      case _ => Long.MaxValue
+    val maxRows = PagedMicroBatchStream.maxRowsOf(limit)
+    PagedMicroBatchStream.polls(start.asInstanceOf[PagedStreamOffset],
+        drain = availableNowTarget >= 0) { s =>
+      val out = PagedMicroBatchStream.step(s, target, windowRows, maxRows,
+        activeFails)
+      if (out.nextScheduledRunId > 0L && s.nextScheduledRunId == 0L)
+        activeFails -= s.pos // the reset retired this outage
+      (out, out.pollFailed)
     }
-    val s = start.asInstanceOf[PagedStreamOffset]
-    val out = PagedMicroBatchStream.step(s, target, windowRows, maxRows,
-      activeFails)
-    if (out.nextScheduledRunId > 0L && s.nextScheduledRunId == 0L)
-      activeFails -= s.pos // the reset retired this outage
-    out
   }
 
   override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] =
-    PagedMicroBatchStream.pagesBetween(
-      start.asInstanceOf[PagedStreamOffset],
-      end.asInstanceOf[PagedStreamOffset], pageSize, conf, faults).toArray
+    PagedPartition.pack(PagedMicroBatchStream.replay(
+      start.asInstanceOf[PagedStreamOffset], end.asInstanceOf[PagedStreamOffset],
+      pageSize, windowRows, conf, faults), PagedPartition.slots)
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedReaderFactory(required)
@@ -917,9 +974,34 @@ class PagedMicroBatchStream(conf: PagedEntitySource.EntityConf, pageSize: Int,
 }
 
 object PagedMicroBatchStream {
+  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
+
   /** The reference's +24 h failure fallback (Task.java:386-388) in the
     * id==minutes domain: 1440 ids = one day of records. */
   val FallbackRows: Long = 1440L
+
+  private[sources] def maxRowsOf(limit: ReadLimit): Long = limit match {
+    case r: ReadMaxRows => r.maxRows()
+    case _ => Long.MaxValue
+  }
+
+  /** A micro-batch's polls: one, or under `Trigger.AvailableNow` (`drain`)
+    * as many as run until a poll returns its input unchanged (caught up,
+    * or parked after a reset) or fails — the failing state is the
+    * batch's end, so it still reaches the offset log. `poll` returns the
+    * next state and whether that poll failed or reset. */
+  private[sources] def polls[O <: AnyRef](start: O, drain: Boolean)(
+      poll: O => (O, Boolean)): O = {
+    var cur = start
+    var (next, failed) = poll(cur)
+    while (drain && !failed && (next ne cur)) {
+      cur = next
+      val r = poll(cur)
+      next = r._1
+      failed = r._2
+    }
+    next
+  }
 
   /** One `poll()` step of the reference's per-entity state machine
     * (ChargeOverSourceTask.java:195-291) in the id domain: serve up to
@@ -983,31 +1065,36 @@ object PagedMicroBatchStream {
     }
   }
 
-  /** Pages [start.pos, end.pos) as InputPartitions for one entity. The
-    * partitions carry the OPEN WINDOW's bounds, not the page's — an HTTP
-    * fetch then reproduces the reference's poll request exactly: `where=`
-    * holds [last_processed, batch_end) and `offset=` the cursor within it
-    * (ChargeOverSourceTask.java:221-226 paging a fixed window). On window
-    * completion the end offset's batch_end_id still names the window just
-    * closed, so the bounds stay correct for the final page too. */
-  private[sources] def pagesBetween(start: PagedStreamOffset,
-      end: PagedStreamOffset, pageSize: Int,
-      conf: PagedEntitySource.EntityConf,
-      faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none):
-      Seq[InputPartition] = {
-    val spos = start.pos
-    val epos = end.pos
-    val winLo = start.lastProcessedId
-    // batch-reset offsets regress with batch_end_id = 0; any actual page
-    // range is bounded by end.pos, so clamp the window around it
-    val winHi = math.max(end.batchEndId, epos)
-    val n = math.max(0L, epos - spos)
-    val pages = ((n + pageSize - 1) / pageSize).toInt
-    (0 until pages).map { p =>
-      val pStart = spos + p.toLong * pageSize
-      PagedPartition(pStart, math.min(epos, pStart + pageSize), conf,
-        faults.pageFault(pStart, pageSize), winLo, winHi): InputPartition
+  /** The pages of one entity's logged batch: the successful polls from
+    * `start` to `end`, replayed with the pure [[step]] one page at a time
+    * and without the fault plan (a failing poll serves nothing and ends
+    * its batch). Each page carries its poll's OPEN WINDOW, not its own
+    * bounds, so an HTTP fetch reproduces the reference's poll request
+    * exactly: `where=` holds [last_processed, batch_end) and `offset=` the
+    * cursor within it (ChargeOverSourceTask.java:221-226 paging a fixed
+    * window). The replay's target is the bound of the window the batch
+    * ended in — the end offset's batch_end_id, or its position once that
+    * window closed — not the configured extent, so a restarted query
+    * re-plans a logged batch to the same pages; it is raised to the
+    * start's reschedule mark so a resumed entity is not parked again. */
+  private[sources] def replay(start: PagedStreamOffset, end: PagedStreamOffset,
+      pageSize: Int, windowRows: Long, conf: PagedEntitySource.EntityConf,
+      faults: PagedEntitySource.FaultPlan): Seq[PagedPage] = {
+    val bound = math.max(if (end.isProcessingBatch) end.batchEndId else end.pos,
+      start.nextScheduledRunId)
+    val pages = Seq.newBuilder[PagedPage]
+    var cur = start
+    while (cur.pos < end.pos) {
+      val next = step(cur, bound, windowRows,
+        math.min(pageSize.toLong, end.pos - cur.pos))
+      if (next eq cur)
+        throw new IllegalStateException(s"offset ${end.json()} is not " +
+          s"reachable from ${start.json()} in whole polls")
+      pages += PagedPage(cur.pos, next.pos, conf,
+        faults.pageFault(cur.pos, pageSize), cur.lastProcessedId, next.batchEndId)
+      cur = next
     }
+    pages.result()
   }
 }
 
@@ -1044,17 +1131,20 @@ object MultiPagedStreamOffset {
   * iterating the configured entity list, each with an independent state
   * machine and its own per-entity query params
   * (ChargeOverSourceTask.java:151-172; config per entity
-  * Config.java:279-289). Pages of different entities plan as parallel
-  * InputPartitions in the same micro-batch (entity-level parallelism —
-  * the partitioned-source reading of R15 that the reference could not
-  * do with tasks.max=1). The admission bound is per entity, matching
-  * the reference's per-entity fetch of batch.size records per poll. */
+  * Config.java:279-289). A micro-batch is one poll, or under
+  * AvailableNow every poll until each entity reaches its target or some
+  * entity's poll fails or resets, exactly like the single-entity stream.
+  * Pages of different entities plan into the same micro-batch and run
+  * in parallel (entity-level parallelism — the partitioned-source reading
+  * of R15 that the reference could not do with tasks.max=1). The
+  * per-poll bound is per entity, matching the reference's per-entity
+  * fetch of batch.size records per poll. */
 class PagedMultiMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
     pageSize: Int, windowRows: Long, required: StructType,
     faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit, ReadMaxRows}
+  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
 
   private def availableOf(c: PagedEntitySource.EntityConf): Long = c.rows
   @volatile private var availableNowTargets: Map[String, Long] = null
@@ -1072,11 +1162,12 @@ class PagedMultiMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowTargets = confs.map(c => c.name -> availableOf(c)).toMap
 
-  /** The ReadLimit contract is PER BATCH, so the declared bound is the sum
-    * of per-entity pages: one poll advances each entity by at most one
-    * page (the reference fetches batch.size records per entity per poll,
-    * Task.java:151-172), and the admission split below keeps the total
-    * inside whatever limit Spark hands back. */
+  /** The declared bound is the sum of per-entity pages: one poll
+    * advances each entity by at most one page (the reference fetches
+    * batch.size records per entity per poll, Task.java:151-172), and the
+    * admission split below keeps a poll inside whatever limit Spark hands
+    * back. A one-poll batch therefore honours it; an AvailableNow batch
+    * applies it to each of its polls. */
   override def getDefaultReadLimit: ReadLimit =
     ReadLimit.maxRows(pageSize.toLong * confs.size)
 
@@ -1089,41 +1180,45 @@ class PagedMultiMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
       "latestOffset(start, limit) is used (SupportsAdmissionControl)")
 
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
-    val s = start.asInstanceOf[MultiPagedStreamOffset]
-    val maxRows = limit match {
-      case r: ReadMaxRows => r.maxRows()
-      case _ => Long.MaxValue
-    }
-    // split the per-batch admission bound evenly across entities so
+    val maxRows = PagedMicroBatchStream.maxRowsOf(limit)
+    // split the per-poll admission bound evenly across entities so
     // entities × perEntity never exceeds the declared/requested limit
     val perEntity =
       if (maxRows == Long.MaxValue) Long.MaxValue
       else math.max(1L, maxRows / confs.size)
-    val stepped = confs.map { c =>
-      // an entity ADDED to the config after the checkpoint was written has
-      // no restored state — it starts from INITIAL_LOAD, exactly the
-      // reference's per-entity state init for an unseen entity
-      // (loadEntityState default, ChargeOverSourceTask.java:98-133)
-      val prev = s.entities.getOrElse(c.name, PagedStreamOffset.Initial)
-      val out = PagedMicroBatchStream.step(prev, targetOf(c), winOf(c),
-        perEntity, activeFails)
-      if (out.nextScheduledRunId > 0L && prev.nextScheduledRunId == 0L)
-        activeFails -= prev.pos // see the single-entity stream's note
-      c.name -> out
-    }.toMap
-    if (confs.forall(c =>
-        s.entities.get(c.name).exists(stepped(c.name) eq _))) s
-    else MultiPagedStreamOffset(stepped)
+    PagedMicroBatchStream.polls(start.asInstanceOf[MultiPagedStreamOffset],
+        drain = availableNowTargets != null) { s =>
+      var failed = false
+      val stepped = confs.map { c =>
+        // an entity ADDED to the config after the checkpoint was written has
+        // no restored state — it starts from INITIAL_LOAD, exactly the
+        // reference's per-entity state init for an unseen entity
+        // (loadEntityState default, ChargeOverSourceTask.java:98-133)
+        val prev = s.entities.getOrElse(c.name, PagedStreamOffset.Initial)
+        val out = PagedMicroBatchStream.step(prev, targetOf(c), winOf(c),
+          perEntity, activeFails)
+        if (out.nextScheduledRunId > 0L && prev.nextScheduledRunId == 0L)
+          activeFails -= prev.pos // see the single-entity stream's note
+        // a parked entity returns its (reset) state unchanged: not a failure
+        failed ||= (out ne prev) && out.pollFailed
+        c.name -> out
+      }.toMap
+      val next =
+        if (confs.forall(c => s.entities.get(c.name).exists(stepped(c.name) eq _))) s
+        else MultiPagedStreamOffset(stepped)
+      (next, failed)
+    }
   }
 
   override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
     val sm = start.asInstanceOf[MultiPagedStreamOffset].entities
     val em = end.asInstanceOf[MultiPagedStreamOffset].entities
-    confs.flatMap { c =>
-      val s = sm.getOrElse(c.name, PagedStreamOffset.Initial)
-      val e = em.getOrElse(c.name, PagedStreamOffset.Initial)
-      PagedMicroBatchStream.pagesBetween(s, e, pageSize, c, faults)
-    }.toArray
+    PagedPartition.pack(confs.flatMap { c =>
+      PagedMicroBatchStream.replay(
+        sm.getOrElse(c.name, PagedStreamOffset.Initial),
+        em.getOrElse(c.name, PagedStreamOffset.Initial),
+        pageSize, winOf(c), c, faults)
+    }, PagedPartition.slots)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -5,10 +5,11 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Micro-batch overhead profiler: drains the paged CDC source with
   * AvailableNow (q_paged_stream's exact shape) and prints each batch's
-  * durationMs breakdown from StreamingQueryProgress — where the per-batch
-  * driver gap (measured ~85 ms by JobProf) actually goes: triggerExecution,
+  * durationMs breakdown from StreamingQueryProgress: triggerExecution,
   * queryPlanning, walCommit, commitOffsets, getBatch, addBatch,
-  * latestOffset. */
+  * latestOffset. An AvailableNow drain of the paged source is one
+  * micro-batch (all its polls run inside one `latestOffset`), so a clean
+  * drain prints one line and pays the micro-batch protocol once. */
 object DrainProf {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

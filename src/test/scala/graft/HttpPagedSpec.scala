@@ -415,4 +415,58 @@ class HttpPagedSpec extends SparkSpec {
         s"a fully-committed restart must not touch the remote, saw $replayReqs")
     }
   }
+
+  test("AvailableNow sends the per-poll drain's page requests; a re-planned logged batch re-sends them") {
+    withFixture(Map("customer" -> 1300L, "invoice" -> 2100L)) { fx =>
+      val landed = new java.util.concurrent.atomic.AtomicLong(0L)
+      def run(ckpt: String, availableNow: Boolean): Unit = {
+        landed.set(0L)
+        StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
+          .option("entities", "customer,invoice")
+          .option("customer.rows", 1300L).option("invoice.rows", 2100L)
+          .option("pageSize", 300).option("windowRows", 1000L)
+          .option("endpoint", fx.endpoint)
+          .load()
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            landed.addAndGet(b.count()); ()
+          }, availableNow)
+      }
+      // the (entity, limit, offset, where) of every request since the last
+      // call, as a sorted multiset
+      def pageRequests(): Seq[(String, String, String, String)] = {
+        val reqs = fx.requests.toArray(Array.empty[String]).toSeq.map { r =>
+          val uri = new java.net.URI(r)
+          val q = uri.getQuery.split("&").map(_.split("=", 2))
+            .map(kv => kv(0) -> kv(1)).toMap
+          (uri.getPath.stripPrefix("/"), q("limit"), q("offset"), q("where"))
+        }
+        fx.requests.clear()
+        reqs.sorted
+      }
+      fx.requests.clear()
+      run(StreamRuns.tempDir("graft_http_pp"), availableNow = false)
+      val perPoll = pageRequests()
+      assert(landed.get() == 3400L)
+      // customer: windows 1000/300 → 4 + 1 pages; invoice: 1000/1000/100
+      // → 4 + 4 + 1 pages
+      assert(perPoll.size == 14, s"per-poll drain sent $perPoll")
+
+      val ckpt = StreamRuns.tempDir("graft_http_an")
+      run(ckpt, availableNow = true)
+      assert(landed.get() == 3400L)
+      assert(StreamRuns.offsetJsons(ckpt).length == 1)
+      assert(pageRequests() == perPoll,
+        "AvailableNow must send exactly the per-poll drain's page requests")
+
+      // crash after the offset write, before the commit: the restarted
+      // query re-plans logged batch 0 from its start and end offsets and
+      // must send the identical requests again
+      Seq("0", ".0.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+      run(ckpt, availableNow = true)
+      assert(landed.get() == 3400L, "the re-planned batch must land every row again")
+      assert(pageRequests() == perPoll,
+        "re-planning a logged batch must re-send the identical page list")
+    }
+  }
 }

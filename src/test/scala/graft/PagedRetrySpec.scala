@@ -52,44 +52,43 @@ class PagedRetrySpec extends SparkSpec {
   }
 
   test("fault-injected AvailableNow drain == clean drain; offset log shows retry_count > 0") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rt_ck").toString
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
-      .option("rows", "2500").option("pageSize", "300")
-      .option("windowRows", "1000")
-      .option("failEveryNthPage", "3").option("failAttempts", "2")
-      .option("retryBackoffScale", Scale)
-      .option("pollFailAt", "600:2,1300:1") // exhausted polls mid-window
-      .load()
-      .writeStream.format("memory").queryName("paged_retry")
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-
-    val got = spark.table("paged_retry")
-      .orderBy(col("id")).collect().map(_.toSeq).toSeq
-    val clean = spark.read.format("graft.sources.PagedEntitySource")
-      .option("rows", "2500").option("pageSize", "300").load()
-      .orderBy(col("id")).collect().map(_.toSeq).toSeq
-    assert(got == clean, "fault-injected drain must be row-identical to a clean drain")
-
-    val offsetFiles = new java.io.File(s"$ckpt/offsets").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    val parsed = offsetFiles.map { f =>
-      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").filter(_.trim.nonEmpty)
-      PagedStreamOffset.fromJson(lines.last)
+    def drained(view: String, availableNow: Boolean): Seq[PagedStreamOffset] = {
+      val ckpt = StreamRuns.tempDir("graft_rt_ck")
+      val df = spark.readStream.format("graft.sources.PagedEntitySource")
+        .option("rows", "2500").option("pageSize", "300")
+        .option("windowRows", "1000")
+        .option("failEveryNthPage", "3").option("failAttempts", "2")
+        .option("retryBackoffScale", Scale)
+        .option("pollFailAt", "600:2,1300:1") // exhausted polls mid-window
+        .load()
+      StreamRuns.drainToMemory(df, view, ckpt, availableNow)
+      val got = spark.table(view)
+        .orderBy(col("id")).collect().map(_.toSeq).toSeq
+      val clean = spark.read.format("graft.sources.PagedEntitySource")
+        .option("rows", "2500").option("pageSize", "300").load()
+        .orderBy(col("id")).collect().map(_.toSeq).toSeq
+      assert(got == clean, "fault-injected drain must be row-identical to a clean drain")
+      val parsed = StreamRuns.offsetJsons(ckpt).map(PagedStreamOffset.fromJson)
+      // retry_count climbs 1→2 at pos 600, hits 1 at pos 1300, and every
+      // successful poll resets it to 0 (Task.java:224 "reset on success")
+      assert(parsed.map(_.retryCount).filter(_ > 0) == Seq(1, 2, 1),
+        s"retry counts: ${parsed.map(_.retryCount)}")
+      val failed = parsed.filter(_.retryCount > 0)
+      assert(failed.map(_.pos) == Seq(600L, 600L, 1300L))
+      assert(failed.forall(_.isProcessingBatch), "failed polls keep the window open")
+      assert(parsed.last.retryCount == 0 && parsed.last.pos == 2500L)
+      parsed
     }
-    // the 10 clean micro-batches plus one zero-progress batch per
-    // exhausted poll (2 at pos 600, 1 at pos 1300)
-    assert(offsetFiles.length == 13, s"expected 13 micro-batches, got ${offsetFiles.length}")
-    // retry_count climbs 1→2 at pos 600, hits 1 at pos 1300, and every
-    // successful poll resets it to 0 (Task.java:224 "reset on success")
-    assert(parsed.map(_.retryCount).toSeq.filter(_ > 0) == Seq(1, 2, 1),
-      s"retry counts: ${parsed.map(_.retryCount).toSeq}")
-    val failed = parsed.filter(_.retryCount > 0)
-    assert(failed.map(_.pos).toSeq == Seq(600L, 600L, 1300L))
-    assert(failed.forall(_.isProcessingBatch), "failed polls keep the window open")
-    assert(parsed.last.retryCount == 0 && parsed.last.pos == 2500L)
+    // per poll (ProcessingTime): the 10 clean micro-batches plus one
+    // zero-progress batch per exhausted poll (2 at pos 600, 1 at pos 1300)
+    val perPoll = drained("paged_retry_polls", availableNow = false)
+    assert(perPoll.length == 13, s"expected 13 micro-batches, got ${perPoll.length}")
+    // AvailableNow: each exhausted poll ends its batch — [0, 600) then the
+    // failure, the second failure alone, [600, 1300) then the failure,
+    // then the rest
+    val once = drained("paged_retry", availableNow = true)
+    assert(once.length == 4, s"expected 4 micro-batches, got ${once.length}")
+    assert(once == perPoll.filter(_.retryCount > 0) :+ perPoll.last)
   }
 
   test(">10 consecutive exhausted polls reset the batch; replay duplicates repair by dedup") {
@@ -118,13 +117,7 @@ class PagedRetrySpec extends SparkSpec {
     assert(landed.distinct.sorted == clean,
       "dedup repairs the replay to exactly the clean extent")
 
-    val offsetFiles = new java.io.File(s"$ckpt/offsets").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    val parsed = offsetFiles.map { f =>
-      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").filter(_.trim.nonEmpty)
-      PagedStreamOffset.fromJson(lines.last)
-    }
+    val parsed = StreamRuns.offsetJsons(ckpt).map(PagedStreamOffset.fromJson)
     // retry_count climbed to 10, then the reset wrote the rescheduled
     // parked state (retry_count back to 0, cursor regressed)
     assert(parsed.map(_.retryCount).max == 10)
@@ -229,7 +222,6 @@ class PagedRetrySpec extends SparkSpec {
   }
 
   test("multi-entity: faults + per-batch admission split still equal the batch read") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mf_ck").toString
     def src(stream: Boolean) = {
       val opts = Map("entities" -> "customer,invoice", "customer.rows" -> "700",
         "invoice.rows" -> "1200", "pageSize" -> "300", "windowRows" -> "500",
@@ -245,20 +237,22 @@ class PagedRetrySpec extends SparkSpec {
         r.load()
       }
     }
-    val q = src(stream = true).writeStream.format("memory")
-      .queryName("paged_multi_fault").outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val got = spark.table("paged_multi_fault")
-      .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
     val batch = src(stream = false)
       .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
-    assert(got.length == 1900 && got == batch)
+    def drained(view: String, availableNow: Boolean): Int = {
+      val ckpt = StreamRuns.tempDir("graft_mf_ck")
+      StreamRuns.drainToMemory(src(stream = true), view, ckpt, availableNow)
+      val got = spark.table(view)
+        .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
+      assert(got.length == 1900 && got == batch)
+      StreamRuns.offsetJsons(ckpt).length
+    }
     // the declared default limit (pageSize × entities) splits back to one
-    // page per entity per poll: same 5 micro-batches as the clean spec
-    val offsetFiles = new java.io.File(s"$ckpt/offsets").listFiles()
-      .filter(_.getName.forall(_.isDigit))
-    assert(offsetFiles.length == 5, s"expected 5 micro-batches, got ${offsetFiles.length}")
+    // page per entity per poll: same 5 per-poll micro-batches as the
+    // clean spec, and one under AvailableNow (page faults heal in-fetch)
+    val perPoll = drained("paged_multi_fault_polls", availableNow = false)
+    assert(perPoll == 5, s"expected 5 micro-batches, got $perPoll")
+    val once = drained("paged_multi_fault", availableNow = true)
+    assert(once == 1, s"expected 1 micro-batch, got $once")
   }
 }

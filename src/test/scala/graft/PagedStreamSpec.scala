@@ -9,60 +9,52 @@ import org.apache.spark.sql.streaming.Trigger
   * batch_end / current_offset / is_processing_batch / retry_count /
   * next_scheduled_run — ChargeOverSourceTask.java:409-416), the mode
   * must switch INITIAL→INCREMENTAL exactly once, and a restart from the
-  * committed checkpoint must re-emit nothing. */
+  * committed checkpoint must re-emit nothing. Per-poll offsets are read
+  * from ProcessingTime runs, where a micro-batch is one poll; an
+  * AvailableNow drain logs the same final offset as one micro-batch. */
 class PagedStreamSpec extends SparkSpec {
 
   private val Rows = 2500L
   private val PageSize = 300
   private val WindowRows = 1000L
 
-  private def startStream(name: String, ckpt: String) = {
-    val stream = spark.readStream.format("graft.sources.PagedEntitySource")
+  private def stream() =
+    spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", Rows).option("pageSize", PageSize)
       .option("windowRows", WindowRows)
       .load()
-    stream.writeStream.format("memory").queryName(name)
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-  }
+
+  private def sorted(view: String): Seq[Seq[Any]] =
+    spark.table(view).orderBy(col("id")).collect().map(_.toSeq).toSeq
 
   test("stream == batch over a multi-window replay; offsets carry the reference state shape") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ps_ck").toString
-    val q = startStream("paged_stream", ckpt)
-    q.awaitTermination(120000)
-
-    val got = spark.table("paged_stream")
-      .orderBy(col("id")).collect().map(_.toSeq).toSeq
+    import graft.sources.PagedStreamOffset
+    // per-poll run: under ProcessingTime a micro-batch is still one poll
+    val perPollCkpt = StreamRuns.tempDir("graft_pp_ck")
+    StreamRuns.drainToMemory(stream(), "paged_stream_polls", perPollCkpt,
+      availableNow = false)
     val batch = spark.read.format("graft.sources.PagedEntitySource")
       .option("rows", Rows).option("pageSize", PageSize).load()
       .orderBy(col("id")).collect().map(_.toSeq).toSeq
-    assert(got.length == Rows)
-    assert(got == batch, "streamed rows must equal the batch read")
+    assert(batch.length == Rows)
+    assert(sorted("paged_stream_polls") == batch, "streamed rows must equal the batch read")
 
     // one page per poll: ceil(1000/300)=4 batches per full window, 2 for
     // the 500-row tail window → 10 micro-batches, 10 offset-log entries
-    val offsetFiles = new java.io.File(s"$ckpt/offsets").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(offsetFiles.length == 10, s"expected 10 micro-batches, got ${offsetFiles.length}")
-    def offsetJson(f: java.io.File): String = {
-      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").filter(_.trim.nonEmpty)
-      lines.last // v1 header, metadata, then one offset json per source
-    }
-    val parsed = offsetFiles.map(f =>
-      graft.sources.PagedStreamOffset.fromJson(offsetJson(f)))
+    val perPoll = StreamRuns.offsetJsons(perPollCkpt)
+    assert(perPoll.length == 10, s"expected 10 micro-batches, got ${perPoll.length}")
+    val parsed = perPoll.map(PagedStreamOffset.fromJson)
     // reference state shape: all 7 fields present in the serialized form
-    val raw = offsetJson(offsetFiles.head)
     for (field <- Seq("load_mode", "last_processed_id", "batch_end_id",
         "current_offset", "is_processing_batch", "retry_count", "next_scheduled_run"))
-      assert(raw.contains(s""""$field""""), s"offset json missing $field: $raw")
+      assert(perPoll.head.contains(s""""$field""""), s"offset json missing $field: ${perPoll.head}")
     // absolute position is strictly monotone, ends at Rows
     val positions = parsed.map(_.pos)
-    assert(positions.toSeq == positions.sorted.toSeq && positions.distinct.length == positions.length)
+    assert(positions == positions.sorted && positions.distinct.length == positions.length)
     assert(positions.last == Rows)
     // mode switches exactly once, INITIAL→INCREMENTAL, at the first
     // window's completion (batch index 3: pages 300/600/900/window-end)
-    val modes = parsed.map(_.loadMode).toSeq
+    val modes = parsed.map(_.loadMode)
     assert(modes.takeWhile(_ == "INITIAL_LOAD").length == 3, s"modes: $modes")
     assert(modes.dropWhile(_ == "INITIAL_LOAD").forall(_ == "INCREMENTAL_LOAD"))
     // mid-window offsets are marked in-flight, window completions are not
@@ -71,23 +63,26 @@ class PagedStreamSpec extends SparkSpec {
     assert(!last.isProcessingBatch && last.currentOffset == 0L &&
       last.lastProcessedId == Rows)
 
+    // AvailableNow: the same polls, committed as ONE micro-batch — the
+    // same rows and the same final 7-field offset, logged once
+    val ckpt = StreamRuns.tempDir("graft_ps_ck")
+    StreamRuns.drainToMemory(stream(), "paged_stream", ckpt, availableNow = true)
+    assert(sorted("paged_stream") == batch)
+    val drained = StreamRuns.offsetJsons(ckpt)
+    assert(drained.length == 1, s"expected 1 micro-batch, got ${drained.length}")
+    assert(drained.last == perPoll.last,
+      s"final offset ${drained.last} differs from the per-poll ${perPoll.last}")
+
     // restart from the committed checkpoint: everything is already
     // committed, so the recovered run emits NOTHING (no duplicate pages —
     // the at-least-once quirk the reference accepts, §2a, is repaired by
     // Spark's offset log). foreachBatch sink: memory sink refuses
     // checkpoint recovery by design.
     val replayed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q2 = spark.readStream.format("graft.sources.PagedEntitySource")
-      .option("rows", Rows).option("pageSize", PageSize)
-      .option("windowRows", WindowRows)
-      .load()
-      .writeStream.option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
+    StreamRuns.drain(stream().writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         replayed.addAndGet(b.count()); ()
-      }
-      .start()
-    q2.awaitTermination(120000)
+      }, availableNow = true)
     assert(replayed.get() == 0L, "restart must not re-emit committed pages")
   }
 
@@ -133,26 +128,26 @@ class PagedStreamSpec extends SparkSpec {
         r.load()
       }
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pm_ck").toString
-    val q = src(reader = false).writeStream.format("memory")
-      .queryName("paged_multi").outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val got = spark.table("paged_multi")
-      .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
     val batch = src(reader = true)
       .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
-    assert(got.length == 1900 && got == batch)
+    def drained(view: String, availableNow: Boolean): Seq[String] = {
+      val ckpt = StreamRuns.tempDir("graft_pm_ck")
+      StreamRuns.drainToMemory(src(reader = false), view, ckpt, availableNow)
+      val got = spark.table(view)
+        .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
+      assert(got.length == 1900 && got == batch)
+      StreamRuns.offsetJsons(ckpt)
+    }
     // every poll advances EACH entity by ≤1 page of its open window:
     // customer (700 rows, windows 500/200) drains in 3 polls, invoice
-    // (1200 rows, windows 500/500/200) in 5 → 5 micro-batches total
-    val offsetFiles = new java.io.File(s"$ckpt/offsets").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt)
-    assert(offsetFiles.length == 5, s"expected 5 micro-batches, got ${offsetFiles.length}")
-    val lastJson = new String(java.nio.file.Files.readAllBytes(
-      offsetFiles.last.toPath), "UTF-8").split("\n").filter(_.trim.nonEmpty).last
-    val last = graft.sources.MultiPagedStreamOffset.fromJson(lastJson)
+    // (1200 rows, windows 500/500/200) in 5 → 5 per-poll micro-batches,
+    // and one under AvailableNow, ending at the same offset
+    val perPoll = drained("paged_multi_polls", availableNow = false)
+    assert(perPoll.length == 5, s"expected 5 micro-batches, got ${perPoll.length}")
+    val once = drained("paged_multi", availableNow = true)
+    assert(once.length == 1, s"expected 1 micro-batch, got ${once.length}")
+    assert(once.last == perPoll.last)
+    val last = graft.sources.MultiPagedStreamOffset.fromJson(once.last)
     assert(last.entities("customer").lastProcessedId == 700L)
     assert(last.entities("invoice").lastProcessedId == 1200L)
     assert(last.entities.values.forall(o =>
@@ -174,6 +169,26 @@ class PagedStreamSpec extends SparkSpec {
       isProcessingBatch = true)
     val s2 = PagedMicroBatchStream.step(inWin, 2500L, 1000L, Long.MaxValue)
     assert(s2.pos == 1000L && !s2.isProcessingBatch)
+  }
+
+  test("a micro-batch's pages pack into at most `slots` contiguous, unsplit runs") {
+    import graft.sources.{PagedEntitySource, PagedPage, PagedPartition}
+    val conf = PagedEntitySource.EntityConf("e", 0L, None, 5)
+    def runs(pages: Seq[PagedPage], slots: Int): Seq[Seq[PagedPage]] =
+      PagedPartition.pack(pages, slots).toSeq.map(_.asInstanceOf[PagedPartition].pages)
+    // the cdc_http drain: 36 equal pages on 4 slots → 4 runs of 9
+    val even = (0 until 36).map(i => PagedPage(i * 500L, i * 500L + 500, conf))
+    assert(runs(even, 4).map(_.size) == Seq(9, 9, 9, 9))
+    // a short tail page, any slot count
+    val pages = even :+ PagedPage(18000L, 18100L, conf)
+    for (slots <- Seq(1, 3, 4, 37, 64)) {
+      val rs = runs(pages, slots)
+      assert(rs.nonEmpty && rs.length <= slots && rs.forall(_.nonEmpty), s"slots=$slots")
+      assert(rs.flatten == pages, "runs must keep every page, whole and in order")
+      val rows = rs.map(_.map(_.rows).sum)
+      assert(rows.max - rows.min <= 1000, s"slots=$slots unbalanced: $rows")
+    }
+    assert(PagedPartition.pack(Seq.empty, 4).isEmpty)
   }
 
   test("entity added to the config after a checkpoint starts from INITIAL_LOAD") {

@@ -70,7 +70,9 @@ class Scd2FunnelSpec extends SparkSpec {
     // through, and the new table version lands as a fresh snapshot
     // (versioned dirs — the same shape a table format's commit gives).
     // Cross-batch updates are the point: update_every=3 re-emits ids whose
-    // original version landed batches earlier.
+    // original version landed batches earlier. ProcessingTime keeps one
+    // poll (one page) per micro-batch; AvailableNow would land the whole
+    // drain as one batch.
     import org.apache.spark.sql.{DataFrame, functions => F}
     val store = java.nio.file.Files.createTempDirectory("graft_scd2_inc").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2_ck").toString
@@ -88,12 +90,11 @@ class Scd2FunnelSpec extends SparkSpec {
           F.col("valid_to_us"), F.col("is_current"), F.col("value"))
     }
 
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
+    StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", "3000").option("pageSize", "400")
       .option("windowRows", "1000").option("updatesEveryN", "3")
       .load()
       .writeStream.option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (b: DataFrame, _: Long) =>
         val batch = b.select(F.col("id"), F.col("ts_us"), F.col("value"))
           .localCheckpoint() // pin: the source df is transient per batch
@@ -114,9 +115,7 @@ class Scd2FunnelSpec extends SparkSpec {
           ver.set(prev + 1)
         }
         ()
-      }
-      .start()
-    q.awaitTermination(120000)
+      }, availableNow = false)
     assert(batches.get() >= 3, s"only ${batches.get()} non-empty batches — no incremental path exercised")
 
     val incremental = spark.read.parquet(s"$store/v${ver.get()}")

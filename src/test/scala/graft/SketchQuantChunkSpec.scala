@@ -75,6 +75,25 @@ class SketchQuantChunkSpec extends SparkSpec {
     assert(got == Map(1L -> false, 2L -> true, 3L -> true, 4L -> true), s"got $got")
   }
 
+  test("nearest-centroid k-loops reject empty and mismatched centroid sets") {
+    // an empty set used to assign cid 0 to every row
+    for ((cids, n) <- Seq((Seq.empty[Int], 0), (Seq(0, 1), 1), (Seq(0), 2))) {
+      val cents = Seq.fill(n)(Seq(1.0f, 0.0f))
+      intercept[IllegalArgumentException] {
+        VectorExprs.nearestCentroidCos(col("embedding"), cids, cents)
+      }
+      intercept[IllegalArgumentException] {
+        VectorExprs.nearestCentroidSq(col("qv"), cids.map(_.toLong),
+          cents.map(_.map(_.toInt)))
+      }
+    }
+    // a well-formed set still assigns
+    val one = spark.range(1).select(array(lit(1.0f), lit(0.0f)).as("embedding"))
+      .select(VectorExprs.nearestCentroidCos(col("embedding"), Seq(7),
+        Seq(Seq(1.0f, 0.0f))).getField("cid")).head().getInt(0)
+    assert(one == 7)
+  }
+
   test("quantize_u8 on the corpus: codes in [0,255], dequant error bounded") {
     val qz = graft.engine.Tables.embeddings(spark, sf)
       .select(col("embedding").cast("array<double>").as("v"),
