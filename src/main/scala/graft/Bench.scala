@@ -1,131 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Untimed warmup first — JVM/classloader/codegen
   * cold-start otherwise lands on whichever query runs first (~4 s measured),
-  * which would misattribute fixed cost to one operator. */
+  * which would misattribute fixed cost to one operator. `warmDir`, `warm`
+  * and `sample` are also tools.Profile's, so there is one timing method. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
+    val warmSf = warmDir(sfDir)
+    SparkEntry.queries.foreach { case (name, fn) => warm(spark, name, fn, warmSf) }
 
-    // warmup (untimed): run EVERY query once at the smallest SF — each
-    // query's generated code JIT-compiles on data 100× smaller than the
-    // timed run (measured: first execution of a codegen-heavy query costs
-    // ~14 s extra before the JIT kicks in). Warmup dir derives from the
-    // configured SF dir (sf0.001 sibling when present, else the SF dir
-    // itself) and failures are LOGGED — a silently skipped warmup lands
-    // the cold-start cost on the first timed query.
-    val warmSf = sys.env.get("SPARK_GRAFT_WARM_DIR").getOrElse {
-      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      if (sibling.isDirectory) sibling.getPath else sfDir
-    }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      // toRdd for the same reason as the timed loop: warm the JIT on the
-      // FULL plan, not the count-pruned one
-      try fn(spark, warmSf).queryExecution.toRdd.count()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
-    }
-
-    // shuffle/spill accounting (measure, don't guess): task metrics
-    // accumulate through a listener; per-query deltas go to STDERR as a
-    // diagnostic line so the stdout one-JSON-line contract stays intact.
-    // Listener delivery is async, so attribution is approximate at the
-    // boundary of very short queries — totals are exact.
-    val shRead = new java.util.concurrent.atomic.AtomicLong
-    val shWrite = new java.util.concurrent.atomic.AtomicLong
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    // task-time sum (executorRunTime): contention-robust companion to the
-    // wall reading — two runs whose walls differ 2x from scheduler noise
-    // show near-identical task-time sums unless the CODE changed (r13
-    // verdict item 7: carry it in the per-query diagnostic lines so scale
-    // sweeps can be adjudicated without wall-only guesswork)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          spilled.addAndGet(m.diskBytesSpilled)
-          taskMs.addAndGet(m.executorRunTime)
-        }
-      }
-    })
-
-    // min-of-2 per query: this host shows heavy run-to-run variance
-    // (identical benches measured 19s-180s total); the min is the standard
-    // noise-robust estimator for wall-clock microbenchmarks
-    def once(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // session-lifetime caches would let min-of-N read a prior sample's
-      // result at ~0 s — evict before every timed sample of the query
-      // that OWNS the cache (its consumers keep the warm read: that IS
-      // their declared composed cost)
-      if (name == "q_span_dedup") graft.engine.LlmOps.evictSpanMemo(sfDir)
-      if (name == "q_bpe_merges") graft.engine.LlmOps.evictBpeMemo(sfDir)
-      // IVF quantizer memo owners: q_sim_ivf_quant owns the full-corpus
-      // training scope, q_ivf_absorb the frozen standing-corpus one;
-      // gc/serve/recall consume the warm quantizer by design
-      if (name == "q_sim_ivf_quant")
-        graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = false)
-      if (name == "q_ivf_absorb")
-        graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = true)
-      val t0 = System.nanoTime()
-      // Materialize through the query's OWN physical plan (toRdd), not
-      // df.count(): count() stacks an Aggregate on top and ColumnPruning
-      // then deletes every cardinality-preserving operator whose output
-      // the count doesn't reference — windows, regex/JSON projections,
-      // whole map-side queries — leaving a bare filtered scan (measured:
-      // q_asof_join at sf10 "ran" in 47 ms). toRdd computes every output
-      // row of the declared plan, rows stay distributed.
-      // A swallowed failure would time as ~0 s and silently flatter the
-      // total — log it so a scaled-dir schema surprise can't hide.
-      try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage.take(200)}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      val r0 = shRead.get; val w0 = shWrite.get; val s0 = spilled.get
-      val k0 = taskMs.get
-      val s1 = once(name, fn); val s2 = once(name, fn)
-      val t2 = math.min(s1, s2)
-      // a third sample when the reading is either sub-second (where one
-      // host hiccup dominates and a re-run costs <1 s by construction) or
-      // the two samples DISAGREE >3× (both-hiccup protection: BENCH_r04
-      // recorded q_scalar_funcs at 5.98 s vs a 0.55 s re-time — scheduler
-      // noise, not a regression; min-of-N is only ever biased upward)
-      val t =
-        if (t2 < 1.0 || math.max(s1, s2) > 3.0 * t2) math.min(t2, once(name, fn))
-        else t2
-      System.err.println(s"""[bench-metrics] {"query":"$name","sec":$t,""" +
-        s""""shuffleReadB":${shRead.get - r0},"shuffleWriteB":${shWrite.get - w0},""" +
-        s""""spillB":${spilled.get - s0},"taskMs":${taskMs.get - k0}}""")
-      // Sweep hygiene, OUTSIDE the timed window: eagerly-materialized
-      // queries leave their Iterate.cut localCheckpoint RDDs (GBs each at
-      // the 100× dir) in block storage until the DRIVER garbage-collects
-      // the RDD handles and the ContextCleaner notices — with a large
-      // driver heap that can be dozens of queries later, so storage fills
-      // with dead blocks, execution memory shrinks, and mid-sweep samples
-      // of memory-hungry queries degrade 3-5× vs isolated runs (measured:
-      // q_pagerank 198 s in-sweep vs 49 s isolated at the 100× dir).
-      // Forcing a GC per query triggers the cleaner and keeps every
-      // sample measured against a clean store, like its isolated run.
-      System.gc()
-      name -> t
-    }
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
+    val (timed, failed) = sweep(spark, rl, SparkEntry.queries, sfDir)
+    val results = timed.toMap
     // The driver captures only the LAST 2000 chars of output and parses the
     // JSON line out of that window (BENCH_r03: tail=2000 chars, full-precision
     // line was ~2.9k → start cut off → parsed:null three rounds running; at
@@ -139,9 +31,14 @@ object Bench {
     // per-query precision goes to ./BENCH_FULL.json (repo-committed, no
     // window constraint) and, as before, to the [bench-metrics] stderr
     // lines. BenchLineSpec pins the budget against the declared surface.
+    // A failed query is in neither the total nor the map: the line says
+    // how many failed, stderr says which.
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    System.err.println(s"""[bench-metrics] {"query":"TOTAL","shuffleReadB":${shRead.get},""" +
-      s""""shuffleWriteB":${shWrite.get},"spillB":${spilled.get},"taskMs":${taskMs.get}}""")
+    val all = rl.totals
+    System.err.println(s"""[bench-metrics] {"query":"TOTAL","shuffleReadB":${all.shuffleReadB},""" +
+      s""""shuffleWriteB":${all.shuffleWriteB},"spillB":${all.spillB},"taskMs":${all.taskMs}}""")
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
     try {
       val full = results.toSeq.sortBy(_._1).map { case (k, v) =>
         "\"" + k + "\":" + "%.3f".formatLocal(java.util.Locale.ROOT, v)
@@ -152,8 +49,116 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
     }
-    println(BenchLine.render(results, total, sfDir))
+    println(BenchLine.render(results, total, sfDir, failed.size))
     spark.stop()
+  }
+
+  /** Where a run on `sfDir` warms up: SPARK_GRAFT_WARM_DIR, else the
+    * sf0.001 sibling when present, else the SF dir itself. */
+  def warmDir(sfDir: String): String = sys.env.get("SPARK_GRAFT_WARM_DIR").getOrElse {
+    val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    if (sibling.isDirectory) sibling.getPath else sfDir
+  }
+
+  /** One untimed run at the warm dir, so the query's generated code
+    * JIT-compiles on data 100× smaller than the timed run (measured: first
+    * execution of a codegen-heavy query costs ~14 s extra before the JIT
+    * kicks in). Through toRdd for the same reason as `sample`: warm the
+    * FULL plan, not the count-pruned one. Failures are LOGGED — a
+    * silently skipped warmup lands the cold-start cost on the first timed
+    * sample. */
+  def warm(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, warmSf: String): Unit =
+    try fn(spark, warmSf).queryExecution.toRdd.count()
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+    }
+
+  /** Session-lifetime caches would let min-of-N read a prior sample's
+    * result at ~0 s — evict before every timed sample of the query that
+    * OWNS the cache (its consumers keep the warm read: that IS their
+    * declared composed cost). IVF quantizer memo owners: q_sim_ivf_quant
+    * owns the full-corpus training scope, q_ivf_absorb the frozen
+    * standing-corpus one; gc/serve/recall consume the warm quantizer. */
+  private def evictOwnedMemo(name: String, sfDir: String): Unit = name match {
+    case "q_span_dedup"    => graft.engine.LlmOps.evictSpanMemo(sfDir)
+    case "q_bpe_merges"    => graft.engine.LlmOps.evictBpeMemo(sfDir)
+    case "q_sim_ivf_quant" => graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = false)
+    case "q_ivf_absorb"    => graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = true)
+    case _ =>
+  }
+
+  /** Seconds of one timed sample. Materializes through the query's OWN
+    * physical plan (toRdd), not df.count(): count() stacks an Aggregate on
+    * top and ColumnPruning then deletes every cardinality-preserving
+    * operator whose output the count doesn't reference — windows,
+    * regex/JSON projections, whole map-side queries — leaving a bare
+    * filtered scan (measured: q_asof_join at sf10 "ran" in 47 ms). toRdd
+    * computes every output row of the declared plan, rows stay
+    * distributed. A query that throws throws here. */
+  private def once(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): Double = {
+    evictOwnedMemo(name, sfDir)
+    val t0 = System.nanoTime()
+    fn(spark, sfDir).queryExecution.toRdd.count()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The query's timing in seconds and the number of samples taken.
+    * min-of-2: this host shows heavy run-to-run variance (identical
+    * benches measured 19s-180s total) and the min is the standard
+    * noise-robust estimator for wall-clock microbenchmarks. A third sample
+    * when the reading is either sub-second (where one host hiccup
+    * dominates and a re-run costs <1 s by construction) or the two samples
+    * DISAGREE >3× (both-hiccup protection: BENCH_r04 recorded
+    * q_scalar_funcs at 5.98 s vs a 0.55 s re-time — scheduler noise, not a
+    * regression; min-of-N is only ever biased upward). */
+  def sample(spark: SparkSession, name: String,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): (Double, Int) = {
+    val s1 = once(spark, name, fn, sfDir); val s2 = once(spark, name, fn, sfDir)
+    val t2 = math.min(s1, s2)
+    if (t2 < 1.0 || math.max(s1, s2) > 3.0 * t2)
+      (math.min(t2, once(spark, name, fn, sfDir)), 3)
+    else (t2, 2)
+  }
+
+  /** Time every query in `qs` (`sample`), printing one `[bench-metrics]`
+    * line per query to stderr (stdout carries only the contract line) with
+    * the task-metric deltas `rl` saw over all of its samples. Listener delivery is async, so attribution is approximate at
+    * the boundary of very short queries — totals are exact. A query that
+    * throws is reported on stderr and left out of the timings; its name
+    * is in the second result. */
+  def sweep(spark: SparkSession, rl: RunListener,
+      qs: Iterable[(String, (SparkSession, String) => DataFrame)],
+      sfDir: String): (Seq[(String, Double)], Seq[String]) = {
+    val timed = Seq.newBuilder[(String, Double)]
+    val failed = Seq.newBuilder[String]
+    qs.foreach { case (name, fn) =>
+      val m0 = rl.totals
+      try {
+        val (t, n) = sample(spark, name, fn, sfDir)
+        val d = rl.totals - m0
+        System.err.println(s"""[bench-metrics] {"query":"$name","sec":$t,""" +
+          s""""shuffleReadB":${d.shuffleReadB},"shuffleWriteB":${d.shuffleWriteB},""" +
+          s""""spillB":${d.spillB},"taskMs":${d.taskMs},"samples":$n}""")
+        timed += name -> t
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${String.valueOf(e.getMessage).take(200)}")
+        failed += name
+      }
+      // Sweep hygiene, OUTSIDE the timed window: eagerly-materialized
+      // queries leave their Iterate.cut localCheckpoint RDDs (GBs each at
+      // the 100× dir) in block storage until the DRIVER garbage-collects
+      // the RDD handles and the ContextCleaner notices — with a large
+      // driver heap that can be dozens of queries later, so storage fills
+      // with dead blocks, execution memory shrinks, and mid-sweep samples
+      // of memory-hungry queries degrade 3-5× vs isolated runs (measured:
+      // q_pagerank 198 s in-sweep vs 49 s isolated at the 100× dir).
+      // Forcing a GC per query triggers the cleaner and keeps every
+      // sample measured against a clean store, like its isolated run.
+      System.gc()
+    }
+    (timed.result(), failed.result())
   }
 }
 
@@ -176,9 +181,10 @@ object BenchLine {
     } else s
   }
 
-  /** All queries biggest-first; smallest dropped until the line fits. */
+  /** All queries biggest-first; smallest dropped until the line fits.
+    * `failed` > 0 adds a `"failed"` count; at 0 the line is unchanged. */
   def render(results: scala.collection.Map[String, Double], total: Double,
-      sfDir: String): String = {
+      sfDir: String, failed: Int = 0): String = {
     val f3 = "%.3f".formatLocal(java.util.Locale.ROOT, total)
     val sfName = new java.io.File(sfDir).getName
     val sorted = results.toSeq.sortBy { case (k, v) => (-v, k) }
@@ -187,7 +193,8 @@ object BenchLine {
         .mkString("{", ",", "}")
       val omit =
         if (n < sorted.size) s""","omitted":${sorted.size - n}""" else ""
-      s"""{"metric":"total","value":$f3,"unit":"sec","queries":$qs$omit,"sf":"$sfName"}"""
+      val fail = if (failed > 0) s""","failed":$failed""" else ""
+      s"""{"metric":"total","value":$f3,"unit":"sec","queries":$qs$omit$fail,"sf":"$sfName"}"""
     }
     var n = sorted.size
     while (line(n).length > MaxChars && n > 1) n -= 1

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution._
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -62,106 +62,29 @@ object PlanAudit {
     t
   }
 
-  /** Runtime exchange counter: a SparkListener tallying what actually
-    * EXECUTED, not what the final plan tree contains. Eagerly-materialized
-    * stages (Iterate.cut lineage truncation, BigWindow's chunked pass,
-    * micro-batch drains) run their shuffles BEFORE the audited plan exists,
-    * so the structural walk reports them as 0-shuffle leaf scans — the
-    * round-6 PLANS.md blind spot. Counting here:
-    *  - shuffles  = distinct ShuffleDependency ids across submitted stages
-    *    (StageInfo.shuffleDepId); AQE-reused exchanges are skipped stages,
-    *    never resubmitted, so "counted once" matches executed-once;
-    *  - broadcasts = jobs whose description carries the engine's
-    *    "broadcast exchange (runId ..." job-group tag
-    *    (BroadcastExchangeLike.submitBroadcastJob). */
-  final class RuntimeCounter extends org.apache.spark.scheduler.SparkListener {
-    private val shuffleIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    private val bcastJobs = new java.util.concurrent.atomic.AtomicInteger
-    private val stampCtr = new java.util.concurrent.atomic.AtomicLong
-    def shuffles: Int = shuffleIds.size
-    def broadcasts: Int = bcastJobs.get
-    def stamp: Long = stampCtr.get
-    // StageInfo.shuffleDepId is private[spark] at compile time but public
-    // in bytecode — one reflected getter, resolved once
-    private val depIdGetter =
-      classOf[org.apache.spark.scheduler.StageInfo].getMethod("shuffleDepId")
-    override def onStageSubmitted(
-        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-      depIdGetter.invoke(e.stageInfo).asInstanceOf[Option[Int]]
-        .foreach(id => shuffleIds.add(id))
-      stampCtr.incrementAndGet()
-    }
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      // Spark 4 carries the broadcast-exchange marker as a job TAG
-      // (spark.job.tags), not the job description. The TAG channel matches
-      // the bare word "broadcast" (case-insensitive) so a minor rewording
-      // in a Spark upgrade doesn't silently zero the counter; the
-      // DESCRIPTION channel is free text (setJobDescription, SQL text — a
-      // /*+ BROADCAST */ hint or a *broadcast*-named call site would
-      // overcount), so it requires the full "broadcast exchange" phrase.
-      // The wording contract itself is pinned by PlanSpec's tight broadcast
-      // self-check (rtBcast == structural > 0 on a known broadcast join),
-      // which trips if the tag disappears entirely.
-      val marked = Option(e.properties).exists { p =>
-        Option(p.getProperty("spark.job.tags"))
-          .exists(_.toLowerCase.contains("broadcast")) ||
-        Option(p.getProperty("spark.job.description"))
-          .exists(_.toLowerCase.contains("broadcast exchange"))
-      }
-      if (marked) bcastJobs.incrementAndGet()
-      stampCtr.incrementAndGet()
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-      stampCtr.incrementAndGet(); ()
-    }
-  }
-
-  /** Listener events are async — wait until the bus goes quiet (two
-    * consecutive unchanged stamps, 100 ms apart; 3 s cap) before reading
-    * or snapshotting the counters. */
-  def quiesce(c: RuntimeCounter): Unit = {
-    var last = -1L; var stable = 0
-    val deadline = System.nanoTime + 3000000000L
-    while (stable < 2 && System.nanoTime < deadline) {
-      val s = c.stamp
-      if (s == last) stable += 1 else { stable = 0; last = s }
-      Thread.sleep(100)
-    }
-  }
-
   /** Audit a query INCLUDING its construction-time work: snapshots the
-    * runtime counters around `build` + materialization, so eager stages
-    * are attributed to the query that ran them. Returns the structural
-    * tally plus (runtime shuffles, runtime broadcasts). */
-  def auditRuntime(c: RuntimeCounter)(build: => DataFrame): (Tally, Int, Int) = {
-    quiesce(c) // flush stragglers from the previous query
-    val sh0 = c.shuffles; val bc0 = c.broadcasts
+    * listener's runtime counts around `build` + materialization, so eager
+    * stages are attributed to the query that ran them. Returns the
+    * structural tally plus (runtime shuffles, runtime broadcasts). */
+  def auditRuntime(rl: RunListener)(build: => DataFrame): (Tally, Int, Int) = {
+    rl.quiesce() // flush stragglers from the previous query
+    val sh0 = rl.shuffles; val bc0 = rl.broadcasts
     val df = build
     val t = audit(df)
-    quiesce(c)
-    (t, c.shuffles - sh0, c.broadcasts - bc0)
+    rl.quiesce()
+    (t, rl.shuffles - sh0, rl.broadcasts - bc0)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val counter = new RuntimeCounter
-    spark.sparkContext.addSparkListener(counter)
+    val spark = Sessions.local(Sessions.cpus, logLevel = "ERROR")
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
 
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
-        val (t, rtSh, rtBc) = auditRuntime(counter)(fn(spark, sfDir))
+        val (t, rtSh, rtBc) = auditRuntime(rl)(fn(spark, sfDir))
         val pushed = if (t.pushed) "yes" else "-"
         f"| $name%-22s | ${t.shuffles}%2d | ${t.broadcasts}%2d | $rtSh%2d | $rtBc%2d | ${t.scans}%2d | ${t.sorts}%2d | ${t.codegen}%2d | $pushed |"
       } catch {

@@ -56,28 +56,6 @@ object Relational {
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |ORDER BY o_orderkey""".stripMargin
 
-  /** q_expand_nested: R6's `expand=customer,invoice_items` faithfully — the
-    * related entities land as NESTED fields of the record (a customer
-    * struct and an array of line-item structs), exactly what the remote
-    * API's server-side join returned. Broadcast dim for the struct; the
-    * collect_list side aggregates lineitem once, keyed by the join key.
-    * Ref: mk-chargeover-source-connector/README.md:162-169. */
-  def qExpandNestedTyped(spark: SparkSession, sfDir: String): DataFrame = {
-    val o = Tables.orders(spark, sfDir)
-    val c = Tables.customer(spark, sfDir)
-    val items = Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_list(struct(
-        col("l_linenumber"), col("l_partkey"), col("l_quantity"),
-        col("l_extendedprice")))).as("invoice_items"))
-    o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .withColumn("customer", struct(col("c_custkey"), col("c_name"),
-        col("c_mktsegment"), col("c_acctbal")))
-      .join(items, o("o_orderkey") === items("l_orderkey"), "left")
-      .select(col("o_orderkey"), col("o_totalprice"), col("customer"),
-        coalesce(col("invoice_items"), array()).as("invoice_items"))
-  }
-
   /** A double known to be 2-decimal (FIXTURES.md) rendered as its exact
     * "123.45" string — cast to DECIMAL(18,2) first so Spark and DuckDB
     * print the identical fixed-point form (double→string would use Java
@@ -85,11 +63,13 @@ object Relational {
   private def dec2str(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     c.cast(org.apache.spark.sql.types.DecimalType(18, 2)).cast("string")
 
-  /** q_expand_nested, driver-comparable rendering: the nested customer
-    * struct and invoice_items array serialized to deterministic strings
-    * (the comparison harness cannot sort struct/array columns). Same plan
-    * shape as the typed variant — broadcast dim join + one lineitem
-    * aggregation — only the final projection renders to strings. */
+  /** q_expand_nested: R6's `expand=customer,invoice_items` — the related
+    * entities land on the record (a customer and its line items), what
+    * the remote API's server-side join returned. Broadcast dim join + one
+    * lineitem aggregation keyed by the join key; the customer and
+    * invoice_items are rendered to deterministic strings (the comparison
+    * harness cannot sort struct/array columns).
+    * Ref: mk-chargeover-source-connector/README.md:162-169. */
   def qExpandNested(spark: SparkSession, sfDir: String): DataFrame = {
     val o = Tables.orders(spark, sfDir)
     val c = Tables.customer(spark, sfDir)

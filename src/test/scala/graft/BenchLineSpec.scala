@@ -63,4 +63,33 @@ class BenchLineSpec extends AnyFunSuite {
     assert(BenchLine.fmt(0.75) == "0.75")
     assert(BenchLine.fmt(64.824) == "64.82")
   }
+
+  test("failed queries: the line says how many and still fits the budget") {
+    // worst case: the whole surface at the widest value, a 3-digit count
+    val worst = SparkEntry.queries.keys.map(_ -> 99.99).toMap
+    val line = BenchLine.render(worst, 9999.999, "/data/sf0.1", failed = 127)
+    assert(line.length <= BenchLine.MaxChars, s"len=${line.length}")
+    assert(line.contains(""","failed":127,"sf":"sf0.1"}"""), line)
+    // with none failed the field is absent and the line is unchanged
+    val clean = Map("q_a" -> 1.5, "q_b" -> 0.2)
+    assert(BenchLine.render(clean, 1.7, "/tmp/sf0.1", failed = 0) ==
+      BenchLine.render(clean, 1.7, "/tmp/sf0.1"))
+    assert(!BenchLine.render(clean, 1.7, "/tmp/sf0.1").contains("failed"))
+  }
+
+  test("a query that throws is left out of the timings and named as failed") {
+    val spark = TestSession.spark
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
+    try {
+      val qs: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame)] = Seq(
+        "q_ok" -> ((s, _) => s.range(100).toDF("id")),
+        "q_throws" -> ((_, _) => throw new IllegalStateException("boom")))
+      val (timed, failed) = Bench.sweep(spark, rl, qs, TestSession.sf)
+      assert(timed.map(_._1) == Seq("q_ok"))
+      assert(timed.head._2 > 0.0)
+      assert(failed == Seq("q_throws"))
+    } finally spark.sparkContext.removeSparkListener(rl)
+  }
 }

@@ -202,15 +202,15 @@ class PlanSpec extends SparkSpec {
   /** Runtime pins for the eagerly-materialized queries: their declared
     * frame is a cut leaf (structural walk = 0 shuffles — the round-6
     * PLANS.md blind spot), so the pin instead counts what EXECUTED via
-    * PlanAudit.RuntimeCounter around construction + materialization.
+    * RunListener around construction + materialization.
     * Bounds, not exact counts: iteration depth (pagerank rounds, k-means
     * sweeps) and AQE coalescing legitimately vary with data scale; what
     * must NOT happen is the audit reporting zero (counter broken / work
     * moved out of its view) or an explosion (an iterative stage losing
     * its lineage cut and re-running history). */
   test("eager-query runtime pins: executed shuffles within design bounds") {
-    val counter = new PlanAudit.RuntimeCounter
-    spark.sparkContext.addSparkListener(counter)
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
     // name -> (rtShfl lo..hi, rtBcast lo)
     val pins: Seq[(String, (Int, Int, Int))] = Seq(
       "q_pagerank"      -> ((5, 18, 1)), // per-round node shuffles + N-spine/prefix broadcasts
@@ -262,13 +262,13 @@ class PlanSpec extends SparkSpec {
       "q_span_scrub"    -> ((1, 16, 0)))
     try {
       val bad = pins.flatMap { case (name, (lo, hi, bcLo)) =>
-        val (_, rs, rb) = PlanAudit.auditRuntime(counter)(
+        val (_, rs, rb) = PlanAudit.auditRuntime(rl)(
           SparkEntry.queries(name)(spark, sf))
         if (rs >= lo && rs <= hi && rb >= bcLo) None
         else Some(s"$name: expected rtShfl in [$lo,$hi] rtBcast>=$bcLo, got rtShfl=$rs rtBcast=$rb")
       }
       assert(bad.isEmpty, bad.mkString("\n"))
-    } finally spark.sparkContext.removeSparkListener(counter)
+    } finally spark.sparkContext.removeSparkListener(rl)
   }
 
   /** Tight self-check of the RUNTIME broadcast counter (ADVICE r7): the
@@ -280,10 +280,10 @@ class PlanSpec extends SparkSpec {
     * and both must be nonzero, so a silent-zero (or double-count)
     * regression fails loudly here before it corrupts PLANS.md. */
   test("runtime broadcast counter: tight parity with the structural walk") {
-    val counter = new PlanAudit.RuntimeCounter
-    spark.sparkContext.addSparkListener(counter)
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
     try {
-      val (t, _, rb) = PlanAudit.auditRuntime(counter) {
+      val (t, _, rb) = PlanAudit.auditRuntime(rl) {
         val o = Tables.orders(spark, sf)
         val c = broadcast(Tables.customer(spark, sf))
         val n = broadcast(Tables.nation(spark, sf))
@@ -296,6 +296,6 @@ class PlanSpec extends SparkSpec {
       assert(rb == t.broadcasts,
         s"runtime broadcast counter out of parity: structural=${t.broadcasts} runtime=$rb " +
         "— the Spark job-tag wording the counter matches on has likely changed")
-    } finally spark.sparkContext.removeSparkListener(counter)
+    } finally spark.sparkContext.removeSparkListener(rl)
   }
 }

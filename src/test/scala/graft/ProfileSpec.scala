@@ -1,0 +1,42 @@
+package graft
+
+import graft.tools.Profile
+
+/** tools.Profile's views on the shared session at sf0.001: the phase
+  * split, stage records that account for every task the listener saw, and
+  * the drain view's micro-batch count. */
+class ProfileSpec extends SparkSpec {
+
+  test("phase view: three samples, each with build, plan and exec > 0") {
+    val ps = Profile.phases(spark, Profile.resolve("q_join_multiway"), sf)
+    assert(ps.size == 3)
+    ps.foreach(p => assert(p.buildS > 0 && p.planS > 0 && p.execS > 0, p))
+  }
+
+  test("stage view: summed stage run ms == the listener's task total") {
+    // the totals are session-wide: a stream left running by another
+    // suite would add tasks the query's stage records do not hold
+    assert(spark.streams.active.isEmpty,
+      s"streams still running: ${spark.streams.active.map(_.name).mkString(", ")}")
+    val rl = new RunListener
+    spark.sparkContext.addSparkListener(rl)
+    try {
+      rl.quiesce()
+      val m0 = rl.totals
+      Profile.traced(spark, rl, Profile.resolve("q_join_multiway"), sf)
+      val d = rl.totals - m0
+      assert(rl.stages.nonEmpty)
+      assert(rl.stages.map(_.runMs).sum == d.taskMs,
+        s"stages=${rl.stages.map(_.runMs)} taskMs=${d.taskMs}")
+      assert(rl.jobs.nonEmpty && rl.jobs.forall(j => j.end >= j.start))
+    } finally spark.sparkContext.removeSparkListener(rl)
+  }
+
+  test("drain view: an AvailableNow drain of q_paged_stream is 1 micro-batch") {
+    val bs = Profile.drain(spark, Profile.resolve("q_paged_stream"), sf)
+    assert(bs.size == 1, bs.mkString("\n"))
+    assert(bs.head.rows > 0)
+    assert(Set("addBatch", "latestOffset", "triggerExecution")
+      .subsetOf(bs.head.durationMs.keySet), bs.head.durationMs)
+  }
+}

@@ -69,8 +69,11 @@ class TransformWithStateSpec extends SparkSpec {
       val stream = Tables.normalizeTs(rawStream)
       val out = Streaming.upsertLatestTws(Streaming.typedEvents(stream),
         ttl = Some(java.time.Duration.ofMillis(1))).toDF()
+      // with a TTL the AvailableNow query keeps running no-data batches
+      // after the drain and never terminates: stop it after the wait, so
+      // it does not run on in the shared session under later suites
       val q = Streaming.runToMemoryUpdate(out, "tws_ttl_test")
-      q.awaitTermination(120000)
+      try q.awaitTermination(120000) finally q.stop()
       assert(q.recentProgress.length >= 2, "expected two micro-batches")
       val t = spark.table("tws_ttl_test")
       val ev = Tables.events(spark, sf)
