@@ -3,7 +3,6 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The reference's ENTIRE production path as one oracle-checked
   * composition (SURVEY.md §3.1): paged CDC source → SMT → routed topic,
@@ -14,8 +13,6 @@ import org.apache.spark.sql.streaming.Trigger
   * whole pipeline.
   */
 object Cdc {
-
-  private val runs = new java.util.concurrent.atomic.AtomicInteger
 
   /** q_cdc_pipeline, stage by stage (reference mapping in parens):
     *
@@ -44,9 +41,7 @@ object Cdc {
     * topic, and the compaction window keys the same shuffle. */
   def qCdcPipeline(spark: SparkSession, sfDir: String): DataFrame = {
     JsonStringCast.register(spark)
-    Streaming.tuneLocalCheckpointIo(spark)
-    val sink = s"cdc_pipeline_${runs.incrementAndGet()}"
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
+    val stream = spark.readStream.format("graft.sources.PagedEntitySource")
       .option("entities", "customer,invoice")
       .option("customer.rows", "6000")
       .option("invoice.rows", "9000")
@@ -54,13 +49,7 @@ object Cdc {
       .option("updatesEveryN", "4")
       .option("pageSize", "500").option("windowRows", "2000")
       .load()
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try {
-      q.awaitTermination(300000)
-      if (q.isActive) { q.stop(); throw new IllegalStateException(
-        "q_cdc_pipeline: AvailableNow drain did not terminate in 300 s") }
-      val landed = spark.table(sink)
+    Streaming.drainToMemory(stream, "append", "q_cdc_pipeline") { landed =>
       val enriched = landed
         .withColumn("category_cast", expr("json_string_cast(category)"))
         .filter(col("id").isNotNull)
@@ -74,10 +63,7 @@ object Cdc {
         .select(col("topic"), col("key"), col("_entity_type"), col("id"),
           col("ts_us"), col("value"), col("category_cast"))
         .orderBy(col("_entity_type"), col("id"))
-      Iterate.cut(compacted) // 11,250 rows: detach from the sink view
-    } finally {
-      if (q.isActive) q.stop()
-      spark.catalog.dropTempView(sink)
+      compacted // 11,250 rows
     }
   }
 

@@ -228,14 +228,8 @@ object HeavyHitters {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       val running = new Streaming.RunningMg(M)
-      val q = Streaming.heavyHittersStream(stream, M, running)
-      try {
-        q.awaitTermination(300000)
-        if (q.isActive) throw new IllegalStateException(
-          "q_stream_heavy: AvailableNow drain did not terminate in 300 s")
-      } finally if (q.isActive) q.stop()
-      if (running.batchCount < 2) throw new IllegalStateException(
-        s"q_stream_heavy: expected a multi-batch drain, got ${running.batchCount}")
+      Streaming.drain(Streaming.heavyHittersStream(stream, M, running),
+        "q_stream_heavy", minDataBatches = 2)
       recountTopK(spark, tokens(Tables.documents(spark, sfDir)),
         running.summary, M, K)
       // safe to delete here: the returned frame reads sfDir + the driver-

@@ -82,7 +82,7 @@ object StateMachine {
 
   /** The reference's default cadence: daily at a fixed UTC time (Quartz
     * `0 0 0 * * ?`, Config.java:59-63). Parse failure in the reference
-    * falls back to +24 h (Task.java:386-388) — `DailySchedule.fallback`
+    * falls back to +24 h (Task.java:386-388) — `CronSchedule.fallback`
     * mirrors that. */
   final case class DailySchedule(hourUtc: Int, minuteUtc: Int = 0) extends Schedule {
     private val dayMs = 86400000L
@@ -95,8 +95,6 @@ object StateMachine {
   }
   object DailySchedule {
     val midnight: DailySchedule = DailySchedule(0, 0)
-    /** +24 h fallback on unparseable schedule (Task.java:386-388). */
-    def fallback(tMillis: Long): Long = tMillis + 86400000L
   }
 
   /** R12: retry backoff — `min(2^attempt × 1 s + jitter, 30 s)`, the cap
@@ -118,7 +116,7 @@ object StateMachine {
   def failureReset(s: EntityState, nowMillis: Long): EntityState =
     s.copy(batchEndMillis = None, currentOffset = 0L,
       isProcessingBatch = false, retryCount = 0,
-      nextScheduledRunMillis = DailySchedule.fallback(nowMillis))
+      nextScheduledRunMillis = CronSchedule.fallback(nowMillis))
 
   /** The data-plane view of one batch: the state's half-open window applied
     * to the entity table, with the state exposed as columns (offset

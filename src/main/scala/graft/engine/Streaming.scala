@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryException,
+  StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 import Exact._
 
@@ -16,10 +17,16 @@ import Exact._
   *     `session_window`) in batch mode, so DuckDB can oracle-check the
   *     window algebra. In streaming mode the identical expression runs
   *     under `readStream` — that equivalence is Spark's unified model.
-  *  2. `streamEvents`/`tumblingStream` run the genuine `readStream` path
+  *  2. `streamEvents`/`tumblingAgg` run the genuine `readStream` path
   *     (file source → watermark → window agg) exercised by the test suite
   *     with Trigger.AvailableNow, mirroring INITIAL_LOAD catch-up then
   *     steady-state cadence.
+  *
+  * Every AvailableNow drain — the declared q_paged_stream, q_cdc_pipeline,
+  * q_stream_upsert/delta/absorb/compact/heavy and the specs — runs
+  * through [[drain]] (or [[drainToMemory]] for a memory sink): the one
+  * place that starts, bounds, checks and stops a drain, and the one place
+  * its micro-batch progress comes back from.
   *
   * At scale: tumbling/session aggs shuffle once on (window ⊕ key); the
   * watermark bounds state store size — state for windows older than the
@@ -40,8 +47,6 @@ object Streaming {
        |  COUNT(*) AS n, ${sqlSum2("value")} AS sum_value
        |FROM events GROUP BY 1, 2 ORDER BY ws_us, event_type""".stripMargin
 
-  private val pagedStreamRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** q_paged_stream: the paged CDC source drained through its genuine
     * `MicroBatchStream` path — a full AvailableNow replay (windowed
     * INITIAL→INCREMENTAL state machine, one 500-row page per poll, 24
@@ -49,41 +54,21 @@ object Streaming {
     * aggregation as q_paged_source over the landed rows. The oracle
     * replays the deterministic generator in SQL, so the differential
     * proves the STREAMING path (offset algebra, page planning, restartable
-    * drain) loses and duplicates nothing — not just the batch scan.
-    *
-    * The memory sink is the TEST-SCALE landing zone (rows live in driver
-    * memory — fine for the fixed 12 k-row drain, never for production);
-    * a real deployment drains to files/Kafka via foreachBatch exactly as
-    * CheckpointSpec's partitioned-sink path does. The sink view is
-    * dropped after the result is cut to a leaf, so repeated runs
-    * (bench min-of-N, warmup) don't accumulate driver-held tables. */
+    * drain) loses and duplicates nothing — not just the batch scan. */
   def qPagedStream(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.PagedEntitySource
-    tuneLocalCheckpointIo(spark)
-    val sink = s"paged_stream_q_${pagedStreamRuns.incrementAndGet()}"
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
+    val stream = spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", "12000").option("pageSize", "500")
       .option("windowRows", "4000")
       .load()
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try {
-      q.awaitTermination(300000)
-      if (q.isActive) { q.stop(); throw new IllegalStateException(
-        "q_paged_stream: AvailableNow drain did not terminate in 300 s") }
-      val out = spark.table(sink)
+    drainToMemory(stream, "append", "q_paged_stream") { landed =>
+      landed
         .filter(col("ts_us") >= PagedEntitySource.tsOf(1000) &&
                 col("ts_us") < PagedEntitySource.tsOf(9000))
         .groupBy(col("category"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
         .orderBy(col("category"))
-      Iterate.cut(out) // 5 rows: detach from the sink view
-    } finally {
-      // a StreamingQueryException from awaitTermination can leave the
-      // query active — stop it BEFORE dropping the view it writes to
-      if (q.isActive) q.stop()
-      spark.catalog.dropTempView(sink) // also on the failure path
     }
   }
 
@@ -195,26 +180,51 @@ object Streaming {
           "FileSystemBasedCheckpointFileManager")
   }
 
-  /** Run a stream to a named memory sink with AvailableNow (the INITIAL_LOAD
-    * catch-up semantics: process everything available, then stop). */
-  def runToMemory(df: DataFrame, name: String): StreamingQuery = {
-    tuneLocalCheckpointIo(df.sparkSession)
-    df.writeStream.format("memory").queryName(name)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+  /** The one AvailableNow drain (the INITIAL_LOAD catch-up semantics:
+    * process everything available, then stop). Starts `w` under
+    * `Trigger.AvailableNow` and waits up to 300 s. Throws, naming `what`,
+    * when the drain does not terminate in time, when the query fails, or
+    * when fewer than `minDataBatches` micro-batches had input (a drain
+    * whose result depends on being split into batches must prove it was).
+    * The query is stopped on every path — a StreamingQueryException can
+    * leave it active. Returns the micro-batches' progress records. */
+  def drain(w: DataStreamWriter[Row], what: String,
+      minDataBatches: Int = 0): Array[StreamingQueryProgress] = {
+    tuneLocalCheckpointIo(SparkSession.active)
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    try {
+      val done =
+        try q.awaitTermination(300000)
+        catch { case e: StreamingQueryException =>
+          throw new IllegalStateException(s"$what: drain failed", e) }
+      if (!done) throw new IllegalStateException(
+        s"$what: AvailableNow drain did not terminate in 300 s")
+      val progress = q.recentProgress
+      val dataBatches = progress.count(_.numInputRows > 0)
+      if (dataBatches < minDataBatches) throw new IllegalStateException(
+        s"$what: expected at least $minDataBatches micro-batches with input, " +
+          s"got $dataBatches")
+      progress
+    } finally q.stop()
   }
 
-  /** Run in append mode (dedup / joins emit finalized rows only). */
-  def runToMemoryAppend(df: DataFrame, name: String): StreamingQuery = {
-    tuneLocalCheckpointIo(df.sparkSession)
-    df.writeStream.format("memory").queryName(name)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-  }
+  private val memorySinks = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Run in update mode (for arbitrary-stateful outputs). */
-  def runToMemoryUpdate(df: DataFrame, name: String): StreamingQuery = {
-    tuneLocalCheckpointIo(df.sparkSession)
-    df.writeStream.format("memory").queryName(name)
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
+  /** [[drain]] `df` into a memory sink in output `mode`, then `read` the
+    * landed rows. The result is cut to a leaf, so the sink view — uniquely
+    * named, and dropped on every path — is not held by it, and repeated
+    * runs (bench min-of-N, warmup) do not accumulate driver-held tables.
+    * The memory sink is the TEST-SCALE landing zone (rows live in driver
+    * memory); a real deployment drains to files or Kafka via foreachBatch
+    * as CheckpointSpec's partitioned-sink path does. */
+  def drainToMemory(df: DataFrame, mode: String, what: String,
+      minDataBatches: Int = 0)(read: DataFrame => DataFrame): DataFrame = {
+    val sink = s"graft_drain_${memorySinks.incrementAndGet()}"
+    try {
+      drain(df.writeStream.format("memory").queryName(sink).outputMode(mode),
+        what, minDataBatches)
+      Iterate.cut(read(df.sparkSession.table(sink)))
+    } finally df.sparkSession.catalog.dropTempView(sink)
   }
 
   // --- delivery-semantics repair kit (dedup + joins on streams) ----------
@@ -311,16 +321,24 @@ object Streaming {
       .flatMapGroupsWithState[UpsertState, UpsertOut](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (key: Long, rows: Iterator[EventIn], state: GroupState[UpsertState]) =>
-          val prev = state.getOption.getOrElse(UpsertState(Long.MinValue, "", 0L))
-          val batch = rows.toSeq
-          val best = batch.maxBy(e => (e.tsMicros, e.event_type))
-          val next =
-            if (best.tsMicros >= prev.lastTsMicros)
-              UpsertState(best.tsMicros, best.event_type, prev.nSeen + batch.size)
-            else prev.copy(nSeen = prev.nSeen + batch.size)
+          val next = upsertStep(state.getOption, rows)
           state.update(next)
           Iterator(UpsertOut(key, next.lastTsMicros, next.eventType, next.nSeen))
       }
+  }
+
+  /** The upsert transition every upsert operator shares: fold one key's
+    * micro-batch rows into its state. The batch's latest (ts, event_type)
+    * replaces the state's unless the state is strictly later; the seen
+    * count grows by the batch size either way. */
+  private[graft] def upsertStep(prev: Option[UpsertState],
+      rows: Iterator[EventIn]): UpsertState = {
+    val p = prev.getOrElse(UpsertState(Long.MinValue, "", 0L))
+    val batch = rows.toSeq
+    val best = batch.maxBy(e => (e.tsMicros, e.event_type))
+    if (best.tsMicros >= p.lastTsMicros)
+      UpsertState(best.tsMicros, best.event_type, p.nSeen + batch.size)
+    else p.copy(nSeen = p.nSeen + batch.size)
   }
 
   /** upsertLatest with a state TTL: NoTimeout state grows with the key
@@ -348,13 +366,7 @@ object Streaming {
             state.remove()
             out.iterator
           } else {
-            val prev = state.getOption.getOrElse(UpsertState(Long.MinValue, "", 0L))
-            val batch = rows.toSeq
-            val best = batch.maxBy(e => (e.tsMicros, e.event_type))
-            val next =
-              if (best.tsMicros >= prev.lastTsMicros)
-                UpsertState(best.tsMicros, best.event_type, prev.nSeen + batch.size)
-              else prev.copy(nSeen = prev.nSeen + batch.size)
+            val next = upsertStep(state.getOption, rows)
             state.update(next)
             state.setTimeoutDuration(ttlMs)
             Iterator(UpsertTtlOut(key, next.lastTsMicros, next.eventType, next.nSeen,
@@ -502,13 +514,7 @@ object Streaming {
 
     override def handleInputRows(key: Long, rows: Iterator[EventIn],
         tv: TimerValues): Iterator[UpsertOut] = {
-      val prev = if (state.exists()) state.get() else UpsertState(Long.MinValue, "", 0L)
-      val batch = rows.toSeq
-      val best = batch.maxBy(e => (e.tsMicros, e.event_type))
-      val next =
-        if (best.tsMicros >= prev.lastTsMicros)
-          UpsertState(best.tsMicros, best.event_type, prev.nSeen + batch.size)
-        else prev.copy(nSeen = prev.nSeen + batch.size)
+      val next = upsertStep(Option.when(state.exists())(state.get()), rows)
       state.update(next)
       Iterator(UpsertOut(key, next.lastTsMicros, next.eventType, next.nSeen))
     }
@@ -653,8 +659,6 @@ object Streaming {
     val partsKey = "spark.sql.shuffle.partitions"
     val savedProvider = spark.conf.getOption(providerKey)
     val savedParts = spark.conf.get(partsKey)
-    val sink = s"stream_upsert_q_${streamUpsertRuns.get()}"
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       ev.select(col("user_id"), col("ts"), col("event_type"))
         .repartitionByRange(4, col("ts"))
@@ -673,25 +677,20 @@ object Streaming {
       // sizing for this key cardinality (at production scale you size
       // this to the live-key count, not the session default).
       spark.conf.set(partsKey, "8")
-      q = runToMemoryUpdate(upsertLatestTws(typedEvents(stream)).toDF(), sink)
-      spark.conf.set(partsKey, savedParts) // captured at query start
-      q.awaitTermination(300000)
-      if (q.isActive) throw new IllegalStateException(
-        "q_stream_upsert: AvailableNow drain did not terminate in 300 s")
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches < 2) throw new IllegalStateException(
-        s"q_stream_upsert: expected a multi-batch drain, got $dataBatches")
-      val out = spark.table(sink)
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("nSeen"), col("lastTsMicros"), col("eventType"))).as("s"))
-        .select(col("user_id"), col("s.lastTsMicros").as("last_ts_us"),
-          col("s.eventType").as("event_type"), col("s.nSeen").as("n_seen"))
-        .orderBy(col("user_id"))
-      Iterate.cut(out) // detach from the sink view
+      drainToMemory(upsertLatestTws(typedEvents(stream)).toDF(), "update",
+          "q_stream_upsert", minDataBatches = 2) { landed =>
+        // the query cloned the session conf at start: the read below plans
+        // at the session's own partition count again
+        spark.conf.set(partsKey, savedParts)
+        landed
+          .groupBy(col("user_id"))
+          .agg(max(struct(col("nSeen"), col("lastTsMicros"), col("eventType"))).as("s"))
+          .select(col("user_id"), col("s.lastTsMicros").as("last_ts_us"),
+            col("s.eventType").as("event_type"), col("s.nSeen").as("n_seen"))
+          .orderBy(col("user_id"))
+      }
     } finally {
-      if (q != null && q.isActive) q.stop()
-      spark.catalog.dropTempView(sink) // no-op (returns false) if never created
-      spark.conf.set(partsKey, savedParts) // idempotent re-restore
+      spark.conf.set(partsKey, savedParts)
       savedProvider match {
         case Some(v) => spark.conf.set(providerKey, v)
         case None    => spark.conf.unset(providerKey)
@@ -725,15 +724,13 @@ object Streaming {
     LlmOps.saveBucketedIndex(spark,
       LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)), idxDir, idxName)
     val idx = LlmOps.loadBucketedIndex(spark, idxName)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
     try {
       LlmOps.deltaBatch(docs)
         .repartition(4).write.mode("overwrite").parquet(inDir)
       val schema = spark.read.parquet(inDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
-      tuneLocalCheckpointIo(spark)
-      q = stream.writeStream
+      drain(stream.writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
           // one OVERWRITTEN subdir per batch id: a retried micro-batch
           // replaces its own output instead of appending a duplicate —
@@ -741,19 +738,10 @@ object Streaming {
           LlmOps.probeDeltaUnsorted(idx, b)
             .write.mode("overwrite").parquet(s"$outDir/b$id")
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(300000)
-      if (q.isActive) throw new IllegalStateException(
-        "q_stream_delta: AvailableNow drain did not terminate in 300 s")
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      if (dataBatches < 2) throw new IllegalStateException(
-        s"q_stream_delta: expected a multi-batch drain, got $dataBatches")
+        }, "q_stream_delta", minDataBatches = 2)
       Iterate.cut(spark.read.option("recursiveFileLookup", "true")
         .parquet(outDir).orderBy(col("doc_id")))
     } finally {
-      if (q != null && q.isActive) q.stop()
       LlmOps.dropBucketedIndex(spark, idxName)
       deleteDirTree(inDir); deleteDirTree(outDir); deleteDirTree(idxDir)
     }
@@ -828,7 +816,7 @@ object Streaming {
     LlmOps.saveBucketedIndex(spark,
       LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)),
       idxDir, idxName, gen = -1L)
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val what = if (compactEvery > 0) "q_stream_compact" else "q_stream_absorb"
     try {
       val batch = LlmOps.streamAbsorbBatch(docs)
       val base = System.currentTimeMillis() - 3600000L
@@ -853,8 +841,7 @@ object Streaming {
       val schema = spark.read.parquet(inDir).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir)
-      tuneLocalCheckpointIo(spark)
-      q = stream.writeStream
+      drain(stream.writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
           // classify + absorb drive 5 actions over this micro-batch
           // (digest probe, band probe, status join, two maintenance
@@ -891,12 +878,7 @@ object Streaming {
               tierLog.foreach(q => { q.add(report); () })
             }
           } finally { batch.unpersist(); () }
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(300000)
-      if (q.isActive) throw new IllegalStateException(
-        "stream absorb drain: AvailableNow drain did not terminate in 300 s")
+        }, what)
       // order guard: batch b's output must be exactly the doc_id % 4 == b
       // slice — anything else means the file source broke the declared
       // order and the gen-scoped classification no longer matches the
@@ -908,12 +890,11 @@ object Streaming {
           regexp_extract(input_file_name(), "/b(\\d+)/", 1).cast("int").as("b"))
         .filter(pmod(col("doc_id"), lit(4)) =!= col("b")).count()
       if (off > 0) throw new IllegalStateException(
-        s"stream absorb drain: $off rows landed outside their declared file slice")
+        s"$what: $off rows landed outside their declared file slice")
       inspectFinal.foreach(f => f(idxName))
       Iterate.cut(spark.read.option("recursiveFileLookup", "true")
         .parquet(outDir).orderBy(col("doc_id")))
     } finally {
-      if (q != null && q.isActive) q.stop()
       LlmOps.dropBucketedIndex(spark, idxName)
       deleteDirTree(stageDir); deleteDirTree(inDir)
       deleteDirTree(outDir); deleteDirTree(idxDir)
@@ -962,29 +943,24 @@ object Streaming {
   final class RunningMg(m: Int) extends Serializable {
     private val agg = new HeavyHitters.MgAggregator(m)
     private var buf: HeavyHitters.MgBuf = agg.zero
-    private var batches: Int = 0
-    def absorb(b: HeavyHitters.MgBuf): Unit =
-      synchronized { buf = agg.merge(buf, b); batches += 1 }
+    def absorb(b: HeavyHitters.MgBuf): Unit = synchronized { buf = agg.merge(buf, b) }
     def summary: HeavyHitters.MgBuf = synchronized(buf)
-    def batchCount: Int = synchronized(batches)
   }
 
-  /** Drain a streaming `text` relation into a RunningMg: each micro-batch
+  /** A streaming `text` relation's sink into a RunningMg: each micro-batch
     * computes its own DISTRIBUTED m-bounded summary (map-side partials,
     * one m-bounded row to the driver — the same pass-1 plan as the batch
     * query), and foreachBatch merges it into the running state. State is
     * O(m) on the driver; per-batch work is a full Spark aggregate, so a
     * 1000-executor stream does exactly what the batch pass does, one
-    * trigger at a time. Caller stops/awaits the returned query, then reads
-    * the summary for the pass-2 recount. */
+    * trigger at a time. The caller [[drain]]s the writer, then reads the
+    * summary for the pass-2 recount. */
   def heavyHittersStream(docTexts: DataFrame, m: Int,
-      running: RunningMg): StreamingQuery = {
+      running: RunningMg): DataStreamWriter[Row] = {
     val spark = docTexts.sparkSession
-    tuneLocalCheckpointIo(spark)
     HeavyHitters.tokens(docTexts).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         running.absorb(HeavyHitters.summarize(spark, batch, m))
       }
-      .trigger(Trigger.AvailableNow()).start()
   }
 }

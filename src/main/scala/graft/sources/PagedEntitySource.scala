@@ -58,15 +58,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * Streaming — the reference's CONTINUOUS identity (poll loop,
-  * ChargeOverSourceTask.java:136-173) — reads the same table through a
-  * genuine `MicroBatchStream` ([[PagedMicroBatchStream]]): one page per
-  * poll, windowed INITIAL→INCREMENTAL progression, offsets carrying the
-  * reference's 7-field state map; multi-entity mode streams every entity
-  * with its own independent state machine
-  * ([[PagedMultiMicroBatchStream]]). A micro-batch is one poll under
-  * every trigger but `Trigger.AvailableNow`, where it is every poll up to
-  * the drain target (or up to the first failing poll) — the page-sized
-  * requests stay the same, only the commit unit grows:
+  * ChargeOverSourceTask.java:136-173) — reads the same table through one
+  * genuine `MicroBatchStream` ([[PagedMicroBatchStream]]) whether it
+  * holds one entity or many: one page per entity per poll, windowed
+  * INITIAL→INCREMENTAL progression, and as offset a map from entity name
+  * to the reference's 7-field state ([[MultiPagedStreamOffset]]) — every
+  * entity with its own independent state machine. A micro-batch is one
+  * poll under every trigger but `Trigger.AvailableNow`, where it is every
+  * poll up to the drain target (or up to the first failing poll) — the
+  * page-sized requests stay the same, only the commit unit grows:
   * {{{
   * spark.readStream.format("graft.sources.PagedEntitySource")
   *   .option("rows", 100000).option("pageSize", 500)
@@ -343,9 +343,9 @@ object PagedEntitySource {
   }
 
   def tsOf(id: Long): Long = BaseUs + id * StepUs
-  def idOfTsCeil(tsUs: Long): Long = // first id with ts >= tsUs
-    if (tsUs <= BaseUs) 0L else (tsUs - BaseUs + StepUs - 1) / StepUs
-  def idOfTsExclUpper(tsUs: Long): Long = // first id with ts >= upper bound
+  /** First id with ts >= tsUs: the inclusive lower bound of a ts range,
+    * and the exclusive upper bound of one that ends before tsUs. */
+  def idOfTsCeil(tsUs: Long): Long =
     if (tsUs <= BaseUs) 0L else (tsUs - BaseUs + StepUs - 1) / StepUs
 }
 
@@ -445,9 +445,9 @@ class PagedScanBuilder(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
       case GreaterThan("ts_us", v: Long) =>
         lo = math.max(lo, PagedEntitySource.idOfTsCeil(v + 1))
       case LessThan("ts_us", v: Long) =>
-        hi = math.min(hi, PagedEntitySource.idOfTsExclUpper(v))
+        hi = math.min(hi, PagedEntitySource.idOfTsCeil(v))
       case LessThanOrEqual("ts_us", v: Long) =>
-        hi = math.min(hi, PagedEntitySource.idOfTsExclUpper(v + 1))
+        hi = math.min(hi, PagedEntitySource.idOfTsCeil(v + 1))
       case GreaterThanOrEqual("id", v: Long) => lo = math.max(lo, v)
       case LessThan("id", v: Long) => hi = math.min(hi, v)
       case EqualTo("_entity_type", v: String) => kept = kept.filter(_.name == v)
@@ -464,7 +464,7 @@ class PagedScanBuilder(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
 
   override def build(): Scan =
     new PagedScan(math.min(lo, hi), hi, pageSize, required, kept, windowRows,
-      multi, faults)
+      faults)
 }
 
 /** R4: the planner turns the (narrowed) id range into pages — out-of-window
@@ -472,22 +472,13 @@ class PagedScanBuilder(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
   * (entity-level parallelism, the partitioned-source reading of R15). */
 class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
     confs: Seq[PagedEntitySource.EntityConf], windowRows: Long = 0L,
-    multi: Boolean = false,
     faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  /** The stream flavor follows the table MODE, not the entity count: an
-    * `entities=` table always uses per-entity map offsets, so a config
-    * that later adds entities restarts cleanly from the same checkpoint
-    * (a count-based choice would flip the offset JSON format). */
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    if (multi)
-      new PagedMultiMicroBatchStream(confs, pageSize, windowRows, required, faults)
-    else
-      new PagedMicroBatchStream(confs.head, pageSize,
-        if (windowRows > 0) windowRows else confs.head.rows, required, faults)
+    new PagedMicroBatchStream(confs, pageSize, windowRows, required, faults)
   override def description(): String = {
     val ent = if (confs.size == 1) "" else s", entities=${confs.map(_.name).mkString("+")}"
     s"PagedScan(lo=$lo, hi=$hi, pageSize=$pageSize, fields=${required.fieldNames.mkString(",")}$ent)"
@@ -817,12 +808,14 @@ private[sources] object HttpPageFetch {
   }
 }
 
-/** The stream position, mirroring the reference's 7-field per-entity
-  * offset map FIELD FOR FIELD (ChargeOverSourceTask.java:409-416 — the
-  * map piggybacked on every emitted SourceRecord and restored via
-  * offsetStorageReader on restart, :98-133), transposed from the
-  * datetime-string domain to the generator's id domain (id == minutes
-  * since origin, so id bounds ARE time bounds):
+/** One entity's stream position (the stream's offset maps entity names
+  * to these, [[MultiPagedStreamOffset]]), mirroring the reference's
+  * 7-field per-entity offset map FIELD FOR FIELD
+  * (ChargeOverSourceTask.java:409-416 — the map piggybacked on every
+  * emitted SourceRecord and restored via offsetStorageReader on restart,
+  * :98-133), transposed from the datetime-string domain to the
+  * generator's id domain (id == minutes since origin, so id bounds ARE
+  * time bounds):
   *
   *  - `load_mode`              "INITIAL_LOAD" | "INCREMENTAL_LOAD" (:28-31)
   *  - `last_processed_id`      analog of last_processed_datetime — the
@@ -881,39 +874,76 @@ object PagedStreamOffset {
   }
 }
 
+/** The stream position: one [[PagedStreamOffset]] per entity — the
+  * reference's `Map<String, EntityState>` (one independent state machine
+  * per configured entity, ChargeOverSourceTask.java:84-90). A one-entity
+  * stream is the one-key case (`rows=` streams key it by the `entity`
+  * option, default `events`). Serialized as `{"entities":{name:{…7
+  * fields…}}}` with entity keys sorted so the JSON is deterministic.
+  * Interpolating names unescaped is safe because table resolution rejects
+  * anything outside [A-Za-z0-9_-] (entityConf). */
+case class MultiPagedStreamOffset(entities: Map[String, PagedStreamOffset])
+    extends org.apache.spark.sql.connector.read.streaming.Offset {
+  override def json(): String =
+    entities.toSeq.sortBy(_._1).map { case (e, o) =>
+      s""""$e":${o.json()}"""
+    }.mkString("""{"entities":{""", ",", "}}")
+}
+
+object MultiPagedStreamOffset {
+  def fromJson(json: String): MultiPagedStreamOffset = {
+    val root = HttpPageFetch.mapper.readTree(json)
+    val ents = root.get("entities")
+    val b = Map.newBuilder[String, PagedStreamOffset]
+    val it = ents.fields()
+    while (it.hasNext) {
+      val f = it.next()
+      b += f.getKey -> PagedStreamOffset.fromJson(f.getValue.toString)
+    }
+    MultiPagedStreamOffset(b.result())
+  }
+}
+
 /** The reference's CONTINUOUS identity — a polling CDC source
   * (ChargeOverSourceTask.java:136-173 poll loop) — as a genuine DSv2
-  * `MicroBatchStream`:
+  * `MicroBatchStream`, for one entity or many:
   *
-  *  - one `poll()` fetches at most one PAGE (`getDefaultReadLimit =
-  *    maxRows(pageSize)` — batch.size, the reference's per-request
-  *    bound; it sizes the request, not the commit unit);
+  *  - every `poll()` advances EACH configured entity by at most one PAGE
+  *    of its own open window — the reference's poll loop iterating the
+  *    entity list, each entity with an independent state machine and its
+  *    own query params (:151-172; Config.java:279-289). The per-poll
+  *    bound is per entity (batch.size records per entity per request); it
+  *    sizes the request, not the commit unit;
   *  - the incremental window state machine (INITIAL_LOAD catch-up, then
   *    windowed INCREMENTAL_LOAD, :245-291) drives `latestOffset`: a
   *    window [last, batchEnd) opens, pages through, completes, and the
   *    mode switches exactly once after the first window completes;
   *  - a micro-batch is ONE poll under every trigger but AvailableNow.
-  *    There `latestOffset` keeps polling until the entity reaches the
-  *    drain target or a poll fails or resets; that failing state ends the
-  *    batch, so retry_count and the reset still reach the offset log. The
-  *    states are the per-poll sequence — a clean drain just logs its last
-  *    one instead of one entry per page;
-  *  - offsets are committed by Spark's checkpoint offset log — the exact
-  *    role the per-record sourceOffset map plays for Connect (:434-443);
-  *    restart resumes from the committed (window, page) position with no
-  *    re-emission;
-  *  - `planInputPartitions` replays the polls between the logged start
-  *    and end offsets ([[PagedMicroBatchStream.replay]]), so every page
-  *    keeps its own limit/offset/where= request and a restarted query
-  *    re-plans a logged batch to the same pages; the pages are packed
-  *    into at most the session's default parallelism tasks;
+  *    There `latestOffset` keeps polling until every entity reaches its
+  *    drain target or some entity's poll fails or resets; that failing
+  *    state ends the batch, so retry_count and the reset still reach the
+  *    offset log. The states are the per-poll sequence — a clean drain
+  *    just logs its last one instead of one entry per poll;
+  *  - offsets ([[MultiPagedStreamOffset]], one 7-field state per entity)
+  *    are committed by Spark's checkpoint offset log — the exact role the
+  *    per-record sourceOffset map plays for Connect (:434-443); restart
+  *    resumes from the committed (window, page) position with no
+  *    re-emission, and an entity added to the config later starts from
+  *    INITIAL_LOAD;
+  *  - `planInputPartitions` replays each entity's polls between the
+  *    logged start and end offsets ([[PagedMicroBatchStream.replay]]), so
+  *    every page keeps its own limit/offset/where= request and a
+  *    restarted query re-plans a logged batch to the same pages; the
+  *    pages of all entities pack into at most the session's default
+  *    parallelism tasks (entity-level parallelism — the partitioned-source
+  *    reading of R15 that the reference could not do with tasks.max=1);
   *  - `SupportsTriggerAvailableNow` caps a run at the data available
   *    when the trigger fired (the captured "now" of :245-262).
   *
   * Under the other triggers the page-per-trigger admission bound is the
   * backpressure control (maxOffsetsPerTrigger's role). */
-class PagedMicroBatchStream(conf: PagedEntitySource.EntityConf, pageSize: Int,
-    windowRows: Long, required: StructType,
+class PagedMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
+    pageSize: Int, windowRows: Long, required: StructType,
     faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
@@ -921,53 +951,95 @@ class PagedMicroBatchStream(conf: PagedEntitySource.EntityConf, pageSize: Int,
 
   /** Rows visible to the stream — the static generator's full extent.
     * A live backend would re-sample this per trigger ("now"). */
-  private def available: Long = conf.rows
-  @volatile private var availableNowTarget: Long = -1L
-  private def target: Long =
-    if (availableNowTarget >= 0) availableNowTarget else available
+  private def availableOf(c: PagedEntitySource.EntityConf): Long = c.rows
+  @volatile private var availableNowTargets: Map[String, Long] = null
+  private def targetOf(c: PagedEntitySource.EntityConf): Long =
+    if (availableNowTargets != null) availableNowTargets(c.name)
+    else availableOf(c)
+  private def winOf(c: PagedEntitySource.EntityConf): Long =
+    if (windowRows > 0) windowRows else c.rows
+
+  /** Each entity's poll-failure budget still in force, keyed by position.
+    * A batch reset CONSUMES the entry for the position that caused it: a
+    * real transient outage ends, so the replayed window must eventually
+    * pass — keeping the entry would re-fail the same page forever (an
+    * injected permanent outage, which is what `failAttempts > maxRetries`
+    * is for). Per entity, like the reference's per-entity retry_count: one
+    * entity's reset must not retire an outage another entity is still
+    * counting. Driver-local by design: a driver restart re-arms the plan,
+    * which only adds zero-progress batches — committed rows stay
+    * exactly-once. */
+  @volatile private var activeFails: Map[String, Map[Long, Int]] =
+    confs.map(_.name -> faults.pollFailAt).toMap
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = available
+    availableNowTargets = confs.map(c => c.name -> availableOf(c)).toMap
 
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(pageSize)
+  /** The declared bound is the sum of per-entity pages: one poll
+    * advances each entity by at most one page (the reference fetches
+    * batch.size records per entity per poll, Task.java:151-172), and the
+    * admission split below keeps a poll inside whatever limit Spark hands
+    * back. A one-poll batch therefore honours it; an AvailableNow batch
+    * applies it to each of its polls. */
+  override def getDefaultReadLimit: ReadLimit =
+    ReadLimit.maxRows(pageSize.toLong * confs.size)
 
-  override def initialOffset(): SOffset = PagedStreamOffset.Initial
+  override def initialOffset(): SOffset =
+    MultiPagedStreamOffset(
+      confs.map(c => c.name -> PagedStreamOffset.Initial).toMap)
 
   override def latestOffset(): SOffset =
     throw new UnsupportedOperationException(
       "latestOffset(start, limit) is used (SupportsAdmissionControl)")
 
-  /** Poll-failure budget still in force. A batch reset CONSUMES the entry
-    * for the position that caused it: a real transient outage ends, so the
-    * replayed window must eventually pass — keeping the entry would re-fail
-    * the same page forever (an injected permanent outage, which is what
-    * `failAttempts > maxRetries` is for). Driver-local by design: a driver
-    * restart re-arms the plan, which only adds zero-progress batches —
-    * committed rows stay exactly-once. */
-  @volatile private var activeFails: Map[Long, Int] = faults.pollFailAt
-
   override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
     val maxRows = PagedMicroBatchStream.maxRowsOf(limit)
-    PagedMicroBatchStream.polls(start.asInstanceOf[PagedStreamOffset],
-        drain = availableNowTarget >= 0) { s =>
-      val out = PagedMicroBatchStream.step(s, target, windowRows, maxRows,
-        activeFails)
-      if (out.nextScheduledRunId > 0L && s.nextScheduledRunId == 0L)
-        activeFails -= s.pos // the reset retired this outage
-      (out, out.pollFailed)
+    // split the per-poll admission bound evenly across entities so
+    // entities × perEntity never exceeds the declared/requested limit
+    val perEntity =
+      if (maxRows == Long.MaxValue) Long.MaxValue
+      else math.max(1L, maxRows / confs.size)
+    PagedMicroBatchStream.polls(start.asInstanceOf[MultiPagedStreamOffset],
+        drain = availableNowTargets != null) { s =>
+      var failed = false
+      val stepped = confs.map { c =>
+        // an entity ADDED to the config after the checkpoint was written has
+        // no restored state — it starts from INITIAL_LOAD, exactly the
+        // reference's per-entity state init for an unseen entity
+        // (loadEntityState default, ChargeOverSourceTask.java:98-133)
+        val prev = s.entities.getOrElse(c.name, PagedStreamOffset.Initial)
+        val fails = activeFails(c.name)
+        val out = PagedMicroBatchStream.step(prev, targetOf(c), winOf(c),
+          perEntity, fails)
+        if (out.nextScheduledRunId > 0L && prev.nextScheduledRunId == 0L)
+          activeFails = activeFails.updated(c.name, fails - prev.pos)
+        // a parked entity returns its (reset) state unchanged: not a failure
+        failed ||= (out ne prev) && out.pollFailed
+        c.name -> out
+      }.toMap
+      val next =
+        if (confs.forall(c => s.entities.get(c.name).exists(stepped(c.name) eq _))) s
+        else MultiPagedStreamOffset(stepped)
+      (next, failed)
     }
   }
 
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] =
-    PagedPartition.pack(PagedMicroBatchStream.replay(
-      start.asInstanceOf[PagedStreamOffset], end.asInstanceOf[PagedStreamOffset],
-      pageSize, windowRows, conf, faults), PagedPartition.slots)
+  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
+    val sm = start.asInstanceOf[MultiPagedStreamOffset].entities
+    val em = end.asInstanceOf[MultiPagedStreamOffset].entities
+    PagedPartition.pack(confs.flatMap { c =>
+      PagedMicroBatchStream.replay(
+        sm.getOrElse(c.name, PagedStreamOffset.Initial),
+        em.getOrElse(c.name, PagedStreamOffset.Initial),
+        pageSize, winOf(c), c, faults)
+    }, PagedPartition.slots)
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedReaderFactory(required)
 
   override def deserializeOffset(json: String): SOffset =
-    PagedStreamOffset.fromJson(json)
+    MultiPagedStreamOffset.fromJson(json)
 
   override def commit(end: SOffset): Unit = () // offset log is the durability
   override def stop(): Unit = ()
@@ -1096,137 +1168,4 @@ object PagedMicroBatchStream {
     }
     pages.result()
   }
-}
-
-/** Multi-entity stream position: one [[PagedStreamOffset]] per entity —
-  * the reference's `Map<String, EntityState>` (one independent state
-  * machine per configured entity, ChargeOverSourceTask.java:84-90),
-  * serialized with entity keys sorted so the JSON is deterministic.
-  * Interpolating names unescaped is safe because table resolution rejects
-  * anything outside [A-Za-z0-9_-] (entityConf). */
-case class MultiPagedStreamOffset(entities: Map[String, PagedStreamOffset])
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    entities.toSeq.sortBy(_._1).map { case (e, o) =>
-      s""""$e":${o.json()}"""
-    }.mkString("""{"entities":{""", ",", "}}")
-}
-
-object MultiPagedStreamOffset {
-  def fromJson(json: String): MultiPagedStreamOffset = {
-    val root = HttpPageFetch.mapper.readTree(json)
-    val ents = root.get("entities")
-    val b = Map.newBuilder[String, PagedStreamOffset]
-    val it = ents.fields()
-    while (it.hasNext) {
-      val f = it.next()
-      b += f.getKey -> PagedStreamOffset.fromJson(f.getValue.toString)
-    }
-    MultiPagedStreamOffset(b.result())
-  }
-}
-
-/** Multi-entity micro-batch stream: every `poll()` advances EACH entity
-  * by up to one page of its own open window — the reference's poll loop
-  * iterating the configured entity list, each with an independent state
-  * machine and its own per-entity query params
-  * (ChargeOverSourceTask.java:151-172; config per entity
-  * Config.java:279-289). A micro-batch is one poll, or under
-  * AvailableNow every poll until each entity reaches its target or some
-  * entity's poll fails or resets, exactly like the single-entity stream.
-  * Pages of different entities plan into the same micro-batch and run
-  * in parallel (entity-level parallelism — the partitioned-source reading
-  * of R15 that the reference could not do with tasks.max=1). The
-  * per-poll bound is per entity, matching the reference's per-entity
-  * fetch of batch.size records per poll. */
-class PagedMultiMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
-    pageSize: Int, windowRows: Long, required: StructType,
-    faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
-
-  private def availableOf(c: PagedEntitySource.EntityConf): Long = c.rows
-  @volatile private var availableNowTargets: Map[String, Long] = null
-  private def targetOf(c: PagedEntitySource.EntityConf): Long =
-    if (availableNowTargets != null) availableNowTargets(c.name)
-    else availableOf(c)
-  private def winOf(c: PagedEntitySource.EntityConf): Long =
-    if (windowRows > 0) windowRows else c.rows
-
-  /** Per-position poll-failure budget; consumed on batch reset exactly
-    * like the single-entity stream (shared across entities: positions are
-    * the failure key). */
-  @volatile private var activeFails: Map[Long, Int] = faults.pollFailAt
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTargets = confs.map(c => c.name -> availableOf(c)).toMap
-
-  /** The declared bound is the sum of per-entity pages: one poll
-    * advances each entity by at most one page (the reference fetches
-    * batch.size records per entity per poll, Task.java:151-172), and the
-    * admission split below keeps a poll inside whatever limit Spark hands
-    * back. A one-poll batch therefore honours it; an AvailableNow batch
-    * applies it to each of its polls. */
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimit.maxRows(pageSize.toLong * confs.size)
-
-  override def initialOffset(): SOffset =
-    MultiPagedStreamOffset(
-      confs.map(c => c.name -> PagedStreamOffset.Initial).toMap)
-
-  override def latestOffset(): SOffset =
-    throw new UnsupportedOperationException(
-      "latestOffset(start, limit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(start: SOffset, limit: ReadLimit): SOffset = {
-    val maxRows = PagedMicroBatchStream.maxRowsOf(limit)
-    // split the per-poll admission bound evenly across entities so
-    // entities × perEntity never exceeds the declared/requested limit
-    val perEntity =
-      if (maxRows == Long.MaxValue) Long.MaxValue
-      else math.max(1L, maxRows / confs.size)
-    PagedMicroBatchStream.polls(start.asInstanceOf[MultiPagedStreamOffset],
-        drain = availableNowTargets != null) { s =>
-      var failed = false
-      val stepped = confs.map { c =>
-        // an entity ADDED to the config after the checkpoint was written has
-        // no restored state — it starts from INITIAL_LOAD, exactly the
-        // reference's per-entity state init for an unseen entity
-        // (loadEntityState default, ChargeOverSourceTask.java:98-133)
-        val prev = s.entities.getOrElse(c.name, PagedStreamOffset.Initial)
-        val out = PagedMicroBatchStream.step(prev, targetOf(c), winOf(c),
-          perEntity, activeFails)
-        if (out.nextScheduledRunId > 0L && prev.nextScheduledRunId == 0L)
-          activeFails -= prev.pos // see the single-entity stream's note
-        // a parked entity returns its (reset) state unchanged: not a failure
-        failed ||= (out ne prev) && out.pollFailed
-        c.name -> out
-      }.toMap
-      val next =
-        if (confs.forall(c => s.entities.get(c.name).exists(stepped(c.name) eq _))) s
-        else MultiPagedStreamOffset(stepped)
-      (next, failed)
-    }
-  }
-
-  override def planInputPartitions(start: SOffset, end: SOffset): Array[InputPartition] = {
-    val sm = start.asInstanceOf[MultiPagedStreamOffset].entities
-    val em = end.asInstanceOf[MultiPagedStreamOffset].entities
-    PagedPartition.pack(confs.flatMap { c =>
-      PagedMicroBatchStream.replay(
-        sm.getOrElse(c.name, PagedStreamOffset.Initial),
-        em.getOrElse(c.name, PagedStreamOffset.Initial),
-        pageSize, winOf(c), c, faults)
-    }, PagedPartition.slots)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PagedReaderFactory(required)
-
-  override def deserializeOffset(json: String): SOffset =
-    MultiPagedStreamOffset.fromJson(json)
-
-  override def commit(end: SOffset): Unit = ()
-  override def stop(): Unit = ()
 }

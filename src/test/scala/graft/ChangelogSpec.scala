@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.PagedEntitySource
 
@@ -41,15 +40,13 @@ class ChangelogSpec extends SparkSpec {
 
   test("stream == batch over the changelog; updates land in later windows than their originals") {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_cl_ck").toString
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
+    graft.engine.Streaming.drain(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", N.toString).option("pageSize", "500")
       .option("windowRows", "1000")
       .option("updatesEveryN", K.toString)
       .load()
       .writeStream.format("memory").queryName("changelog_stream")
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+      .outputMode("append").option("checkpointLocation", ckpt), "changelog stream")
     val got = spark.table("changelog_stream")
       .orderBy(col("ts_us")).collect().map(_.toSeq).toSeq
     val batch = batchDf.orderBy(col("ts_us")).collect().map(_.toSeq).toSeq

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.engine.Tables
+import graft.engine.{Streaming, Tables}
 
 /** Checkpointed restart: the streaming analog of the reference's offset
   * restore (ChargeOverSourceTask.java:98-133 — state comes back from the
@@ -29,12 +28,9 @@ class CheckpointSpec extends SparkSpec {
     def runOnce(): Unit = {
       val stream = Tables.normalizeTs(
         spark.readStream.schema(schema).parquet(s"$in/*.parquet"))
-      val q = stream.writeStream
+      Streaming.drain(stream.writeStream
         .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", out)
-        .start()
-      q.awaitTermination(120000)
+        .format("parquet").option("path", out), "parquet sink restart")
     }
 
     runOnce() // run 1: only batch1 visible
@@ -68,12 +64,9 @@ class CheckpointSpec extends SparkSpec {
       val stream = spark.readStream.schema(schema).parquet(s"$in/*.parquet")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-      val q = stream.writeStream
+      Streaming.drain(stream.writeStream
         .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .format("parquet").option("path", out)
-        .start()
-      q.awaitTermination(120000)
+        .format("parquet").option("path", out), "parquet sink restart")
     }
 
     stage("a")

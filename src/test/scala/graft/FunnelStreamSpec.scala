@@ -31,11 +31,9 @@ class FunnelStreamSpec extends SparkSpec {
       spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1").parquet(flat))
     val out = Streaming.funnelStream(Streaming.funnelEvents(stream)).toDF()
-    val q = Streaming.runToMemoryUpdate(out, "funnel_stream")
-    q.awaitTermination(120000)
     // each slot is write-once, so max over a user's emissions == the
     // final state (null while unset, then constant)
-    val streamed = spark.table("funnel_stream")
+    val streamed = Streaming.drainToMemory(out, "update", "funnel stream")(identity)
       .groupBy(col("user_id"))
       .agg(max(col("t1")).as("t1"), max(col("t2")).as("t2"),
         max(col("t3")).as("t3"))

@@ -129,10 +129,9 @@ class HeavyHitterSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(s"$in/*.parquet")
     assert(stream.isStreaming)
     val running = new engine.Streaming.RunningMg(m)
-    val q = engine.Streaming.heavyHittersStream(stream, m, running)
-    q.awaitTermination(120000)
-    assert(running.batchCount >= 3,
-      s"expected one micro-batch per staged file, got ${running.batchCount}")
+    // one micro-batch per staged file
+    engine.Streaming.drain(engine.Streaming.heavyHittersStream(stream, m, running),
+      "heavy-hitters stream", minDataBatches = 3)
     val state = running.summary
     // pass 2 over the full corpus with the streamed summary's candidates
     val toks = docs

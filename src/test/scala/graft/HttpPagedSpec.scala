@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import graft.engine.Streaming
 
 import graft.sources.PagedEntitySource
 
@@ -64,7 +64,7 @@ class PagedHttpFixture(rows: Map[String, Long]) {
           case other => fail(s"unexpected where clause ${other.mkString(":")}")
         }.toMap
         val loId = PagedEntitySource.idOfTsCeil(w("GTE"))
-        val hiId = math.min(PagedEntitySource.idOfTsExclUpper(w("LT")),
+        val hiId = math.min(PagedEntitySource.idOfTsCeil(w("LT")),
           rows.getOrElse(entity, 0L))
         assert(q.get("order").contains("ts_us:ASC"), s"order missing in $uri")
         val remaining = faults.get((entity, offset))
@@ -286,24 +286,14 @@ class HttpPagedSpec extends SparkSpec {
           .option("updatesEveryN", "4")
           .option("pageSize", "500").option("windowRows", "1000")
         endpoint.foreach(e => r.option("endpoint", e))
-        val q = r.load()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        try {
-          q.awaitTermination(120000)
-          assert(!q.isActive, s"$sink drain did not terminate")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("_entity_type"), col("id"))
-            .orderBy(col("ts_us").desc)
-          spark.table(sink)
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("_entity_type"), col("id"))
+          .orderBy(col("ts_us").desc)
+        Streaming.drainToMemory(r.load(), "append", sink) {
+          _.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
             .drop("rn")
             .orderBy(col("_entity_type"), col("id"))
-            .collect().map(_.toSeq).toSeq
-        } finally {
-          if (q.isActive) q.stop()
-          spark.catalog.dropTempView(sink); ()
-        }
+        }.collect().map(_.toSeq).toSeq
       }
       val http = compactedDrain(Some(fx.endpoint), "http_cdc_e2e")
       val gen = compactedDrain(None, "gen_cdc_e2e")
@@ -363,16 +353,11 @@ class HttpPagedSpec extends SparkSpec {
   test("AvailableNow drain over HTTP == batch read (multi-window, multi-page)") {
     withFixture(Map("events" -> 2500L)) { fx =>
       val ckpt = java.nio.file.Files.createTempDirectory("graft_http_ck").toString
-      val q = spark.readStream.format("graft.sources.PagedEntitySource")
+      StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", 2500L).option("pageSize", 300)
         .option("windowRows", 1000L)
         .option("endpoint", fx.endpoint)
-        .load()
-        .writeStream.format("memory").queryName("http_paged_stream")
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      assert(!q.isActive, "HTTP AvailableNow drain did not terminate")
+        .load(), "http_paged_stream", ckpt, availableNow = true)
       val got = spark.table("http_paged_stream")
         .orderBy(col("id")).collect().map(_.toSeq).toSeq
       val want = genRead(2500L, 300).orderBy(col("id")).collect().map(_.toSeq).toSeq
@@ -395,7 +380,7 @@ class HttpPagedSpec extends SparkSpec {
       // log, not the remote, is the source of progress (the reference's
       // at-least-once window replay, repaired by Spark's checkpoint)
       fx.requests.clear()
-      val q2 = spark.readStream.format("graft.sources.PagedEntitySource")
+      StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", 2500L).option("pageSize", 300)
         .option("windowRows", 1000L)
         .option("endpoint", fx.endpoint)
@@ -406,10 +391,7 @@ class HttpPagedSpec extends SparkSpec {
           assert(n == 0L, s"recovered drain re-emitted $n rows")
           ()
         }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q2.awaitTermination(120000)
-      assert(!q2.isActive, "recovered HTTP drain did not terminate")
+        .option("checkpointLocation", ckpt), availableNow = true)
       val replayReqs = fx.requests.toArray(Array.empty[String]).toSeq
       assert(replayReqs.isEmpty,
         s"a fully-committed restart must not touch the remote, saw $replayReqs")

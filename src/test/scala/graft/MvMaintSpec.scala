@@ -67,7 +67,6 @@ class MvMaintSpec extends SparkSpec {
   }
 
   test("streaming maintenance: foreachBatch merge over micro-batches == batch recompute") {
-    import org.apache.spark.sql.streaming.Trigger
     // stage events as 3 files; maxFilesPerTrigger=1 forces 3 micro-batches
     val in = java.nio.file.Files.createTempDirectory("mv_in").toString
     val raw = Tables.eventsRaw(spark, sf)
@@ -88,15 +87,13 @@ class MvMaintSpec extends SparkSpec {
     val stream = Tables.normalizeTs(
       spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$in/*.parquet"))
-    val q = stream.writeStream
+    graft.engine.Streaming.drain(stream.writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val partial = Materialize.partialAgg(Materialize.measureEvents(b))
         state = Some(Iterate.cut(state.fold(partial)(s =>
           Materialize.mergePartials(s.unionByName(partial)))))
         batches += 1
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+      }, "materialized-view stream")
     assert(batches >= 3, s"expected one micro-batch per staged file, got $batches")
     val got = state.get
     assert(got.exceptAll(fullRollup).count() == 0 &&

@@ -44,10 +44,8 @@ class NearDupStreamSpec extends SparkSpec {
       val stream = spark.readStream.schema(b1.schema)
         .option("maxFilesPerTrigger", "1").parquet(flat)
       val out = Streaming.nearDupStream(stream).toDF()
-      val q = Streaming.runToMemoryUpdate(out, "neardup_test")
-      q.awaitTermination(120000)
-      val hits = spark.table("neardup_test")
-        .select(col("doc_id"), col("dup_of")).distinct()
+      val hits = Streaming.drainToMemory(out, "update", "near-dup stream")(
+          _.select(col("doc_id"), col("dup_of")).distinct())
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(hits.contains((100L, 1L)),
         s"near-dup 100 must be flagged against stored doc 1; got $hits")
@@ -85,9 +83,8 @@ class NearDupStreamSpec extends SparkSpec {
         }
         val stream = spark.readStream.schema(b1.schema)
           .option("maxFilesPerTrigger", "1").parquet(flat)
-        val q = Streaming.runToMemoryUpdate(Streaming.nearDupStream(stream).toDF(), name)
-        q.awaitTermination(120000)
-        spark.table(name).collect()
+        Streaming.drainToMemory(Streaming.nearDupStream(stream).toDF(),
+          "update", name)(identity).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
       }
       val without = run("nd_noreplay", Seq(b1, dup))

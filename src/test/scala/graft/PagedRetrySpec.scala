@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.{PagedMicroBatchStream, PagedStreamOffset}
 
@@ -68,7 +67,7 @@ class PagedRetrySpec extends SparkSpec {
         .option("rows", "2500").option("pageSize", "300").load()
         .orderBy(col("id")).collect().map(_.toSeq).toSeq
       assert(got == clean, "fault-injected drain must be row-identical to a clean drain")
-      val parsed = StreamRuns.offsetJsons(ckpt).map(PagedStreamOffset.fromJson)
+      val parsed = StreamRuns.entityOffsets(ckpt)
       // retry_count climbs 1→2 at pos 600, hits 1 at pos 1300, and every
       // successful poll resets it to 0 (Task.java:224 "reset on success")
       assert(parsed.map(_.retryCount).filter(_ > 0) == Seq(1, 2, 1),
@@ -97,15 +96,11 @@ class PagedRetrySpec extends SparkSpec {
     // 2500-row extent passes that mark, so the window reopens and
     // re-serves [0, 600) — the reference's at-least-once replay
     val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_ck").toString
-    val q = spark.readStream.format("graft.sources.PagedEntitySource")
+    StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", "2500").option("pageSize", "300")
       .option("windowRows", "1000")
       .option("pollFailAt", "600:11")
-      .load()
-      .writeStream.format("memory").queryName("paged_reset")
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+      .load(), "paged_reset", ckpt, availableNow = true)
 
     val landed = spark.table("paged_reset").select(col("id"))
       .collect().map(_.getLong(0)).toSeq
@@ -117,7 +112,7 @@ class PagedRetrySpec extends SparkSpec {
     assert(landed.distinct.sorted == clean,
       "dedup repairs the replay to exactly the clean extent")
 
-    val parsed = StreamRuns.offsetJsons(ckpt).map(PagedStreamOffset.fromJson)
+    val parsed = StreamRuns.entityOffsets(ckpt)
     // retry_count climbed to 10, then the reset wrote the rescheduled
     // parked state (retry_count back to 0, cursor regressed)
     assert(parsed.map(_.retryCount).max == 10)
@@ -127,24 +122,46 @@ class PagedRetrySpec extends SparkSpec {
       isProcessingBatch = false, retryCount = 0, nextScheduledRunId = 1440L))
   }
 
+  test("multi-entity: each entity carries its own poll-failure budget through the reset") {
+    // both entities exhaust the page at pos 600 for 10 polls in a row; the
+    // 11th poll must reset BOTH — one entity's reset must not retire the
+    // outage the other is still counting — and both replay [0, 600)
+    val ckpt = StreamRuns.tempDir("graft_me_ck")
+    StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
+      .option("entities", "a,b").option("rows", "2500").option("pageSize", "300")
+      .option("windowRows", "1000")
+      .option("pollFailAt", "600:11")
+      .load(), "paged_multi_reset", ckpt, availableNow = true)
+    val landed = spark.table("paged_multi_reset")
+      .select(col("_entity_type"), col("id")).collect()
+      .groupBy(_.getString(0)).map { case (e, rs) => e -> rs.map(_.getLong(1)).sorted.toSeq }
+    for (e <- Seq("a", "b"))
+      assert(landed(e) == ((0L until 2500L) ++ (0L until 600L)).sorted,
+        s"entity $e must replay [0, 600) after its reset, got ${landed(e).length} rows")
+    val a = StreamRuns.entityOffsets(ckpt, "a")
+    val b = StreamRuns.entityOffsets(ckpt, "b")
+    val resetAt = a.indexWhere(_.nextScheduledRunId > 0L)
+    assert(resetAt >= 0, s"entity a never reset: $a")
+    assert(b(resetAt) == a(resetAt) && b(resetAt) == PagedStreamOffset("INITIAL_LOAD",
+      0L, 0L, 0L, isProcessingBatch = false, retryCount = 0, nextScheduledRunId = 1440L),
+      s"both entities must reset in the same poll: a=${a(resetAt)} b=${b(resetAt)}")
+  }
+
   test("reset parks the entity when data growth has not passed the reschedule mark") {
     // target 1200 < reschedule mark 1440 ⇒ after the reset the drain ends
     // with the entity parked; a later run with more data resumes it
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pk_ck").toString
     def drain(rows: Long): Seq[Long] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-      val q = spark.readStream.format("graft.sources.PagedEntitySource")
+      StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", rows.toString).option("pageSize", "300")
         .option("windowRows", "1000")
         .option("pollFailAt", "600:11")
         .load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.select(col("id")).collect().foreach(r => got.add(r.getLong(0))); ()
-        }
-        .start()
-      q.awaitTermination(120000)
+        }, availableNow = true)
       import scala.jdk.CollectionConverters._
       got.asScala.map(_.longValue).toSeq
     }

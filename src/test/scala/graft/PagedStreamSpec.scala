@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The paged source's MicroBatchStream: a multi-window, multi-page replay
   * must equal the batch read row-for-row, offsets must carry the
@@ -28,7 +27,6 @@ class PagedStreamSpec extends SparkSpec {
     spark.table(view).orderBy(col("id")).collect().map(_.toSeq).toSeq
 
   test("stream == batch over a multi-window replay; offsets carry the reference state shape") {
-    import graft.sources.PagedStreamOffset
     // per-poll run: under ProcessingTime a micro-batch is still one poll
     val perPollCkpt = StreamRuns.tempDir("graft_pp_ck")
     StreamRuns.drainToMemory(stream(), "paged_stream_polls", perPollCkpt,
@@ -43,11 +41,16 @@ class PagedStreamSpec extends SparkSpec {
     // the 500-row tail window → 10 micro-batches, 10 offset-log entries
     val perPoll = StreamRuns.offsetJsons(perPollCkpt)
     assert(perPoll.length == 10, s"expected 10 micro-batches, got ${perPoll.length}")
-    val parsed = perPoll.map(PagedStreamOffset.fromJson)
-    // reference state shape: all 7 fields present in the serialized form
-    for (field <- Seq("load_mode", "last_processed_id", "batch_end_id",
-        "current_offset", "is_processing_batch", "retry_count", "next_scheduled_run"))
-      assert(perPoll.head.contains(s""""$field""""), s"offset json missing $field: ${perPoll.head}")
+    val parsed = StreamRuns.entityOffsets(perPollCkpt)
+    // reference state shape: the one entity's 7 fields under its key,
+    // the per-entity sourceOffset map (ChargeOverSourceTask.java:409-416)
+    val ents = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(perPoll.head).get("entities")
+    import scala.jdk.CollectionConverters._
+    assert(ents.fieldNames.asScala.toSeq == Seq("events"), s"offset json: ${perPoll.head}")
+    assert(ents.get("events").fieldNames.asScala.toSet == Set("load_mode",
+      "last_processed_id", "batch_end_id", "current_offset", "is_processing_batch",
+      "retry_count", "next_scheduled_run"), s"offset json: ${perPoll.head}")
     // absolute position is strictly monotone, ends at Rows
     val positions = parsed.map(_.pos)
     assert(positions == positions.sorted && positions.distinct.length == positions.length)
@@ -95,17 +98,14 @@ class PagedStreamSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_pg_ck").toString
     def drain(rows: Long): Seq[Long] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-      val q = spark.readStream.format("graft.sources.PagedEntitySource")
+      StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", rows).option("pageSize", PageSize)
         .option("windowRows", WindowRows)
         .load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.select(col("id")).collect().foreach(r => got.add(r.getLong(0))); ()
-        }
-        .start()
-      q.awaitTermination(120000)
+        }, availableNow = true)
       import scala.jdk.CollectionConverters._
       got.asScala.map(_.longValue).toSeq.sorted
     }
@@ -199,15 +199,12 @@ class PagedStreamSpec extends SparkSpec {
         .option("entities", entities).option("pageSize", "300")
         .option("windowRows", "500")
       opts.foreach { case (k, v) => r = r.option(k, v) }
-      val q = r.load()
+      StreamRuns.drain(r.load()
         .writeStream.option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
           b.select(col("_entity_type"), col("id")).collect()
             .foreach(x => got.add((x.getString(0), x.getLong(1)))); ()
-        }
-        .start()
-      q.awaitTermination(120000)
+        }, availableNow = true)
       import scala.jdk.CollectionConverters._
       got.asScala.toSeq.sorted
     }

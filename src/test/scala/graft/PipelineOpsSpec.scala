@@ -239,9 +239,7 @@ class PipelineOpsSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(flat)
     val stream = Tables.normalizeTs(rawStream)
     val out = Anomaly.anomalyStream(Anomaly.anomInEvents(stream)).toDF()
-    val q = graft.engine.Streaming.runToMemoryUpdate(out, "anom_stream")
-    q.awaitTermination(120000)
-    val streamed = spark.table("anom_stream")
+    val streamed = graft.engine.Streaming.drainToMemory(out, "update", "anomaly stream")(identity)
       .select(col("event_id"), col("n_trailing"))
     val batch = Anomaly.qAnomaly(spark, sf)
       .select(col("event_id"), col("n_trailing"))

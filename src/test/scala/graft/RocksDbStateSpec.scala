@@ -25,9 +25,8 @@ class RocksDbStateSpec extends SparkSpec {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       val stream = Streaming.streamEvents(spark, sf, dir, maxFilesPerTrigger = Some(1))
-      val q = Streaming.runToMemoryAppend(Streaming.dedupStream(stream), "rocks_dedup")
-      q.awaitTermination(120000)
-      val got = spark.table("rocks_dedup").count()
+      val got = Streaming.drainToMemory(Streaming.dedupStream(stream),
+        "append", "RocksDB dedup stream")(identity).count()
       val want = Tables.events(spark, sf).select(col("event_id")).distinct().count()
       assert(got == want,
         s"RocksDB-backed dedup produced $got rows, expected $want distinct keys")

@@ -79,7 +79,7 @@ class SourcesSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$in/events.parquet"))
     val stream = Streaming.streamEvents(spark, sf, in)
-    val q = stream.writeStream
+    Streaming.drain(stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         val enveloped = graft.engine.Envelope.routed(
           graft.engine.Envelope.enriched(
@@ -87,10 +87,7 @@ class SourcesSpec extends SparkSpec {
             "events", "INITIAL_LOAD", 0L), "chargeover")
         enveloped.withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
           .write.mode("append").partitionBy("_entity_type", "dt").parquet(out)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(120000)
+      }, "partitioned envelope sink")
     val landed = spark.read.parquet(out)
     assert(landed.count() == Tables.events(spark, sf).count())
     assert(landed.columns.contains("key") && landed.columns.contains("topic"))

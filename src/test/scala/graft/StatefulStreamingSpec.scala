@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.engine.{Streaming, Tables}
 
 /** Arbitrary stateful streaming: flatMapGroupsWithState keeps the latest
@@ -15,9 +16,7 @@ class StatefulStreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = Streaming.streamEvents(spark, sf, dir)
     val out = Streaming.upsertLatest(Streaming.typedEvents(stream)).toDF()
-    val q = Streaming.runToMemoryUpdate(out, "upsert_test")
-    q.awaitTermination(120000)
-    val streamed = spark.table("upsert_test")
+    val streamed = Streaming.drainToMemory(out, "update", "upsert stream")(identity)
       .groupBy(col("user_id"))
       .agg(max(struct(col("lastTsMicros"), col("eventType"))).as("s"))
       .select(col("user_id"), col("s.lastTsMicros").as("ts_us"))
@@ -55,11 +54,11 @@ class StatefulStreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(flat)
     val stream = Tables.normalizeTs(rawStream)
     val out = Streaming.upsertLatest(Streaming.typedEvents(stream)).toDF()
-    val q = Streaming.runToMemoryUpdate(out, "multibatch_test")
-    q.awaitTermination(120000)
-    assert(q.recentProgress.length >= 2, "expected multiple micro-batches")
+    // the drain throws unless both files arrived as micro-batches
+    val landed = Streaming.drainToMemory(out, "update", "multi-batch upsert",
+      minDataBatches = 2)(identity)
     // total seen across final per-key states == total events
-    val finalCounts = spark.table("multibatch_test")
+    val finalCounts = landed
       .groupBy(col("user_id")).agg(max(col("nSeen")).as("n"))
     val total = finalCounts.agg(sum(col("n"))).collect()(0).getLong(0)
     assert(total == e.count(), s"state must have seen every event, got $total")
@@ -88,7 +87,10 @@ class StatefulStreamingSpec extends SparkSpec {
     val out = Streaming.upsertLatestTtl(Streaming.typedEvents(stream), ttlMs = 1L).toDF()
     val perUserCount = Tables.events(spark, sf)
       .select(col("user_id")).distinct().count()
-    val q = Streaming.runToMemoryUpdate(out, "ttl_test")
+    // a TTL'd AvailableNow query may never terminate (below), so
+    // Streaming.drain cannot run it: start it here and stop it explicitly
+    val q = out.writeStream.format("memory").queryName("ttl_test")
+      .outputMode("update").trigger(Trigger.AvailableNow()).start()
     // evictions arrive in no-data batches after the data is done; whether
     // AvailableNow then self-terminates is timing-dependent, so poll the
     // sink for the expected eviction count and stop the query explicitly

@@ -32,9 +32,8 @@ class StreamJoinSpec extends SparkSpec {
     // a full replay; dedup state must absorb it across the batch boundary
     val dir = stageEvents(2)
     val stream = Streaming.streamEvents(spark, sf, dir, maxFilesPerTrigger = Some(1))
-    val q = Streaming.runToMemoryAppend(Streaming.dedupStream(stream), "sj_dedup")
-    q.awaitTermination(120000)
-    val got = spark.table("sj_dedup").count()
+    val got = Streaming.drainToMemory(Streaming.dedupStream(stream),
+      "append", "stream dedup")(identity).count()
     val want = Tables.events(spark, sf).select(col("event_id")).distinct().count()
     assert(got == want, s"deduped stream rows=$got, distinct event ids=$want")
   }
@@ -47,10 +46,8 @@ class StreamJoinSpec extends SparkSpec {
       .withColumn("segment", when(col("n_total") >= 10, "heavy").otherwise("light"))
     val stream = Streaming.streamEvents(spark, sf, dir)
       .select(col("event_id"), col("user_id"), col("ts"))
-    val q = Streaming.runToMemoryAppend(
-      Streaming.enrichStream(stream, dim), "sj_enrich")
-    q.awaitTermination(120000)
-    val streamed = spark.table("sj_enrich")
+    val streamed = Streaming.drainToMemory(
+      Streaming.enrichStream(stream, dim), "append", "stream enrich")(identity)
       .select(col("event_id"), col("user_id"), col("segment"))
     val batch = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"))
@@ -66,10 +63,8 @@ class StreamJoinSpec extends SparkSpec {
     val df = Streaming.streamEvents(spark, sf, dir)
     val sv = df.filter(col("event_type") === "view")
     val sp = df.filter(col("event_type") === "purchase")
-    val q = Streaming.runToMemoryAppend(
-      Streaming.intervalJoin(sv, sp, "leftOuter"), "sj_louter")
-    q.awaitTermination(120000)
-    val streamed = spark.table("sj_louter")
+    val streamed = Streaming.drainToMemory(
+      Streaming.intervalJoin(sv, sp, "leftOuter"), "append", "left outer interval join")(identity)
     val batch = Tables.events(spark, sf)
     val (bv, bp) = (batch.filter(col("event_type") === "view"),
       batch.filter(col("event_type") === "purchase"))
@@ -100,9 +95,8 @@ class StreamJoinSpec extends SparkSpec {
       df.filter(col("event_type") === "view"),
       df.filter(col("event_type") === "purchase"))
     val (sv, sp) = sides(Streaming.streamEvents(spark, sf, dir))
-    val q = Streaming.runToMemoryAppend(Streaming.intervalJoin(sv, sp), "sj_interval")
-    q.awaitTermination(120000)
-    val streamed = spark.table("sj_interval")
+    val streamed = Streaming.drainToMemory(Streaming.intervalJoin(sv, sp),
+      "append", "interval join")(identity)
       .select(col("view_id"), col("purchase_id"))
     val (bv, bp) = sides(Tables.events(spark, sf))
     val batch = Streaming.intervalJoin(bv, bp)

@@ -4,20 +4,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.sources.{MultiPagedStreamOffset, PagedStreamOffset}
+
 /** Drains and offset-log reads shared by the paged stream specs. */
 object StreamRuns {
-  /** Runs `w` to its end: AvailableNow until it terminates, or
+  /** Runs `w` to its end: the engine's AvailableNow drain, or
     * ProcessingTime — where a micro-batch is still one poll — until
     * `processAllAvailable` returns, then stops it. */
   def drain(w: DataStreamWriter[Row], availableNow: Boolean): Unit =
-    if (availableNow) {
-      val q = w.trigger(Trigger.AvailableNow()).start()
-      try {
-        q.awaitTermination(120000)
-        q.exception.foreach(e => throw e)
-        assert(!q.isActive, "AvailableNow drain did not terminate")
-      } finally if (q.isActive) q.stop()
-    } else {
+    if (availableNow) engine.Streaming.drain(w, "paged stream")
+    else {
       val q = w.trigger(Trigger.ProcessingTime(0L)).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -36,6 +32,11 @@ object StreamRuns {
       .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt).toSeq
       .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .split("\n").filter(_.trim.nonEmpty).last)
+
+  /** One entity's state in every offset-log entry, in batch order (a
+    * `rows=` stream keys its one entity as `events`). */
+  def entityOffsets(ckpt: String, entity: String = "events"): Seq[PagedStreamOffset] =
+    offsetJsons(ckpt).map(j => MultiPagedStreamOffset.fromJson(j).entities(entity))
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -36,10 +36,8 @@ class StreamSessionizeSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(flat)
     val stream = Tables.normalizeTs(rawStream)
     val out = Streaming.sessionizeStream(Streaming.sessEvents(stream)).toDF()
-    val q = Streaming.runToMemoryUpdate(out, "sess_stream")
-    q.awaitTermination(120000)
-    val streamed = spark.table("sess_stream")
-      .select(col("event_id"), col("session_seq"))
+    val streamed = Streaming.drainToMemory(out, "update", "sessionize stream")(
+      _.select(col("event_id"), col("session_seq")))
     val batch = graft.engine.Relational.qSessionize(spark, sf)
       .select(col("event_id"), col("session_seq"))
     assert(streamed.count() == batch.count(), "every event labeled exactly once")

@@ -17,9 +17,8 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     val stream = Streaming.streamEvents(spark, sf, dir)
     assert(stream.isStreaming, "file source must be a streaming DataFrame")
-    val q = Streaming.runToMemory(Streaming.tumblingAgg(stream), "stream_tumbling_test")
-    q.awaitTermination(120000)
-    val streamed = spark.table("stream_tumbling_test")
+    val streamed = Streaming.drainToMemory(Streaming.tumblingAgg(stream),
+      "complete", "tumbling stream")(identity)
     val batch = Tables.events(spark, sf)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.engine.{Streaming, Tables}
 
 /** transformWithState upsert: must agree with the flatMapGroupsWithState
@@ -30,9 +31,7 @@ class TransformWithStateSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$dir/events.parquet"))
       val stream = Streaming.streamEvents(spark, sf, dir)
       val out = Streaming.upsertLatestTws(Streaming.typedEvents(stream)).toDF()
-      val q = Streaming.runToMemoryUpdate(out, "tws_test")
-      q.awaitTermination(120000)
-      val streamed = spark.table("tws_test")
+      val streamed = Streaming.drainToMemory(out, "update", "transformWithState upsert")(identity)
         .groupBy(col("user_id"))
         .agg(max(struct(col("lastTsMicros"), col("eventType"))).as("s"))
         .select(col("user_id"), col("s.lastTsMicros").as("ts_us"))
@@ -70,9 +69,12 @@ class TransformWithStateSpec extends SparkSpec {
       val out = Streaming.upsertLatestTws(Streaming.typedEvents(stream),
         ttl = Some(java.time.Duration.ofMillis(1))).toDF()
       // with a TTL the AvailableNow query keeps running no-data batches
-      // after the drain and never terminates: stop it after the wait, so
-      // it does not run on in the shared session under later suites
-      val q = Streaming.runToMemoryUpdate(out, "tws_ttl_test")
+      // after the drain and never terminates, so Streaming.drain (which
+      // throws when a drain does not end) cannot run it: start it here,
+      // wait, and stop it, so it does not run on in the shared session
+      // under later suites
+      val q = out.writeStream.format("memory").queryName("tws_ttl_test")
+        .outputMode("update").trigger(Trigger.AvailableNow()).start()
       try q.awaitTermination(120000) finally q.stop()
       assert(q.recentProgress.length >= 2, "expected two micro-batches")
       val t = spark.table("tws_ttl_test")

@@ -16,11 +16,10 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 
 def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
-    # bound DuckDB and let heavy oracles spill instead of climbing toward
-    # the 80%-of-RAM default with no temp dir (observed at the 100x dir:
-    # an in-memory connection grinds to the cap and dies instead of
-    # spilling)
-    con.sql("SET memory_limit='64GB'")
+    # DuckDB keeps its own host-derived memory limit (80% of RAM); give it
+    # a temp dir so heavy oracles spill at that limit instead of dying
+    # (observed at the 100x dir: an in-memory connection with no temp dir
+    # grinds to the cap and fails instead of spilling)
     con.sql("SET temp_directory='/tmp/duckdb_spill'")
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
