@@ -74,20 +74,6 @@ object Bench {
       System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
     }
 
-  /** Session-lifetime caches would let min-of-N read a prior sample's
-    * result at ~0 s — evict before every timed sample of the query that
-    * OWNS the cache (its consumers keep the warm read: that IS their
-    * declared composed cost). IVF quantizer memo owners: q_sim_ivf_quant
-    * owns the full-corpus training scope, q_ivf_absorb the frozen
-    * standing-corpus one; gc/serve/recall consume the warm quantizer. */
-  private def evictOwnedMemo(name: String, sfDir: String): Unit = name match {
-    case "q_span_dedup"    => graft.engine.LlmOps.evictSpanMemo(sfDir)
-    case "q_bpe_merges"    => graft.engine.LlmOps.evictBpeMemo(sfDir)
-    case "q_sim_ivf_quant" => graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = false)
-    case "q_ivf_absorb"    => graft.engine.Quantize.evictIvfMemo(sfDir, corpusTrain = true)
-    case _ =>
-  }
-
   /** Seconds of one timed sample. Materializes through the query's OWN
     * physical plan (toRdd), not df.count(): count() stacks an Aggregate on
     * top and ColumnPruning then deletes every cardinality-preserving
@@ -95,10 +81,12 @@ object Bench {
     * regex/JSON projections, whole map-side queries — leaving a bare
     * filtered scan (measured: q_asof_join at sf10 "ran" in 47 ms). toRdd
     * computes every output row of the declared plan, rows stay
-    * distributed. A query that throws throws here. */
+    * distributed. A query that throws throws here. The query's own memo
+    * entries are evicted first (min-of-N would read a prior sample's
+    * value); its consumers keep the warm read, their declared cost. */
   private def once(spark: SparkSession, name: String,
       fn: (SparkSession, String) => DataFrame, sfDir: String): Double = {
-    evictOwnedMemo(name, sfDir)
+    graft.engine.Memo.evict(name)
     val t0 = System.nanoTime()
     fn(spark, sfDir).queryExecution.toRdd.count()
     (System.nanoTime() - t0) / 1e9

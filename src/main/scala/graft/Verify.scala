@@ -11,6 +11,11 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").map(_.trim).toSet))
+      case _ => System.err.println("usage: Verify <sfDir> <outDir> [q_a,q_b,...]"); sys.exit(1)
+    }
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains).sorted
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown queries: ${unknown.mkString(", ")}"); sys.exit(1)
     }
     val spark = Sessions.local(Sessions.cpus)
     new java.io.File(outDir).mkdirs()

@@ -280,20 +280,14 @@ object LlmOps {
     merges.toDF("rank", "sym_l", "sym_r", "pair_count").orderBy(col("rank"))
   }
 
-  /** Session-lifetime memo of the trained merge list per corpus dir —
-    * the span-memo discipline applied to the tokenizer pair:
-    * q_bpe_merges and q_bpe_encode compose in one sweep, and without
-    * sharing, the per-round argmax training would run TWICE. The cached
-    * value is BpeRounds driver-side tuples — never corpus-sized. Keyed
-    * by sfDir (testdata dirs are immutable within a session); synthetic
-    * per-test corpora use `bpeMerges`/`bpeEncode` directly and never
-    * touch the memo. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, String, String, Long)]]
-
+  /** The trained merge list, memoized ([[Memo]]) because q_bpe_merges
+    * and q_bpe_encode compose in one sweep and would otherwise train
+    * twice; the value is BpeRounds driver-side tuples. q_bpe_merges owns
+    * it and pays the training; q_bpe_encode reads it warm. */
   private def trainedMerges(spark: SparkSession,
       sfDir: String): Seq[(Int, String, String, Long)] =
-    bpeMemo.computeIfAbsent(sfDir, _ => {
+    Memo(spark, "bpe_merges", Seq(s"$sfDir/documents.parquet"),
+        owner = Some("q_bpe_merges")) {
       val (merges, cur) = bpeTrain(Tables.documents(spark, sfDir))
       cur.unpersist(blocking = false)
       // Runtime precondition guard (the computeSpanTop20 discipline): the
@@ -308,14 +302,7 @@ object LlmOps {
           s"$BpeRounds merges — declared-query precondition violated " +
           "(the oracle's unrolled rounds assume a full merge list)")
       merges
-    })
-
-  /** Bench-honesty hook (mirrors evictSpanMemo): a timed q_bpe_merges
-    * sample pays real training; q_bpe_encode keeps the warm memo — its
-    * declared cost is encoding given the learned merges. */
-  private[graft] def evictBpeMemo(sfDir: String): Unit = {
-    bpeMemo.remove(sfDir); ()
-  }
+    }
 
   /** Run the merge loop; returns the realized merges AND the final
     * per-word symbol encoding (`cur`  U+0001-joined, `cnt`) — the
@@ -995,29 +982,15 @@ object LlmOps {
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
   }
 
-  /** Session-lifetime memo of the k-bounded span-dedup result per corpus
-    * dir: q_span_dedup and q_span_scrub compose in one sweep, and without
-    * sharing, pass 1's corpus-sized distinct+shuffle would run TWICE
-    * (measured 1.26 s + 2.18 s at sf0.1). The cached value is 20 rows +
-    * a schema — k-bounded, never corpus-sized. Keyed by sfDir: testdata
-    * dirs are immutable within a session (the driver's contract); synthetic
-    * per-test corpora go through `spanScrub` directly and never touch the
-    * memo. */
-  private val spanTopMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]
-
+  /** The span-dedup top-20 (20 rows + a schema), memoized ([[Memo]])
+    * because q_span_dedup and q_span_scrub compose in one sweep and would
+    * otherwise run pass 1's corpus-sized distinct+shuffle twice (1.26 s +
+    * 2.18 s at sf0.1). q_span_dedup owns it and pays the two passes;
+    * q_span_scrub reads it warm. */
   private def spanTop20(spark: SparkSession, sfDir: String):
       (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) =
-    spanTopMemo.computeIfAbsent(sfDir, _ => computeSpanTop20(spark, sfDir))
-
-  /** Bench-honesty hook: evict the memo so a timed q_span_dedup sample
-    * pays the real two-pass cost instead of reading a prior sample's
-    * cache (min-of-N would otherwise report the ~0 s cached read).
-    * q_span_scrub deliberately keeps the warm memo — its declared cost
-    * is the scrub pass given the report. */
-  private[graft] def evictSpanMemo(sfDir: String): Unit = {
-    spanTopMemo.remove(sfDir); ()
-  }
+    Memo(spark, "span_top20", Seq(s"$sfDir/documents.parquet"),
+      owner = Some("q_span_dedup"))(computeSpanTop20(spark, sfDir))
 
   private def computeSpanTop20(spark: SparkSession, sfDir: String):
       (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
@@ -1526,28 +1499,13 @@ object LlmOps {
     * independently rewritable unit, which is what lets the tiered
     * maintenance pass ([[compactIndexTiered]]) fold small generations
     * without touching the compacted base's bytes. */
-  /** Run two INDEPENDENT Spark actions concurrently (guide §2.6: actions
-    * are only sequential because driver code calls them sequentially —
-    * concurrent jobs back-fill executors the other job's tail leaves
-    * idle). The index maintenance passes all touch a digests table and a
-    * buckets table that share no state, and at test scale each write is
-    * latency- (not throughput-) bound, so overlapping them roughly halves
-    * the pass's wall-clock. The second action runs on a plain thread; its
-    * failure is rethrown on the caller's thread after both finish. */
-  private[graft] def inParallel(a: => Unit, b: => Unit): Unit = {
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val t = new Thread(() => try b catch { case x: Throwable => err.set(x) })
-    t.setDaemon(true)
-    t.start()
-    try a finally t.join()
-    if (err.get != null) throw err.get
-  }
-
-  /** [[inParallel]] for N independent actions: the first runs on the
-    * caller's thread, the rest on daemon threads; the first failure (in
-    * argument order) is rethrown after ALL finish — same contract as the
-    * 2-ary version, N-ary because the BM25 index writes three tables per
-    * generation. */
+  /** Run INDEPENDENT Spark actions concurrently (guide §2.6: concurrent
+    * jobs back-fill executors the other job's tail leaves idle). Index
+    * maintenance writes tables that share no state, and at test scale
+    * each write is latency-bound, so overlapping them roughly halves the
+    * pass. The first action runs on the caller's thread, the rest on
+    * daemon threads; after ALL finish, the first failure (in argument
+    * order) is rethrown with every other one added as suppressed. */
   private[graft] def inParallelAll(actions: (() => Unit)*): Unit = {
     if (actions.isEmpty) return
     val errs = new Array[Throwable](actions.size)
@@ -1574,14 +1532,14 @@ object LlmOps {
     // it, every input split writes its own per-bucket files (a fresh save
     // of a 16-file table would emit 16 files again — no compaction).
     // The two tables are independent — write them concurrently.
-    inParallel(
-      idx.digests.repartition(IndexBuckets, col("dg"))
+    inParallelAll(
+      () => idx.digests.repartition(IndexBuckets, col("dg"))
         .withColumn("gen", lit(gen))
         .write.format("parquet").mode("overwrite")
         .partitionBy("gen")
         .bucketBy(IndexBuckets, "dg").sortBy("dg")
         .option("path", s"$dir/digests").saveAsTable(s"${name}_digests"),
-      idx.buckets.repartition(IndexBuckets, col("band"), col("band_key"))
+      () => idx.buckets.repartition(IndexBuckets, col("band"), col("band_key"))
         .withColumn("gen", lit(gen))
         .write.format("parquet").mode("overwrite")
         .partitionBy("gen")
@@ -1628,8 +1586,8 @@ object LlmOps {
     // host reads concurrent 3.02/3.57 s vs sequential 3.96/4.10 s — the
     // overlap wins cold too; the 6.65 s driver sample was host drift,
     // consistent with the 100x dir IMPROVING under the same commit.)
-    inParallel(
-      {
+    inParallelAll(
+      () => {
         batch.select(sha2(col("text"), 256).as("dg")).distinct()
           .join(spark.table(s"${name}_digests"), Seq("dg"), "left_anti")
           .repartition(IndexBuckets, col("dg"))
@@ -1646,7 +1604,7 @@ object LlmOps {
         // maintenance visible to the next reader.
         spark.catalog.refreshTable(s"${name}_digests")
       },
-      {
+      () => {
         bandKeys(batch).select(col("band"), col("band_key")).distinct()
           .join(spark.table(s"${name}_buckets"), Seq("band", "band_key"), "left_anti")
           .repartition(IndexBuckets, col("band"), col("band_key"))

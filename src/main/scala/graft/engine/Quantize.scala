@@ -141,26 +141,14 @@ object Quantize {
   private val ServeBuckets = 8
   private val ivfServeRuns = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Session-lifetime memo of the trained coarse quantizer per (corpus
-    * dir, training scope) — the span/BPE memo discipline applied to
-    * `ivfQuant`: the six IVF queries share at most TWO distinct
-    * trainings (full-corpus for q_sim_ivf_quant/q_ann_recall;
-    * standing-corpus for absorb/gc/serve), yet each sweep used to re-run
-    * quantization + the Lloyd rounds five times. The cached value is
-    * ≤ NCells driver-side (cid, code-vector) tuples — never
-    * corpus-sized. Keyed by (sfDir, corpusTrain); testdata dirs are
-    * immutable within a session. */
-  private val ivfCentMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Boolean), Seq[(Long, Seq[Int])]]
+  /** The IVF quantizer's owner per training scope: its timed samples pay
+    * the Lloyd rounds; gc/serve/recall read the quantizer warm. */
+  private def ivfOwner(corpusTrain: Boolean): String =
+    if (corpusTrain) "q_ivf_absorb" else "q_sim_ivf_quant"
 
-  /** Bench-honesty hook (mirrors evictBpeMemo): the scope's OWNER —
-    * q_sim_ivf_quant for the full-corpus quantizer, q_ivf_absorb for the
-    * frozen standing-corpus one — pays real training under bench
-    * eviction; gc/serve/recall read the memo, their declared cost being
-    * what they do ON TOP of an already-trained quantizer. */
-  private[graft] def evictIvfMemo(sfDir: String, corpusTrain: Boolean): Unit = {
-    ivfCentMemo.remove((sfDir, corpusTrain)); ()
-  }
+  /** Kept for the benchmark harness, which evicts before each sample. */
+  private[graft] def evictIvfMemo(sfDir: String, corpusTrain: Boolean): Unit =
+    Memo.evict(ivfOwner(corpusTrain))
 
   /** Persist postings bucketed by cell id and return the bucket-pruned
     * scan for the probed cells (literal IN on the bucket column →
@@ -228,13 +216,16 @@ object Quantize {
   private def collectCents(c: DataFrame): Seq[(Long, Seq[Int])] =
     c.collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSeq.sortBy(_._1)
 
-  /** Trained centroids from the memo when warm; the cold path runs the
-    * init + Lloyd rounds over `q8`, centroid state k-bounded driver-side
+  /** Trained centroids, memoized ([[Memo]]) per training scope because
+    * the six IVF queries share at most two trainings; the value is
+    * ≤ NCells (cid, code-vector) tuples. The cold path runs the init +
+    * Lloyd rounds over `q8`, centroid state k-bounded driver-side
     * between rounds (integer-exact arithmetic, so the collected values
     * are bit-identical to the former all-DataFrame loop's). */
   private def trainedCentroids(sfDir: String, corpusTrain: Boolean,
       q8: DataFrame): Seq[(Long, Seq[Int])] =
-    ivfCentMemo.computeIfAbsent((sfDir, corpusTrain), _ => {
+    Memo(q8.sparkSession, "ivf_centroids", Seq(s"$sfDir/embeddings.parquet"),
+        owner = Some(ivfOwner(corpusTrain))) {
       val train = if (corpusTrain) q8.filter(col("vec_id") % 10 < 8) else q8
       var c = collectCents(
         if (corpusTrain)
@@ -246,7 +237,7 @@ object Quantize {
           .select(col("vec_id").as("cid"), col("qv").as("cv")))
       for (_ <- 1 to Rounds) c = collectCents(updateWith(c, train))
       c
-    })
+    }
 
   /** The serving tail shared by the lifecycle queries and the streaming
     * drain: rank each query's NProbe nearest cells (broadcast centroid

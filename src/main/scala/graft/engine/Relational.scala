@@ -426,8 +426,7 @@ object Relational {
     // — so a 1-split plan serializes ~1.5 s of CPU on one core (measured
     // isolated at sf0.1: stage wall 1.66 s, 1 task). The build side stays
     // a plain scan; the group-by exchange downstream is unchanged.
-    val e1 = Tables.rebalancedMemo(spark, Tables.events(spark, sfDir),
-      s"$sfDir/events.parquet#normalized").alias("e1")
+    val e1 = Tables.rebalancedMemo(spark, Tables.events(spark, sfDir)).alias("e1")
     val e2 = Tables.events(spark, sfDir)
       .select(col("user_id").as("u2"), col("ts").as("ts2"),
         col("event_id").as("id2")).alias("e2")

@@ -865,10 +865,10 @@ object Streaming {
             // retried probe's maxGenExclusive = id still fences out the
             // batch's own generation, and the b$id rewrite is
             // mode=overwrite.
-            LlmOps.inParallel(
-              LlmOps.probeDeltaUnsorted(asOf, batch)
+            LlmOps.inParallelAll(
+              () => LlmOps.probeDeltaUnsorted(asOf, batch)
                 .write.mode("overwrite").parquet(s"$outDir/b$id"),
-              LlmOps.absorbInto(spark, idxName, batch, gen = id))
+              () => LlmOps.absorbInto(spark, idxName, batch, gen = id))
             if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
               // tiered maintenance, in place: fold only the small
               // generations (never this batch's own gen = id — a retried

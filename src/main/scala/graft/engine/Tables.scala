@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -18,24 +19,15 @@ import org.apache.spark.sql.types.LongType
   * one parquet table under the scale-factor directory.
   */
 object Tables {
-  /** Schema memo for the fixed entity tables: `spark.read.parquet` infers
-    * the schema from footers on EVERY call (~90 ms driver-side at sf0.1 —
-    * a footer-reading pass that grows with the file count at scale), and
-    * the bench constructs each query's frame fresh per timed sample, so
-    * every query paid inference once per table per sample. A production
-    * engine reads these schemas from its catalog exactly once; the memo is
-    * that catalog entry (metadata only — never row data), keyed by path
-    * plus the one conf that changes what inference returns (nanosAsLong
-    * flips TIMESTAMP(NANOS) columns between LongType and an error). */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]
-
-  /** One entity == one table (reference: ChargeOverSourceTask.java:84-90). */
+  /** One entity == one table (reference: ChargeOverSourceTask.java:84-90).
+    * The schema is memoized ([[Memo]]): inference reads parquet footers on
+    * every call (~90 ms at sf0.1). nanosAsLong is in the key: it flips
+    * TIMESTAMP(NANOS) columns between LongType and an error. */
   def load(spark: SparkSession, sfDir: String, entity: String): DataFrame = {
     val path = s"$sfDir/$entity.parquet"
-    val key = path + "#" +
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse("")
-    val sch = schemaMemo.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+    val sch = Memo(spark, "schema", Seq(path),
+      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong"))(
+      spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }
 
@@ -97,25 +89,25 @@ object Tables {
     * the raw rows — costing the corpus' compressed size, the cheapest
     * stage these pipelines have — buys back full parallelism. Guarded: a
     * production corpus (many files/row groups ≥ cluster cores) plans
-    * enough splits and the rebalance is a no-op. */
-  /** The split-count probe (`df.rdd.getNumPartitions` plans the scan to
-    * RDDs — ~40 ms driver-side per call) is memoized per (caller key,
-    * cores): split planning of a fixed file set under a fixed session is
-    * deterministic, so re-deriving it on every query construction is pure
-    * dispatch overhead. */
-  private val splitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-  private[engine] def rebalancedMemo(s: SparkSession, df: DataFrame, key: String): DataFrame = {
+    * enough splits and the rebalance is a no-op. The split-count probe
+    * (~40 ms driver-side) is memoized ([[Memo]]) under the scanned paths
+    * and the settings split planning reads. */
+  private[engine] def rebalancedMemo(s: SparkSession, df: DataFrame): DataFrame = {
     val cores = s.sparkContext.defaultParallelism
-    val few = splitMemo.computeIfAbsent(s"$key#$cores",
-      _ => df.rdd.getNumPartitions * 2 < cores)
+    val c = s.sessionState.conf
+    val paths = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation }.collect {
+      case r: HadoopFsRelation => r.location.rootPaths.map(_.toString) }.flatten
+    val few = Memo(s, "split", paths,
+      (cores, c.filesMaxPartitionBytes, c.filesOpenCostInBytes))(
+      df.rdd.getNumPartitions * 2 < cores)
     if (few) df.repartition(cores) else df
   }
 
   def documents(s: SparkSession, d: String): DataFrame =
-    rebalancedMemo(s, load(s, d, "documents"), s"$d/documents.parquet")
+    rebalancedMemo(s, load(s, d, "documents"))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    rebalancedMemo(s, load(s, d, "embeddings"), s"$d/embeddings.parquet")
+    rebalancedMemo(s, load(s, d, "embeddings"))
 
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB-oracle differential check.
 
-Usage: python3 tools/diffcheck.py <sfDir> <verifyOutDir>
+Usage: python3 tools/diffcheck.py <sfDir> <verifyOutDir> [q_a q_b ...]
 
 Registers each testdata parquet as a DuckDB view, runs every oracle SQL from
 oracle_sql.json, and compares with the Spark-written parquet (columns sorted
@@ -25,6 +25,11 @@ def main(sf_dir, out_dir, only=None):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     if only:
+        dumped = {d.split("/")[-1] for d in glob.glob(f"{out_dir}/q_*")}
+        unknown = sorted(only - oracle.keys() - dumped)
+        if unknown:
+            print(f"UNKNOWN QUERIES: {', '.join(unknown)}")
+            return 1
         oracle = {k: v for k, v in oracle.items() if k in only}
     fails = []
     for name, sql in sorted(oracle.items()):
