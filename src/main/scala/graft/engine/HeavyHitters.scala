@@ -205,8 +205,6 @@ object HeavyHitters {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq, 1), top.schema)
   }
 
-  private val streamHeavyRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** q_stream_heavy: the heavy-hitters STREAMING twin, declared — the
     * corpus text arrives as a file-source stream in multiple micro-batches
     * (staged as 4 parquet files, maxFilesPerTrigger=1), each batch's
@@ -217,9 +215,7 @@ object HeavyHitters {
     * top-10 is batching-invariant, so a hash match proves the per-batch
     * summarize → merge → recount path loses nothing across triggers. */
   def qStreamHeavy(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(
-      s"graft_hh_stream_${streamHeavyRuns.incrementAndGet()}").toString
-    try {
+    GenTables.scratch(spark, "graft_hh_stream") { (_, dir) =>
       Tables.documents(spark, sfDir).select(col("text"))
         .repartition(4).write.mode("overwrite").parquet(dir)
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -234,7 +230,7 @@ object HeavyHitters {
         running.summary, M, K)
       // safe to delete here: the returned frame reads sfDir + the driver-
       // held summary, never the staged stream dir — keep it that way
-    } finally Streaming.deleteDirTree(dir)
+    }
   }
 
   /** The claim in SQL: plain exact top-k with the same tiebreak. */

@@ -769,44 +769,41 @@ object LlmOps {
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  private def bm25Tables(name: String): Seq[String] =
-    bm25IndexTables(name).map(_._1)
-
-  /** The three gen-partitioned tables behind a lexical index with their
-    * bucket keys — the table list [[compactTieredTables]] folds as one
-    * pass, the same size-tiered schedule the digest index runs. Folding
+  /** The three gen-partitioned tables behind a lexical index, as
+    * `suffix -> bucket keys` — the table list
+    * [[GenTables.compactTieredTables]] folds as one pass, the same
+    * size-tiered schedule the digest index runs. Folding
     * is semantically free here: every row is unique across generations —
     * docs and postings because the docs fence keeps gens doc-disjoint,
     * tdf by its `src` column — so the fold's distinct() collapses
     * nothing, and the merged df (summed at query time) never changes. */
-  private[graft] def bm25IndexTables(name: String): Seq[(String, Seq[String])] =
-    Seq(s"${name}_bm_docs" -> Seq("doc_id"),
-      s"${name}_bm_postings" -> Seq("term"),
-      s"${name}_bm_tdf" -> Seq("term"))
+  private[graft] val bm25IndexTables: Seq[(String, Seq[String])] =
+    Seq("bm_docs" -> Seq("doc_id"), "bm_postings" -> Seq("term"),
+      "bm_tdf" -> Seq("term"))
 
   /** Build gen 0 of the lexical index from a corpus. */
   def saveBm25Index(spark: SparkSession, corpus: DataFrame, dir: String,
       name: String, gen: Long = 0L): Unit = {
     val tf = bm25Tf(corpus)
-    writeBm25Gen(spark, tf, dir, name, gen, overwrite = true)
+    writeBm25Gen(spark, tf, Some(dir), name, gen)
   }
 
   /** Absorb a batch: anti-join its doc ids against the docs fence (a
     * re-absorbed batch appends nothing), then append the survivors'
     * docs/postings/df under `gen`. Appends carry the bucket spec, so the
-    * layout survives maintenance — and [[compactTieredTables]] can fold
-    * the three tables as one pass, the same tiered schedule the digest
-    * index runs in-loop. */
+    * layout survives maintenance — and [[GenTables.compactTieredTables]]
+    * can fold the three tables as one pass, the same tiered schedule the
+    * digest index runs in-loop. */
   def absorbIntoBm25(spark: SparkSession, name: String, batch: DataFrame,
       gen: Long = 1L): Unit = {
     val fresh = batch.join(spark.table(s"${name}_bm_docs"),
       Seq("doc_id"), "left_anti")
-    writeBm25Gen(spark, bm25Tf(fresh), dir = null, name, gen, overwrite = false)
+    writeBm25Gen(spark, bm25Tf(fresh), dir = None, name, gen)
   }
 
-  private def writeBm25Gen(spark: SparkSession, tf: DataFrame, dir: String,
-      name: String, gen: Long, overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
+  /** `dir` as in [[GenTables.write]]: `Some` builds, `None` appends. */
+  private def writeBm25Gen(spark: SparkSession, tf: DataFrame,
+      dir: Option[String], name: String, gen: Long): Unit = {
     // eager localCheckpoint, not persist: the absorb's tf plan reads the
     // docs fence, and the first saveAsTable APPENDS to that same fence —
     // which invalidates every cached plan referencing it, so a mere
@@ -823,68 +820,43 @@ object LlmOps {
       // byte-identical whether the three append jobs run or not — skip
       // them (and their refreshes). isEmpty on the materialized
       // checkpoint is a limit-1 local read, vs 3 write jobs + 3 refreshes.
-      if (!overwrite && tfp.isEmpty) return
-      def write(df: DataFrame, suffix: String, buckets: Seq[String]): Unit = {
-        val w = df.withColumn("gen", lit(gen))
-          .repartition(IndexBuckets, buckets.map(col): _*)
-          .write.format("parquet").mode(mode)
-          .partitionBy("gen")
-          .bucketBy(IndexBuckets, buckets.head, buckets.tail: _*)
-          .sortBy(buckets.head, buckets.tail: _*)
-        (if (overwrite) w.option("path", s"$dir/$suffix") else w)
-          .saveAsTable(s"${name}_$suffix")
-        // appends: per-table visibility refresh on the writer's own
-        // thread (same discipline as absorbInto) — saveAsTable appends
-        // don't reliably invalidate the session relation cache
-        if (!overwrite) spark.catalog.refreshTable(s"${name}_$suffix")
-      }
+      if (dir.isEmpty && tfp.isEmpty) return
+      val keys = bm25IndexTables.toMap
+      def write(df: DataFrame, suffix: String): Unit =
+        GenTables.write(spark, name, suffix, keys(suffix), df, gen, dir)
       // the three tables derive from the one pinned tf snapshot and share
       // no other state — write them concurrently (guide §2.6), like the
       // digest index's paired digests/buckets writes
       inParallelAll(
-        () => write(tfp.select(col("doc_id"), col("dl")).distinct(),
-          "bm_docs", Seq("doc_id")),
+        () => write(tfp.select(col("doc_id"), col("dl")).distinct(), "bm_docs"),
         () => write(tfp.select(col("term"), col("doc_id"), col("tf"), col("dl")),
-          "bm_postings", Seq("term")),
+          "bm_postings"),
         // `src` (the generation that produced the row, as DATA, not the
         // partition column) makes tdf rows globally unique: two generations
         // can hold an identical (term, df) pair, and the tiered fold's
         // distinct() would collapse them — halving the merged df. src never
         // repeats across absorbs, so rows survive any fold intact.
         () => write(tfp.groupBy(col("term")).agg(count(lit(1)).as("df"))
-          .withColumn("src", lit(gen)),
-          "bm_tdf", Seq("term")))
+          .withColumn("src", lit(gen)), "bm_tdf"))
     } finally { tfp.unpersist(blocking = false); () }
   }
 
-  def dropBm25Index(spark: SparkSession, name: String): Unit = {
-    bm25Tables(name).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    ()
-  }
+  def dropBm25Index(spark: SparkSession, name: String): Unit =
+    GenTables.drop(spark, bm25IndexTables.map { case (suffix, _) => s"${name}_$suffix" })
 
   /** Top-10 per declared query over the MAINTAINED index: postings
     * bucket-pruned to the query vocabulary, df merged across generations
     * by sum, (N, Σdl) from the docs fence.
     *
-    * Runs on its own session clone with autoBucketedScan pinned OFF —
-    * the same per-plan conf scope as the IVF serve read (Quantize's
-    * ivfQuant): nothing downstream "consumes" the term bucketing (the
-    * joins are broadcast, the aggregate regroups by (query_id, doc_id)),
-    * so DisableUnnecessaryBucketedScan would strip the bucketed scan and
-    * take the `term IN (...)` BUCKET PRUNING — the reason the postings
-    * are term-bucketed — with it. */
+    * Runs on a [[GenTables.bucketPinned]] session, like the IVF serve
+    * read: nothing downstream "consumes" the term bucketing (the joins
+    * are broadcast, the aggregate regroups by (query_id, doc_id)), and
+    * the `term IN (...)` bucket pruning is why the postings are
+    * term-bucketed. */
   def bm25TopkFromIndex(caller: SparkSession, name: String): DataFrame = {
-    val spark = caller.newSession()
-    caller.conf.getAll.foreach { case (k, v) =>
-      try spark.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    val spark = GenTables.bucketPinned(caller)
     val allTerms = bm25Queries.flatMap(_._2).distinct
-    // same always-true partition-listing trick as loadBucketedIndex: real
-    // size stats instead of unknown-huge, so the small sides broadcast
-    def t(table: String) = spark.table(table)
-      .filter(col("gen") >= Long.MinValue).drop("gen")
+    def t(table: String) = GenTables.asOf(spark, table, None)
     val stats = t(s"${name}_bm_docs")
       .agg(count(lit(1)).as("n"), sum(col("dl")).as("s"))
     val dft = t(s"${name}_bm_tdf")
@@ -895,8 +867,6 @@ object LlmOps {
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
     bm25Rank(spark, matched, dft, stats)
   }
-
-  private val bm25AbsorbRuns = new java.util.concurrent.atomic.AtomicInteger
 
   /** q_bm25_absorb: the lexical-index LIFECYCLE query — build the index
     * from 60% of the corpus, absorb the remaining 40% as a batch (df
@@ -909,19 +879,13 @@ object LlmOps {
     val corpus = docs.filter(col("doc_id") % 10 < 6)
     val batch = docs.filter(col("doc_id") % 10 >= 6)
       .select(col("doc_id"), col("text"))
-    val n = bm25AbsorbRuns.incrementAndGet()
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_bm25_$n").toString
-    val name = s"graft_bm25_idx_$n"
-    try {
+    GenTables.scratch(spark, "graft_bm25") { (name, dir) =>
       saveBm25Index(spark, corpus, dir, name)
       absorbIntoBm25(spark, name, batch)
       // re-absorb of the same batch: the docs fence must make it a no-op
       // (the declared idempotence contract, exercised on the hot path)
       absorbIntoBm25(spark, name, batch, gen = 2L)
       Iterate.cut(bm25TopkFromIndex(spark, name))
-    } finally {
-      dropBm25Index(spark, name)
-      Streaming.deleteDirTree(dir)
     }
   }
 
@@ -1474,31 +1438,6 @@ object LlmOps {
     index.buckets.unionByName(
       bandKeys(batch).select(col("band"), col("band_key"))).distinct())
 
-  /** Buckets for the ON-DISK index tables: the probe side shuffles to this
-    * count, the index side never reshuffles (that is the point). 8 suits
-    * the test scales; at 100 TB this is thousands — the contract (bucket on
-    * the join key, sort within buckets) is scale-independent. */
-  private val IndexBuckets = 8
-
-  /** Persist the index as BUCKETED tables (bucketBy on the probe join
-    * keys, external data under `dir`): repeated ingests read the index
-    * back with its layout intact — zero exchange on the index side of
-    * every probe semi-join (PlanSpec pins the no-shuffle property) —
-    * instead of reshuffling a recomputed frame per run. Every row carries
-    * a `gen` column (the ingest generation that contributed it; the
-    * initial corpus is the caller's `gen`): a probe that filters
-    * `gen < g` sees exactly the index as of generation g, which is what
-    * makes a retried classify-then-absorb micro-batch DETERMINISTIC —
-    * re-classifying batch g never sees its own absorbed rows.
-    *
-    * `gen` is a hive PARTITION column (partitionBy + bucketBy compose:
-    * the bucket layout applies within every partition and the scan's
-    * output partitioning is still the bucket hash): the as-of filter
-    * becomes partition PRUNING — an old-generation probe never opens
-    * newer files — and, the point of the layout, a generation is an
-    * independently rewritable unit, which is what lets the tiered
-    * maintenance pass ([[compactIndexTiered]]) fold small generations
-    * without touching the compacted base's bytes. */
   /** Run INDEPENDENT Spark actions concurrently (guide §2.6: concurrent
     * jobs back-fill executors the other job's tail leaves idle). Index
     * maintenance writes tables that share no state, and at test scale
@@ -1524,46 +1463,33 @@ object LlmOps {
     }
   }
 
+  /** The two gen-partitioned tables behind a bucketed text index, as
+    * `suffix -> bucket/sort keys` (the probe join keys) — the table list
+    * [[GenTables.compactTieredTables]] maintains as one pass. */
+  private[graft] val indexTables: Seq[(String, Seq[String])] =
+    Seq("digests" -> Seq("dg"), "buckets" -> Seq("band", "band_key"))
+
+  /** Persist the index as [[GenTables]] tables under `dir`, every row in
+    * generation `gen` (the initial corpus is the caller's `gen`): repeated
+    * ingests read the index back with its layout intact instead of
+    * reshuffling a recomputed frame per run, and a probe that filters
+    * `gen < g` sees exactly the index as of generation g — re-classifying
+    * batch g never sees its own absorbed rows. The two tables are
+    * independent — write them concurrently. */
   def saveBucketedIndex(spark: SparkSession, idx: CorpusIndex,
       dir: String, name: String, gen: Long = 0L): Unit = {
-    // repartition ON THE BUCKET KEYS first: repartition's HashPartitioning
-    // is the same murmur3 routing the bucketed writer uses, so each write
-    // task holds exactly one bucket's rows → ONE file per bucket. Without
-    // it, every input split writes its own per-bucket files (a fresh save
-    // of a 16-file table would emit 16 files again — no compaction).
-    // The two tables are independent — write them concurrently.
     inParallelAll(
-      () => idx.digests.repartition(IndexBuckets, col("dg"))
-        .withColumn("gen", lit(gen))
-        .write.format("parquet").mode("overwrite")
-        .partitionBy("gen")
-        .bucketBy(IndexBuckets, "dg").sortBy("dg")
-        .option("path", s"$dir/digests").saveAsTable(s"${name}_digests"),
-      () => idx.buckets.repartition(IndexBuckets, col("band"), col("band_key"))
-        .withColumn("gen", lit(gen))
-        .write.format("parquet").mode("overwrite")
-        .partitionBy("gen")
-        .bucketBy(IndexBuckets, "band", "band_key").sortBy("band", "band_key")
-        .option("path", s"$dir/buckets").saveAsTable(s"${name}_buckets"))
+      () => GenTables.write(spark, name, "digests", Seq("dg"), idx.digests, gen, Some(dir)),
+      () => GenTables.write(spark, name, "buckets", Seq("band", "band_key"),
+        idx.buckets, gen, Some(dir)))
   }
 
   /** Read the index back; `maxGenExclusive` restricts to generations
-    * `gen < g` (the as-of view). The gen filter composes with the
-    * bucketed layout — filters don't disturb output partitioning, so the
-    * probe's exchange-free property holds for any as-of view. */
+    * `gen < g` (the as-of view, [[GenTables.asOf]]). */
   def loadBucketedIndex(spark: SparkSession, name: String,
-      maxGenExclusive: Option[Long] = None): CorpusIndex = {
-    def view(t: String) = maxGenExclusive match {
-      case Some(g) => spark.table(t).filter(col("gen") < g).drop("gen")
-      // the always-true partition predicate prunes nothing but forces the
-      // partition listing, so the relation carries REAL size stats instead
-      // of defaultSizeInBytes — without it a partitioned catalog table
-      // reports unknown-huge and every small-index join needlessly gives
-      // up broadcast for shuffled SMJ
-      case None    => spark.table(t).filter(col("gen") >= Long.MinValue).drop("gen")
-    }
-    CorpusIndex(view(s"${name}_digests"), view(s"${name}_buckets"))
-  }
+      maxGenExclusive: Option[Long] = None): CorpusIndex =
+    CorpusIndex(GenTables.asOf(spark, s"${name}_digests", maxGenExclusive),
+      GenTables.asOf(spark, s"${name}_buckets", maxGenExclusive))
 
   /** `absorb` against the on-disk tables: append the batch's NEW digests
     * and buckets under generation `gen` (anti-join keeps the index tight —
@@ -1576,10 +1502,6 @@ object LlmOps {
     * LATER generation once the retry completes. */
   def absorbInto(spark: SparkSession, name: String, batch: DataFrame,
       gen: Long = 1L): Unit = {
-    // repartition on the bucket keys (same rationale as the save): one
-    // file per bucket per generation, instead of every anti-join output
-    // task writing its own per-bucket slivers — the append's file count
-    // is bounded by the bucket count, not the shuffle-partition count.
     // The digests append and the buckets append touch disjoint tables —
     // run them concurrently, each with its own visibility refresh.
     // (r14 adjudication of the r13 driver regression: cold A/B on this
@@ -1587,41 +1509,18 @@ object LlmOps {
     // overlap wins cold too; the 6.65 s driver sample was host drift,
     // consistent with the 100x dir IMPROVING under the same commit.)
     inParallelAll(
-      () => {
+      () => GenTables.write(spark, name, "digests", Seq("dg"),
         batch.select(sha2(col("text"), 256).as("dg")).distinct()
-          .join(spark.table(s"${name}_digests"), Seq("dg"), "left_anti")
-          .repartition(IndexBuckets, col("dg"))
-          .withColumn("gen", lit(gen))
-          .write.format("parquet").mode("append")
-          .partitionBy("gen")
-          .bucketBy(IndexBuckets, "dg").sortBy("dg")
-          .saveAsTable(s"${name}_digests")
-        // the session caches each table's file listing in its relation
-        // cache; an append through saveAsTable does not reliably
-        // invalidate it, so a LATER probe in the same session would
-        // silently read the pre-append snapshot (observed: stream-absorb
-        // batch 3 missing batch 0's digests). Refresh makes the
-        // maintenance visible to the next reader.
-        spark.catalog.refreshTable(s"${name}_digests")
-      },
-      () => {
+          .join(spark.table(s"${name}_digests"), Seq("dg"), "left_anti"), gen, None),
+      () => GenTables.write(spark, name, "buckets", Seq("band", "band_key"),
         bandKeys(batch).select(col("band"), col("band_key")).distinct()
-          .join(spark.table(s"${name}_buckets"), Seq("band", "band_key"), "left_anti")
-          .repartition(IndexBuckets, col("band"), col("band_key"))
-          .withColumn("gen", lit(gen))
-          .write.format("parquet").mode("append")
-          .partitionBy("gen")
-          .bucketBy(IndexBuckets, "band", "band_key").sortBy("band", "band_key")
-          .saveAsTable(s"${name}_buckets")
-        spark.catalog.refreshTable(s"${name}_buckets")
-      })
+          .join(spark.table(s"${name}_buckets"), Seq("band", "band_key"), "left_anti"),
+        gen, None))
   }
 
-  def dropBucketedIndex(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_digests")
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_buckets")
-    ()
-  }
+  /** Digests first: [[compactIndexCutover]]'s fence relies on it. */
+  def dropBucketedIndex(spark: SparkSession, name: String): Unit =
+    GenTables.drop(spark, Seq(s"${name}_digests", s"${name}_buckets"))
 
   /** Index COMPACTION — the maintenance step that completes the table
     * lifecycle (build → absorb* → compact → probe …): fold every
@@ -1680,18 +1579,6 @@ object LlmOps {
     }
   }
 
-  /** Live-generation cap: a tiered pass seeing more generations than
-    * this folds everything (major compaction) — the backstop that keeps
-    * the partition listing bounded in every ingest regime. */
-  private[graft] val MaxLiveGens = 6
-
-  /** One tiered-compaction pass's accounting (spec pins read these):
-    * which generations folded, the fresh generation they folded into, and
-    * the byte split between rewritten (folded) and untouched (kept)
-    * data — the bound the schedule exists to enforce. */
-  final case class TierCompaction(foldedGens: Seq[Long], targetGen: Long,
-      foldedBytes: Long, keptGens: Seq[Long], keptBytes: Long)
-
   /** Size-TIERED index compaction — the in-loop maintenance schedule's
     * scale-safe form. [[compactIndex]] folds EVERY generation and rewrites
     * the whole index: fine as an offline step, but on an in-loop schedule
@@ -1719,8 +1606,8 @@ object LlmOps {
     * Backstop for the equal-tier regime: when batches are LARGE relative
     * to the base, graduated fold outputs (each above half-of-max) can
     * pile up without ever qualifying to fold again. If live generations
-    * exceed [[MaxLiveGens]], the pass folds EVERY candidate — one big
-    * merge, the LSM major compaction. It costs O(index) but can only
+    * exceed [[GenTables.MaxLiveGens]], the pass folds EVERY candidate —
+    * one big merge, the LSM major compaction. It costs O(index) but can only
     * trigger after the small-fold rule has graduated several tiers,
     * i.e. after ingest comparable to the index itself, so the amortized
     * bound is unchanged; in the dominant-base regime (batches ≪ base,
@@ -1736,221 +1623,9 @@ object LlmOps {
     * table format (same note as [[absorbInto]]). Returns None — no table
     * change at all — when fewer than two generations qualify. */
   def compactIndexTiered(spark: SparkSession, name: String,
-      currentGen: Long): Option[TierCompaction] =
-    compactTieredTables(spark, indexTables(name), IndexBuckets, currentGen)
+      currentGen: Long): Option[GenTables.TierCompaction] =
+    GenTables.compactTieredTables(spark, name, indexTables, currentGen)
 
-  /** The two gen-partitioned tables behind a bucketed text index, with
-    * their bucket/sort keys — the table list [[compactTieredTables]]
-    * maintains as one pass. */
-  private[graft] def indexTables(name: String): Seq[(String, Seq[String])] =
-    Seq(s"${name}_digests" -> Seq("dg"),
-      s"${name}_buckets" -> Seq("band", "band_key"))
-
-  /** The tiered fold over any set of gen-partitioned bucketed tables
-    * (the text index's digests+buckets pair; the ANN postings table) —
-    * IDEMPOTENT under crash-and-retry, which the in-loop schedule
-    * requires: foreachBatch replays a failed batch, and the replayed pass
-    * must FINISH an interrupted fold rather than wedge on its leftovers.
-    *
-    * The recovery protocol (in lieu of a transactional table format,
-    * which is where a production deployment would stage this):
-    *
-    *  1. The fold plan is PUBLISHED before any table mutates — a one-line
-    *     JSON manifest (`_tier_plan_gen_<g>.json`, underscore-prefixed so
-    *     scans ignore it) created under the first table's location via
-    *     write-to-temp + atomic rename. A pass that finds its own
-    *     manifest resumes THAT plan instead of recomputing one from the
-    *     half-mutated layout. A manifest whose fold gens are ALL gone
-    *     from the live listing with no target and no commit markers is an
-    *     abandoned run's leftover (batch ids restarted under a fresh
-    *     checkpoint) — it is deleted and planning starts fresh, instead
-    *     of "resuming" a plan over generations that no longer exist.
-    *  2. Per table, in order: a per-table COMMIT MARKER
-    *     (`_tier_done_gen_<g>_<i>`, created via write-temp + atomic
-    *     rename AFTER the append and its catalog registration both
-    *     completed) is the only evidence that table `i`'s fold committed.
-    *     Target-directory existence is NOT trusted: Spark's dynamic
-    *     partition job commit moves files into the fresh partition dir
-    *     non-atomically, so a crash mid-commit leaves a partial
-    *     `gen=<target>` that LOOKS complete. On resume, a table without
-    *     its marker has any partial target partition dropped and deleted,
-    *     then the append re-runs over the fold gens — which are
-    *     guaranteed still present, because a table's fold partitions are
-    *     only dropped AFTER its marker is on disk. Then drop + delete the
-    *     fold partitions (both idempotent).
-    *  3. Cleanup removes the manifest FIRST, then the markers. Markers
-    *     are consulted only while the manifest exists, so a crash between
-    *     the two deletes leaves harmless orphans that the next retried
-    *     batch garbage-collects on its no-op path (no manifest + target
-    *     present → None).
-    *
-    * Every step is either idempotent or fenced by an atomic marker, so
-    * any crash point — including mid-job-commit of an append — replays to
-    * the same final layout. Failpoints for the spec: `crashAfterTables`
-    * throws after that many tables fully completed (the between-tables
-    * window); `tornAppendAt` commits table i's append, then deletes one
-    * of its data files and throws BEFORE the marker — the torn
-    * mid-job-commit state where the target dir exists but is missing
-    * rows. */
-  private[graft] def compactTieredTables(spark: SparkSession,
-      tables: Seq[(String, Seq[String])], nBuckets: Int, currentGen: Long,
-      crashAfterTables: Int = Int.MaxValue,
-      tornAppendAt: Int = -1): Option[TierCompaction] = {
-    import org.apache.hadoop.fs.Path
-    val hconf = spark.sessionState.newHadoopConf()
-    val locs = tables.map { case (t, _) =>
-      new Path(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
-    }
-    def genBytes(loc: Path): Map[Long, Long] = {
-      val fs = loc.getFileSystem(hconf)
-      fs.listStatus(loc).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-        .map(s => s.getPath.getName.stripPrefix("gen=").toLong ->
-          fs.getContentSummary(s.getPath).getLength)
-        .toMap
-    }
-    val bytes = locs.map(genBytes).reduce { (a, b) =>
-      (a.keySet ++ b.keySet).iterator
-        .map(g => g -> (a.getOrElse(g, 0L) + b.getOrElse(g, 0L))).toMap
-    }
-    val target = -(currentGen + 2)
-    val headFs = locs.head.getFileSystem(hconf)
-    val manifest = new Path(locs.head, s"_tier_plan_gen_$currentGen.json")
-    def marker(i: Int) = new Path(locs.head, s"_tier_done_gen_${currentGen}_$i")
-    def deleteMarkers(): Unit =
-      tables.indices.foreach { i => headFs.delete(marker(i), false); () }
-    val planned: Option[Seq[Long]] =
-      if (headFs.exists(manifest)) {
-        // resume: the interrupted pass's plan, not a fresh one over the
-        // half-mutated layout
-        val in = headFs.open(manifest)
-        val txt = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-        require(node.get("target").asLong() == target,
-          s"tiered compaction: manifest $manifest targets gen " +
-            s"${node.get("target").asLong()}, expected $target")
-        val arr = node.get("fold")
-        val f = (0 until arr.size()).map(arr.get(_).asLong())
-        // stale-manifest guard: an abandoned run's plan (fresh checkpoint
-        // restarted batch ids) names generations that no longer exist
-        // anywhere, wrote no target, and committed no table — resuming it
-        // would fold nothing yet swallow this batch's real maintenance.
-        // Discard it and plan fresh over the live layout.
-        val abandoned = f.forall(!bytes.contains(_)) &&
-          !bytes.contains(target) && tables.indices.forall(i => !headFs.exists(marker(i)))
-        if (abandoned) { headFs.delete(manifest, false); None } else Some(f)
-      } else if (bytes.contains(target)) {
-        // the pass for this batch already COMPLETED (manifest removed at
-        // the end) and the batch was retried — nothing left to fold; GC
-        // any markers orphaned by a crash between the two cleanup deletes
-        deleteMarkers()
-        return None
-      } else None
-    val fold: Seq[Long] = planned match {
-      case Some(f) => f
-      case None =>
-        val candidates = bytes - currentGen
-        val maxBytes = if (candidates.isEmpty) 0L else candidates.values.max
-        val f =
-          if (bytes.size > MaxLiveGens) candidates.keys.toSeq.sorted
-          else candidates.filter(_._2 * 2 <= maxBytes).keys.toSeq.sorted
-        if (f.size < 2) return None
-        val tmp = new Path(locs.head, s"._tier_plan_gen_$currentGen.tmp")
-        val out = headFs.create(tmp, true)
-        try out.write(
-          s"""{"target":$target,"fold":[${f.mkString(",")}]}""".getBytes("UTF-8"))
-        finally out.close()
-        if (!headFs.rename(tmp, manifest))
-          throw new java.io.IOException(s"could not publish fold plan $manifest")
-        f
-    }
-    var done = 0
-    tables.zip(locs).zipWithIndex.foreach { case (((t, keys), loc), i) =>
-      val fs = loc.getFileSystem(hconf)
-      if (headFs.exists(marker(i))) {
-        // the marker is written only after BOTH the append's job commit
-        // and saveAsTable's catalog registration — this table's fold is
-        // durably complete; re-register for belt and braces (idempotent)
-        spark.sql(s"ALTER TABLE $t ADD IF NOT EXISTS PARTITION (gen=$target)")
-      } else {
-        // no marker ⇒ the append is NOT known committed, whatever the
-        // directory listing says: dynamic-partition job commit moves
-        // files into the fresh partition dir one at a time, so a crash
-        // mid-commit leaves a partial gen=<target> that looks real.
-        // Clear any such torn partition and redo the append — the fold
-        // gens are guaranteed still present, because this table's fold
-        // partitions are only dropped after its marker is on disk.
-        if (fs.exists(new Path(loc, s"gen=$target"))) {
-          spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (gen=$target)")
-          fs.delete(new Path(loc, s"gen=$target"), true)
-          spark.catalog.refreshTable(t)
-        }
-        // a fold gen can be absent from ONE table (an absorb whose
-        // anti-join found nothing new there writes no partition) — fold
-        // what exists
-        val present = fold.filter(g => fs.exists(new Path(loc, s"gen=$g")))
-        // append-from-self is safe here: the pruned scan's file listing is
-        // snapshotted at planning and the write lands only under the (new)
-        // target partition, disjoint from every file being read.
-        // distinct() is load-bearing, same as in compactIndex: without a
-        // real bucketing consumer the planner elides the repartition AND
-        // disables the bucketed scan — per-input-file write tasks,
-        // multi-file buckets, no compaction (observed: 22 files for 8
-        // buckets). Rows are unique across generations anyway (absorbInto
-        // anti-joins), so distinct changes nothing semantically.
-        if (present.nonEmpty)
-          spark.table(t).filter(col("gen").isInCollection(present))
-            .drop("gen").distinct().withColumn("gen", lit(target))
-            .repartition(nBuckets, keys.map(col): _*)
-            .write.format("parquet").mode("append")
-            .partitionBy("gen")
-            .bucketBy(nBuckets, keys.head, keys.tail: _*)
-            .sortBy(keys.head, keys.tail: _*)
-            .saveAsTable(t)
-        if (i == tornAppendAt) {
-          // failpoint: the append's job commit finished but the process
-          // dies before the marker — and the commit itself was torn,
-          // leaving the target partition missing one of its files
-          val part = fs.listStatus(new Path(loc, s"gen=$target"))
-            .filter(_.getPath.getName.startsWith("part-")).head.getPath
-          fs.delete(part, false)
-          throw new IllegalStateException(
-            s"injected torn append in table $i ($t): $part lost mid-commit")
-        }
-        // atomic commit record: write-temp + rename, same discipline as
-        // the manifest — dir existence is never evidence, this is
-        val mtmp = new Path(locs.head, s"._tier_done_gen_${currentGen}_$i.tmp")
-        headFs.create(mtmp, true).close()
-        if (!headFs.rename(mtmp, marker(i)) && !headFs.exists(marker(i)))
-          throw new java.io.IOException(s"could not commit fold marker ${marker(i)}")
-      }
-      fold.foreach { g =>
-        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (gen=$g)")
-      }
-      spark.catalog.refreshTable(t)
-      // DROP PARTITION de-registers but (external table) keeps the files;
-      // delete the folded directories so disk matches the catalog's view
-      fold.foreach { g => fs.delete(new Path(loc, s"gen=$g"), true); () }
-      done += 1
-      if (done >= crashAfterTables && done < tables.size)
-        throw new IllegalStateException(
-          s"injected tiered-compaction crash after $done of ${tables.size} tables")
-    }
-    // manifest first, then markers: markers are only consulted while the
-    // manifest exists, so a crash between the deletes leaves orphans the
-    // next retry GCs, never a mis-resume
-    headFs.delete(manifest, false)
-    deleteMarkers()
-    // on a fresh pass this is the exact byte split; a RESUMED pass
-    // reports whatever the interrupted run had not yet folded (already-
-    // dropped gens read 0) — the layout outcome is identical either way
-    val kept = (bytes.keySet -- fold - target).toSeq.sorted
-    Some(TierCompaction(fold, target,
-      fold.map(bytes.getOrElse(_, 0L)).sum, kept, kept.map(bytes).sum))
-  }
-
-  private val corpusCompactRuns = new java.util.concurrent.atomic.AtomicInteger
 
   /** q_corpus_compact: build gen 0 over %10 < 6, absorb %10 in (6,7) as
     * gen 1, COMPACT the two-generation index to a fresh single-generation
@@ -1961,10 +1636,7 @@ object LlmOps {
     * contract applied to index maintenance. */
   def qCorpusCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val n = corpusCompactRuns.incrementAndGet()
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_compact_$n").toString
-    val name = s"graft_compact_idx_$n"
-    try {
+    GenTables.scratch(spark, "graft_compact") { (name, dir) =>
       saveBucketedIndex(spark,
         buildCorpusIndex(docs.filter(col("doc_id") % 10 < 6)),
         s"$dir/g", name, gen = 0L)
@@ -1973,10 +1645,6 @@ object LlmOps {
           .select(col("doc_id"), col("text")), gen = 1L)
       compactIndexCutover(spark, name, s"$dir/c", s"${name}_c")
       Iterate.cut(probeDelta(loadBucketedIndex(spark, s"${name}_c"), deltaBatch(docs)))
-    } finally {
-      dropBucketedIndex(spark, s"${name}_c")
-      dropBucketedIndex(spark, name)
-      Streaming.deleteDirTree(dir)
     }
   }
 
@@ -2147,8 +1815,6 @@ object LlmOps {
        |       ELSE 'new' END AS status
        |FROM bf ORDER BY bf.doc_id""".stripMargin
 
-  private val corpusAbsorbRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** q_corpus_absorb: the full two-generation ingest loop on the ON-DISK
     * bucketed index — the production posture q_corpus_delta's single probe
     * doesn't cover. Generation 0 builds the index over the %10 < 6 corpus
@@ -2168,16 +1834,10 @@ object LlmOps {
       .select(col("doc_id"), col("text"))
       .unionByName(docs.filter(col("doc_id") % 20 === 6)
         .select((col("doc_id") + Resend).as("doc_id"), col("text")))
-    val n = corpusAbsorbRuns.incrementAndGet()
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_absorb_$n").toString
-    val name = s"graft_absorb_idx_$n"
-    try {
+    GenTables.scratch(spark, "graft_absorb") { (name, dir) =>
       saveBucketedIndex(spark, buildCorpusIndex(corpus), dir, name)
       absorbInto(spark, name, batch1)
       Iterate.cut(probeDelta(loadBucketedIndex(spark, name), batch2))
-    } finally {
-      dropBucketedIndex(spark, name)
-      Streaming.deleteDirTree(dir)
     }
   }
 
@@ -2263,8 +1923,6 @@ object LlmOps {
           .agg(count(lit(1)).as("dec")), Seq("band", "band_key")))
   }
 
-  private val corpusGcRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** q_corpus_gc: the DELETE step that completes the index lifecycle
     * (build → absorb* → compact → gc → probe …): persist the REFCOUNTED
     * index over the %10 < 8 corpus as bucketed tables, GC the takedown
@@ -2284,20 +1942,13 @@ object LlmOps {
     val corpus = docs.filter(col("doc_id") % 10 < 8)
     val forget = corpus.filter(col("doc_id") % 30 === 0)
       .select(col("doc_id"), col("text"))
-    val n = corpusGcRuns.incrementAndGet()
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_gc_$n").toString
-    val name = s"graft_gc_idx_$n"
-    try {
+    GenTables.scratch(spark, "graft_gc") { (name, dir) =>
       saveBucketedIndex(spark, buildRefIndex(corpus), s"$dir/g", name)
       saveBucketedIndex(spark, gcIndex(loadBucketedIndex(spark, name), forget),
         s"$dir/gc", s"${name}_gc")
       dropBucketedIndex(spark, name)
       Iterate.cut(
         probeDelta(loadBucketedIndex(spark, s"${name}_gc"), deltaBatch(docs)))
-    } finally {
-      dropBucketedIndex(spark, s"${name}_gc")
-      dropBucketedIndex(spark, name)
-      Streaming.deleteDirTree(dir)
     }
   }
 
@@ -3359,7 +3010,7 @@ object LlmOps {
       .withColumn("_dg",
         // explicit null sentinel: array_join SKIPS null elements without
         // one, which would digest [1,null,2] and [1,2,null] identically
-        sha2(array_join(col("embedding").cast("array<string>"), ",", " "), 256))
+        sha2(array_join(col("embedding").cast("array<string>"), ",", "\u0000"), 256))
       .withColumn("rep", min(col("vec_id")).over(wE))
       .withColumn("cn", count(lit(1)).over(wE))
       .withColumn("m1",

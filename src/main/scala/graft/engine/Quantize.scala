@@ -138,9 +138,6 @@ object Quantize {
   def qIvfServe(spark: SparkSession, sfDir: String): DataFrame =
     ivfQuant(spark, sfDir, corpusTrain = true, serve = true)
 
-  private val ServeBuckets = 8
-  private val ivfServeRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** The IVF quantizer's owner per training scope: its timed samples pay
     * the Lloyd rounds; gc/serve/recall read the quantizer warm. */
   private def ivfOwner(corpusTrain: Boolean): String =
@@ -150,42 +147,26 @@ object Quantize {
   private[graft] def evictIvfMemo(sfDir: String, corpusTrain: Boolean): Unit =
     Memo.evict(ivfOwner(corpusTrain))
 
-  /** Persist postings bucketed by cell id and return the bucket-pruned
-    * scan for the probed cells (literal IN on the bucket column →
-    * FileSourceScan prunes unprobed buckets at plan time). Exposed for
-    * the spec that pins SelectedBucketsCount < total. */
+  /** Persist postings as the one-generation [[GenTables]] table
+    * `${name}_postings`, bucketed by cell id, and return the
+    * bucket-pruned scan for the probed cells (literal IN on the bucket
+    * column → FileSourceScan prunes unprobed buckets at plan time).
+    * Exposed for the spec that pins SelectedBucketsCount < total. */
   private[graft] def servePruned(spark: SparkSession, posting: DataFrame,
       probedCids: Seq[Long], dir: String, name: String): DataFrame = {
-    posting.repartition(ServeBuckets, col("cid"))
-      .write.format("parquet").mode("overwrite")
-      .bucketBy(ServeBuckets, "cid").sortBy("cid")
-      .option("path", s"$dir/postings").saveAsTable(name)
-    spark.table(name).filter(col("cid").isin(probedCids: _*))
+    GenTables.write(spark, name, "postings", Seq("cid"), posting, 0L, Some(dir))
+    GenTables.asOf(spark, s"${name}_postings", None)
+      .filter(col("cid").isin(probedCids: _*))
   }
 
   private def ivfQuant(spark: SparkSession, sfDir: String,
       corpusTrain: Boolean, gc: Boolean = false,
       serve: Boolean = false): DataFrame =
-    if (serve) {
-      // Per-plan conf scope (round-9 advisor finding): the serve read
-      // needs autoBucketedScan pinned OFF (DisableUnnecessaryBucketedScan
-      // would strip the bucketed scan — and BUCKET PRUNING with it —
-      // because the broadcast-tiny probe side never "consumes" the
-      // bucketing). Mutating the caller's session conf would leak the
-      // override to concurrent queries, so the whole serve pipeline runs
-      // on its OWN session carrying the pin (newSession + runtime-conf
-      // copy — cloneSession is private in Spark 4; static confs throw on
-      // set and are already shared via the context). Iterate.cut
-      // materializes inside, so every scan executes under this session's
-      // conf and the caller's session is never touched.
-      val s = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try s.conf.set(k, v)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      ivfQuantImpl(s, sfDir, corpusTrain, gc, serve)
-    } else ivfQuantImpl(spark, sfDir, corpusTrain, gc, serve)
+    // the serve read runs on a bucketPinned session: the broadcast-tiny
+    // probe side never "consumes" the bucketing. Iterate.cut materializes
+    // inside, so every scan executes under that session's conf.
+    ivfQuantImpl(if (serve) GenTables.bucketPinned(spark) else spark,
+      sfDir, corpusTrain, gc, serve)
 
   /** Nearest-cell assignment: argmin exact squared L2 with the lowest-cid
     * tiebreak, computed by the codegen'd NearestCentroidSqI k-loop over
@@ -315,29 +296,12 @@ object Quantize {
       val probes = probeCells(cents, queries)
       // serving: postings live in a cid-bucketed table; the probed cells
       // (k-bounded: ≤ |queries| × NProbe) prune the scan to their buckets
-      var serveName: String = null
-      var serveDir: String = null
-      val postingJoin =
-        if (serve) {
-          val n = ivfServeRuns.incrementAndGet()
-          serveDir = java.nio.file.Files
-            .createTempDirectory(s"graft_ivfserve_$n").toString
-          serveName = s"graft_ivf_serve_$n"
-          val cids = probes.select(col("cid")).distinct()
-            .collect().map(_.getLong(0)).sorted.toSeq
-          // `spark` here is the caller's clone with autoBucketedScan
-          // pinned off (see ivfQuant): the probe side is broadcast-tiny,
-          // so no operator "consumes" the table's bucketing and
-          // DisableUnnecessaryBucketedScan would strip the bucketed scan
-          // — taking BUCKET PRUNING (the point of the layout) with it.
-          servePruned(spark, posting, cids, serveDir, serveName)
-        } else posting
-      try {
-        Iterate.cut(probeAndRank(cents, postingJoin, queries))
-      } finally if (serveName != null) {
-        spark.sql(s"DROP TABLE IF EXISTS $serveName")
-        Streaming.deleteDirTree(serveDir)
-      }
+      if (serve) GenTables.scratch(spark, "graft_ivf_serve") { (name, dir) =>
+        val cids = probes.select(col("cid")).distinct()
+          .collect().map(_.getLong(0)).sorted.toSeq
+        Iterate.cut(probeAndRank(cents,
+          servePruned(spark, posting, cids, dir, name), queries))
+      } else Iterate.cut(probeAndRank(cents, posting, queries))
     } finally q8.unpersist(blocking = false)
   }
 

@@ -627,8 +627,6 @@ object Streaming {
         OutputMode.Update())
   }
 
-  private val streamUpsertRuns = new java.util.concurrent.atomic.AtomicInteger
-
   /** q_stream_upsert: the `transformWithState` upsert path DECLARED on the
     * driver differential, the way q_paged_stream declared the source path.
     * The events table is staged as 4 time-range parquet files
@@ -649,57 +647,53 @@ object Streaming {
   def qStreamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .filter(col("user_id").isNotNull && col("ts").isNotNull)
-    val dir = java.nio.file.Files.createTempDirectory(
-      s"graft_upsert_stream_${streamUpsertRuns.incrementAndGet()}").toString
     // ONE try/finally spans everything from the first conf.set: a failure
     // anywhere (including query START) must not leak the RocksDB provider
-    // or the drain-sized partition count into the rest of the session, and
-    // the staged parquet must not accumulate across bench/test repeats.
+    // or the drain-sized partition count into the rest of the session.
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val partsKey = "spark.sql.shuffle.partitions"
     val savedProvider = spark.conf.getOption(providerKey)
     val savedParts = spark.conf.get(partsKey)
-    try {
-      ev.select(col("user_id"), col("ts"), col("event_type"))
-        .repartitionByRange(4, col("ts"))
-        .write.mode("overwrite").parquet(dir)
-      val staged = spark.read.parquet(dir) // ts already normalized at staging
-      val stream = spark.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Right-size the stateful operator's partitioning for the drain: the
-      // state partition count is fixed at first batch from
-      // spark.sql.shuffle.partitions, and every partition opens its own
-      // RocksDB instance PER BATCH — at the session default (32) that is
-      // 32 stores × 5 batches of per-batch open/commit overhead for a
-      // key space of a few hundred users. 8 partitions is the honest
-      // sizing for this key cardinality (at production scale you size
-      // this to the live-key count, not the session default).
-      spark.conf.set(partsKey, "8")
-      drainToMemory(upsertLatestTws(typedEvents(stream)).toDF(), "update",
-          "q_stream_upsert", minDataBatches = 2) { landed =>
-        // the query cloned the session conf at start: the read below plans
-        // at the session's own partition count again
+    GenTables.scratch(spark, "graft_upsert_stream") { (_, dir) =>
+      try {
+        ev.select(col("user_id"), col("ts"), col("event_type"))
+          .repartitionByRange(4, col("ts"))
+          .write.mode("overwrite").parquet(dir)
+        val staged = spark.read.parquet(dir) // ts already normalized at staging
+        val stream = spark.readStream.schema(staged.schema)
+          .option("maxFilesPerTrigger", "1").parquet(dir)
+        spark.conf.set(providerKey,
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        // Right-size the stateful operator's partitioning for the drain: the
+        // state partition count is fixed at first batch from
+        // spark.sql.shuffle.partitions, and every partition opens its own
+        // RocksDB instance PER BATCH — at the session default (32) that is
+        // 32 stores × 5 batches of per-batch open/commit overhead for a
+        // key space of a few hundred users. 8 partitions is the honest
+        // sizing for this key cardinality (at production scale you size
+        // this to the live-key count, not the session default).
+        spark.conf.set(partsKey, "8")
+        drainToMemory(upsertLatestTws(typedEvents(stream)).toDF(), "update",
+            "q_stream_upsert", minDataBatches = 2) { landed =>
+          // the query cloned the session conf at start: the read below plans
+          // at the session's own partition count again
+          spark.conf.set(partsKey, savedParts)
+          landed
+            .groupBy(col("user_id"))
+            .agg(max(struct(col("nSeen"), col("lastTsMicros"), col("eventType"))).as("s"))
+            .select(col("user_id"), col("s.lastTsMicros").as("last_ts_us"),
+              col("s.eventType").as("event_type"), col("s.nSeen").as("n_seen"))
+            .orderBy(col("user_id"))
+        }
+      } finally {
         spark.conf.set(partsKey, savedParts)
-        landed
-          .groupBy(col("user_id"))
-          .agg(max(struct(col("nSeen"), col("lastTsMicros"), col("eventType"))).as("s"))
-          .select(col("user_id"), col("s.lastTsMicros").as("last_ts_us"),
-            col("s.eventType").as("event_type"), col("s.nSeen").as("n_seen"))
-          .orderBy(col("user_id"))
+        savedProvider match {
+          case Some(v) => spark.conf.set(providerKey, v)
+          case None    => spark.conf.unset(providerKey)
+        }
       }
-    } finally {
-      spark.conf.set(partsKey, savedParts)
-      savedProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      deleteDirTree(dir)
     }
   }
-
-  private val streamDeltaRuns = new java.util.concurrent.atomic.AtomicInteger
 
   /** q_stream_delta: the incremental-ingest twin of q_corpus_delta,
     * DECLARED on the driver differential — the incoming batch arrives as
@@ -716,15 +710,11 @@ object Streaming {
     * invariant and the oracle is EXACTLY qCorpusDeltaSql. */
   def qStreamDelta(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val n = streamDeltaRuns.incrementAndGet()
-    val inDir = java.nio.file.Files.createTempDirectory(s"graft_delta_in_$n").toString
-    val outDir = java.nio.file.Files.createTempDirectory(s"graft_delta_out_$n").toString
-    val idxDir = java.nio.file.Files.createTempDirectory(s"graft_delta_idx_$n").toString
-    val idxName = s"graft_delta_idx_$n"
-    LlmOps.saveBucketedIndex(spark,
-      LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)), idxDir, idxName)
-    val idx = LlmOps.loadBucketedIndex(spark, idxName)
-    try {
+    GenTables.scratch(spark, "graft_delta") { (idxName, dir) =>
+      val (inDir, outDir) = (s"$dir/in", s"$dir/out")
+      LlmOps.saveBucketedIndex(spark,
+        LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)), dir, idxName)
+      val idx = LlmOps.loadBucketedIndex(spark, idxName)
       LlmOps.deltaBatch(docs)
         .repartition(4).write.mode("overwrite").parquet(inDir)
       val schema = spark.read.parquet(inDir).schema
@@ -741,13 +731,8 @@ object Streaming {
         }, "q_stream_delta", minDataBatches = 2)
       Iterate.cut(spark.read.option("recursiveFileLookup", "true")
         .parquet(outDir).orderBy(col("doc_id")))
-    } finally {
-      LlmOps.dropBucketedIndex(spark, idxName)
-      deleteDirTree(inDir); deleteDirTree(outDir); deleteDirTree(idxDir)
     }
   }
-
-  private val streamAbsorbRuns = new java.util.concurrent.atomic.AtomicInteger
 
   /** q_stream_absorb: the FULL production ingest loop under streaming —
     * every micro-batch CLASSIFIES against the as-of view of the bucketed
@@ -800,24 +785,20 @@ object Streaming {
     * compacts, k > 0 compacts after batches (id+1) % k == 0;
     * `inspectFinal` (spec hook) runs with the index table name after the
     * drain guard, before cleanup; `tierLog` (spec hook) receives each
-    * compaction pass's [[LlmOps.TierCompaction]] report (None = the pass
+    * compaction pass's [[GenTables.TierCompaction]] report (None = the pass
     * found nothing worth folding). */
   private[graft] def streamClassifyAbsorbDrain(spark: SparkSession,
       sfDir: String, compactEvery: Int,
       inspectFinal: Option[String => Unit],
-      tierLog: Option[java.util.Queue[Option[LlmOps.TierCompaction]]] = None): DataFrame = {
+      tierLog: Option[java.util.Queue[Option[GenTables.TierCompaction]]] = None): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val n = streamAbsorbRuns.incrementAndGet()
-    val stageDir = java.nio.file.Files.createTempDirectory(s"graft_sabs_stage_$n").toString
-    val inDir = java.nio.file.Files.createTempDirectory(s"graft_sabs_in_$n").toString
-    val outDir = java.nio.file.Files.createTempDirectory(s"graft_sabs_out_$n").toString
-    val idxDir = java.nio.file.Files.createTempDirectory(s"graft_sabs_idx_$n").toString
-    val idxName = s"graft_sabs_idx_$n"
-    LlmOps.saveBucketedIndex(spark,
-      LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)),
-      idxDir, idxName, gen = -1L)
     val what = if (compactEvery > 0) "q_stream_compact" else "q_stream_absorb"
-    try {
+    GenTables.scratch(spark, "graft_sabs") { (idxName, dir) =>
+      val (stageDir, inDir, outDir) = (s"$dir/stage", s"$dir/in", s"$dir/out")
+      LlmOps.saveBucketedIndex(spark,
+        LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)),
+        dir, idxName, gen = -1L)
+      java.nio.file.Files.createDirectory(java.nio.file.Paths.get(inDir))
       val batch = LlmOps.streamAbsorbBatch(docs)
       val base = System.currentTimeMillis() - 3600000L
       // stage all four slice files in ONE write job (dynamic partitioning:
@@ -894,23 +875,6 @@ object Streaming {
       inspectFinal.foreach(f => f(idxName))
       Iterate.cut(spark.read.option("recursiveFileLookup", "true")
         .parquet(outDir).orderBy(col("doc_id")))
-    } finally {
-      LlmOps.dropBucketedIndex(spark, idxName)
-      deleteDirTree(stageDir); deleteDirTree(inDir)
-      deleteDirTree(outDir); deleteDirTree(idxDir)
-    }
-  }
-
-  /** Best-effort recursive delete of a staged temp dir (drain inputs are
-    * dead once the query result is materialized). */
-  private[engine] def deleteDirTree(dir: String): Unit = {
-    import java.nio.file.{Files, Path, Paths}
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => try Files.delete(p) catch { case _: java.io.IOException => () })
-      finally walk.close()
     }
   }
 

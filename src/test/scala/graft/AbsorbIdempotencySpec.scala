@@ -100,6 +100,38 @@ class AbsorbIdempotencySpec extends SparkSpec {
     }
   }
 
+  test("probe∥absorb: a batch whose absorb committed but whose probe was lost retries to the clean twin") {
+    val dirA = java.nio.file.Files.createTempDirectory("graft_paA").toString
+    val dirB = java.nio.file.Files.createTempDirectory("graft_paB").toString
+    val (a, b) = ("graft_spec_pa_a", "graft_spec_pa_b")
+    def probe(name: String, asOf: Option[Long]): Seq[(Long, String)] =
+      LlmOps.probeDeltaUnsorted(LlmOps.loadBucketedIndex(spark, name, asOf), batch)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    try {
+      LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirA, a, gen = -1L)
+      LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirB, b, gen = -1L)
+
+      // batch 0 on `a`, as the streaming drain overlaps it: the absorb
+      // committed gen 0, the probe's output was lost
+      LlmOps.absorbInto(spark, a, batch, gen = 0L)
+      // the retried batch 0: probe the as-of view, absorb again
+      val retried = probe(a, Some(0L))
+      LlmOps.absorbInto(spark, a, batch, gen = 0L)
+      // the clean twin runs batch 0 once
+      val clean = probe(b, Some(0L))
+      LlmOps.absorbInto(spark, b, batch, gen = 0L)
+
+      assert(retried == clean, "the retried probe must equal the clean probe row for row")
+      assert(contentOf(a) == contentOf(b), "the retried index must equal the clean twin")
+      // the as-of fence is what held: unfenced, the retry sees its own rows
+      assert(probe(a, None) != clean,
+        "an unfenced probe must differ, or this test shows nothing")
+    } finally {
+      LlmOps.dropBucketedIndex(spark, a); LlmOps.dropBucketedIndex(spark, b)
+      rmTree(dirA); rmTree(dirB)
+    }
+  }
+
   test("compactIndexCutover converges from every crash point") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cut").toString
     val (from, to) = ("graft_spec_cut_from", "graft_spec_cut_to")

@@ -200,7 +200,7 @@ class SketchQuantChunkSpec extends SparkSpec {
         s"expected <=2 of 8 buckets read, got $sel of $tot")
     } finally {
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-      spark.sql("DROP TABLE IF EXISTS graft_serve_spec_t")
+      spark.sql("DROP TABLE IF EXISTS graft_serve_spec_t_postings")
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
       }

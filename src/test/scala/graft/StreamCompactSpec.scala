@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.LlmOps
+import graft.engine.{GenTables, LlmOps}
 
 /** The streaming-compaction contract (round-11: size-TIERED schedule): a
   * drain with compaction interleaved after every 2nd micro-batch must
@@ -30,7 +30,7 @@ class StreamCompactSpec extends SparkSpec {
 
   test("tiered compaction mid-stream: row-equal to q_stream_absorb; bounded rewrite; bounded end state") {
     val tierLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[Option[LlmOps.TierCompaction]]()
+      new java.util.concurrent.ConcurrentLinkedQueue[Option[GenTables.TierCompaction]]()
     var digestFiles: Array[String] = null
     var bucketFiles: Array[String] = null
     val compacted = engine.Streaming.streamClassifyAbsorbDrain(
@@ -45,7 +45,7 @@ class StreamCompactSpec extends SparkSpec {
       s"compacted drain diverged: ${compacted.size} vs ${plain.size} rows")
 
     // the schedule fired after batches 1 and 3
-    val reports = tierLog.toArray(Array.empty[Option[LlmOps.TierCompaction]]).toSeq
+    val reports = tierLog.toArray(Array.empty[Option[GenTables.TierCompaction]]).toSeq
     assert(reports.size == 2, s"expected 2 maintenance passes, got ${reports.size}")
     // pass 1 (after batch 1): candidates are only {base, gen 0} — one
     // small generation is not worth a rewrite, the pass is a no-op

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.LlmOps
+import graft.engine.{GenTables, LlmOps}
 
 /** Crash-and-retry contract of the tiered maintenance pass (round-12
   * ADVICE medium): the digests fold and the buckets fold are two
@@ -62,8 +62,8 @@ class TierIdempotencySpec extends SparkSpec {
       // buckets untouched) — the exact between-tables window the advisory
       // names
       val boom = intercept[IllegalStateException] {
-        LlmOps.compactTieredTables(spark, LlmOps.indexTables(a),
-          nBuckets = 8, currentGen = 3L, crashAfterTables = 1)
+        GenTables.compactTieredTables(spark, a, LlmOps.indexTables,
+          currentGen = 3L, crashAfterTables = 1)
       }
       assert(boom.getMessage.contains("injected"), boom.getMessage)
 
@@ -126,8 +126,8 @@ class TierIdempotencySpec extends SparkSpec {
       // commit) and the process dies before the commit marker — the
       // round-12 residual window where "target dir exists" lied
       val boom = intercept[IllegalStateException] {
-        LlmOps.compactTieredTables(spark, LlmOps.indexTables(a),
-          nBuckets = 8, currentGen = 3L, tornAppendAt = 0)
+        GenTables.compactTieredTables(spark, a, LlmOps.indexTables,
+          currentGen = 3L, tornAppendAt = 0)
       }
       assert(boom.getMessage.contains("torn append"), boom.getMessage)
 
