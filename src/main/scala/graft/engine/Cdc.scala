@@ -40,7 +40,6 @@ object Cdc {
     * same pipeline lands via foreachBatch into files partitioned by
     * topic, and the compaction window keys the same shuffle. */
   def qCdcPipeline(spark: SparkSession, sfDir: String): DataFrame = {
-    JsonStringCast.register(spark)
     val stream = spark.readStream.format("graft.sources.PagedEntitySource")
       .option("entities", "customer,invoice")
       .option("customer.rows", "6000")
@@ -49,22 +48,26 @@ object Cdc {
       .option("updatesEveryN", "4")
       .option("pageSize", "500").option("windowRows", "2000")
       .load()
-    Streaming.drainToMemory(stream, "append", "q_cdc_pipeline") { landed =>
-      val enriched = landed
-        .withColumn("category_cast", expr("json_string_cast(category)"))
-        .filter(col("id").isNotNull)
-        .withColumn("key", col("id").cast("string"))
-        .withColumn("topic", concat_ws(".", lit("chargeover"), col("_entity_type")))
-      val w = Window.partitionBy(col("_entity_type"), col("id"))
-        .orderBy(col("ts_us").desc)
-      val compacted = enriched
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("topic"), col("key"), col("_entity_type"), col("id"),
-          col("ts_us"), col("value"), col("category_cast"))
-        .orderBy(col("_entity_type"), col("id"))
-      compacted // 11,250 rows
-    }
+    Streaming.drainToMemory(stream, "append", "q_cdc_pipeline")(castRouteCompact)
+  }
+
+  /** Stages 2-4 of [[qCdcPipeline]] over the landed changelog rows: the
+    * string cast of `category`, key and route ([[Envelope.keyed]],
+    * [[Envelope.routed]]), then latest-wins compaction per (entity, id),
+    * ordered by (entity, id). */
+  def castRouteCompact(landed: DataFrame): DataFrame = {
+    JsonStringCast.register(landed.sparkSession)
+    val enriched = Envelope.routed(Envelope.keyed(
+      landed.withColumn("category_cast", expr("json_string_cast(category)")),
+      "id"), "chargeover")
+    val w = Window.partitionBy(col("_entity_type"), col("id"))
+      .orderBy(col("ts_us").desc)
+    enriched
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1)
+      .select(col("topic"), col("key"), col("_entity_type"), col("id"),
+        col("ts_us"), col("value"), col("category_cast"))
+      .orderBy(col("_entity_type"), col("id"))
   }
 
   /** q_scd2: Slowly-Changing-Dimension Type 2 — the OTHER canonical

@@ -25,8 +25,9 @@ object GenTables {
   private val Buckets = 8
 
   /** Write `df` as generation `gen` of `${name}_$suffix`. `Some(dir)`
-    * (over)writes a fresh table at `$dir/$suffix`; `None` appends to the
-    * existing one and refreshes it.
+    * (over)writes a fresh table at `$dir/$suffix`; `None` REPLACES
+    * generation `gen` of the existing table — a retried write overwrites
+    * its own generation — and refreshes it.
     *
     * The repartition ON THE BUCKET KEYS is the same murmur3 routing the
     * bucketed writer uses, so each write task holds exactly one bucket's
@@ -48,9 +49,29 @@ object GenTables {
     dir match {
       case Some(d) => w.option("path", s"$d/$suffix").saveAsTable(table)
       case None =>
+        dropGens(spark, table, Seq(gen))
         w.saveAsTable(table)
         spark.catalog.refreshTable(table)
     }
+  }
+
+  /** Drop the generations among `gens` that `table` holds on disk:
+    * de-register each partition, then delete its directory (DROP
+    * PARTITION keeps an external table's files, and a later append to
+    * the same gen would read them back), and refresh the table.
+    * Idempotent: a crash between the two steps leaves a directory the
+    * retry drops again. */
+  private def dropGens(spark: SparkSession, table: String, gens: Seq[Long]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).location)
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    val present = gens.filter(g => fs.exists(new Path(loc, s"gen=$g")))
+    present.foreach { g =>
+      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (gen=$g)")
+      fs.delete(new Path(loc, s"gen=$g"), true)
+    }
+    if (present.nonEmpty) spark.catalog.refreshTable(table)
   }
 
   /** `table` as of generation `maxGenExclusive` (rows with `gen < g`), or
@@ -111,7 +132,7 @@ object GenTables {
   }
 
   /** Best-effort recursive delete of a scratch dir. */
-  private def deleteDirTree(dir: String): Unit = {
+  private[graft] def deleteDirTree(dir: String): Unit = {
     import java.nio.file.{Files, Path, Paths}
     val root = Paths.get(dir)
     if (Files.exists(root)) {
@@ -266,18 +287,12 @@ object GenTables {
         // no marker ⇒ the append is NOT known committed, whatever the
         // directory listing says: dynamic-partition job commit moves
         // files into the fresh partition dir one at a time, so a crash
-        // mid-commit leaves a partial gen=<target> that looks real.
-        // Clear any such torn partition and redo the append — the fold
-        // gens are guaranteed still present, because this table's fold
-        // partitions are only dropped after its marker is on disk.
-        if (fs.exists(new Path(loc, s"gen=$target"))) {
-          spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (gen=$target)")
-          fs.delete(new Path(loc, s"gen=$target"), true)
-          spark.catalog.refreshTable(t)
-        }
-        // a fold gen can be absent from ONE table (an absorb whose
-        // anti-join found nothing new there writes no partition) — fold
-        // what exists
+        // mid-commit leaves a partial gen=<target> that looks real. Redo
+        // the append (`write` replaces such a torn partition); this
+        // table's fold gens are still present, as they are only dropped
+        // after its marker is on disk. A fold gen can be absent from ONE
+        // table (an absorb that found nothing new there writes no
+        // partition) — fold what exists.
         val present = fold.filter(g => fs.exists(new Path(loc, s"gen=$g")))
         // append-from-self is safe here: the pruned scan's file listing is
         // snapshotted at planning and the write lands only under the (new)
@@ -286,8 +301,9 @@ object GenTables {
         // real bucketing consumer the planner elides the repartition AND
         // disables the bucketed scan — per-input-file write tasks,
         // multi-file buckets, no compaction (observed: 22 files for 8
-        // buckets). Rows are unique across generations anyway (absorbInto
-        // anti-joins), so distinct changes nothing semantically.
+        // buckets). Rows are unique across generations anyway (each
+        // absorbed generation holds only keys absent from every earlier
+        // one), so distinct changes nothing semantically.
         if (present.nonEmpty)
           write(spark, name, suffix, keys, spark.table(t)
             .filter(col("gen").isInCollection(present)).drop("gen").distinct(),
@@ -309,13 +325,7 @@ object GenTables {
         if (!headFs.rename(mtmp, marker(i)) && !headFs.exists(marker(i)))
           throw new java.io.IOException(s"could not commit fold marker ${marker(i)}")
       }
-      fold.foreach { g =>
-        spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION (gen=$g)")
-      }
-      spark.catalog.refreshTable(t)
-      // DROP PARTITION de-registers but (external table) keeps the files;
-      // delete the folded directories so disk matches the catalog's view
-      fold.foreach { g => fs.delete(new Path(loc, s"gen=$g"), true); () }
+      dropGens(spark, t, fold)
       done += 1
       if (done >= crashAfterTables && done < tables.size)
         throw new IllegalStateException(

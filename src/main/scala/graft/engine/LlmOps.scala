@@ -744,9 +744,8 @@ object LlmOps {
     * tables:
     *
     *  - `<name>_bm_docs` (doc_id, dl), bucketed on doc_id — the absorb
-    *    fence (anti-join makes re-absorbing a batch a no-op, same
-    *    discipline as [[absorbInto]]) and the source of the global
-    *    (N, Σdl) statistic;
+    *    fence (anti-join makes re-absorbing a batch a no-op) and the
+    *    source of the global (N, Σdl) statistic;
     *  - `<name>_bm_postings` (term, doc_id, tf, dl), bucketed on term —
     *    the inverted lists, over the FULL vocabulary (an index serves any
     *    future query, unlike the per-query rebuild's vocab filter); dl
@@ -1386,10 +1385,11 @@ object LlmOps {
     * deliberately don't model: in production you never re-deduplicate the
     * accumulated corpus per arriving batch — you maintain a corpus INDEX
     * (distinct digest set + distinct band-bucket set, both tiny relative
-    * to the text) and probe it with shuffle semi-joins that are LINEAR in
-    * |batch| + |index|. No pairwise comparison anywhere: band-bucket
-    * membership is the near-dup candidate test, exactly as in the batch
-    * LSH plan. Both inputs are (doc_id, text) frames. */
+    * to the text) and probe it with one flagged left join per table
+    * ([[classify]]) that is LINEAR in |batch| + |index|. No pairwise
+    * comparison anywhere: band-bucket membership is the near-dup
+    * candidate test, exactly as in the batch LSH plan. Both inputs are
+    * (doc_id, text) frames. */
   def corpusDelta(corpus: DataFrame, batch: DataFrame): DataFrame =
     probeDelta(buildCorpusIndex(corpus), batch)
 
@@ -1414,9 +1414,8 @@ object LlmOps {
   /** The maintained corpus index: distinct content digests + distinct LSH
     * band buckets. Both frames are tiny relative to the corpus text (a
     * 32 B digest / 12 B bucket key per distinct doc) — at production scale
-    * this pair lives as tables that each ingest run appends to; here the
-    * caller decides whether to persist (the streaming twin does, once,
-    * instead of recomputing per micro-batch). */
+    * this pair lives as tables that each ingest run appends to
+    * ([[saveBucketedIndex]], [[ingest]]). */
   final case class CorpusIndex(digests: DataFrame, buckets: DataFrame)
 
   def buildCorpusIndex(corpus: DataFrame): CorpusIndex = CorpusIndex(
@@ -1491,32 +1490,36 @@ object LlmOps {
     CorpusIndex(GenTables.asOf(spark, s"${name}_digests", maxGenExclusive),
       GenTables.asOf(spark, s"${name}_buckets", maxGenExclusive))
 
-  /** `absorb` against the on-disk tables: append the batch's NEW digests
-    * and buckets under generation `gen` (anti-join keeps the index tight —
-    * duplicates would be harmless to the semi-join probes but waste index
-    * bytes — and makes a RE-absorb of the same batch a no-op). Appends
-    * carry the same bucket spec, so the table layout survives
-    * maintenance. NOTE the two appends are not atomic as a pair; a real
-    * deployment stages them in a transactional table format — the
-    * gen-scoped probe keeps even a torn retry deterministic for every
-    * LATER generation once the retry completes. */
-  def absorbInto(spark: SparkSession, name: String, batch: DataFrame,
-      gen: Long = 1L): Unit = {
-    // The digests append and the buckets append touch disjoint tables —
-    // run them concurrently, each with its own visibility refresh.
-    // (r14 adjudication of the r13 driver regression: cold A/B on this
-    // host reads concurrent 3.02/3.57 s vs sequential 3.96/4.10 s — the
-    // overlap wins cold too; the 6.65 s driver sample was host drift,
-    // consistent with the 100x dir IMPROVING under the same commit.)
+  /** One ingest step against the on-disk index `name`: [[classify]]
+    * `batch` against generations < `gen` (the as-of view — a retried
+    * batch never sees its own rows), pinned, hand its status to `sink`,
+    * then write its unmatched keys as generation `gen`. The pin is the
+    * only read of each index table, and the write REPLACES generation
+    * `gen` ([[GenTables.write]]), so a retry overwrites whatever a failed
+    * attempt left there — a lost second append or a torn commit — instead
+    * of adding to it. The status lands before the absorb starts: a batch
+    * whose status write failed is never absorbed. The two appends are
+    * still not atomic as a pair; a real deployment stages them in a
+    * transactional table format. */
+  def ingest(spark: SparkSession, name: String, batch: DataFrame, gen: Long)(
+      sink: DataFrame => Unit): Unit = {
+    val c = classify(loadBucketedIndex(spark, name, Some(gen)), batch).pinned
+    sink(c.status)
+    val fresh = c.unmatched
+    // disjoint tables, each with its own visibility refresh: overlap the
+    // two appends (r14 cold A/B, 4 cores: 3.02/3.57 s vs 3.96/4.10 s)
     inParallelAll(
-      () => GenTables.write(spark, name, "digests", Seq("dg"),
-        batch.select(sha2(col("text"), 256).as("dg")).distinct()
-          .join(spark.table(s"${name}_digests"), Seq("dg"), "left_anti"), gen, None),
+      () => GenTables.write(spark, name, "digests", Seq("dg"), fresh.digests, gen, None),
       () => GenTables.write(spark, name, "buckets", Seq("band", "band_key"),
-        bandKeys(batch).select(col("band"), col("band_key")).distinct()
-          .join(spark.table(s"${name}_buckets"), Seq("band", "band_key"), "left_anti"),
-        gen, None))
+        fresh.buckets, gen, None))
   }
+
+  /** `absorb` against the on-disk tables: [[ingest]] with no status
+    * consumer — generation `gen` becomes the batch's digests and buckets
+    * that no earlier generation holds. */
+  def absorbInto(spark: SparkSession, name: String, batch: DataFrame,
+      gen: Long = 1L): Unit =
+    ingest(spark, name, batch, gen)(_ => ())
 
   /** Digests first: [[compactIndexCutover]]'s fence relies on it. */
   def dropBucketedIndex(spark: SparkSession, name: String): Unit =
@@ -1620,7 +1623,7 @@ object LlmOps {
     * are then dropped and their directories deleted. foreachBatch runs
     * the loop single-writer, so the append→drop pair needs no external
     * coordination; a real deployment stages the pair in a transactional
-    * table format (same note as [[absorbInto]]). Returns None — no table
+    * table format (same note as [[ingest]]). Returns None — no table
     * change at all — when fewer than two generations qualify. */
   def compactIndexTiered(spark: SparkSession, name: String,
       currentGen: Long): Option[GenTables.TierCompaction] =
@@ -1648,50 +1651,69 @@ object LlmOps {
     }
   }
 
-  /** Classify one batch against a prebuilt index — linear probe-by-
-    * semi-join, shared by the batch query and the streaming twin.
-    * `digestPrefilter` optionally narrows the digest-probe input BEFORE
-    * its shuffle (the bloom path); it must never drop a true member. */
-  private def probeDeltaImpl(index: CorpusIndex, batch: DataFrame,
-      digestPrefilter: DataFrame => DataFrame,
-      ordered: Boolean = true): DataFrame = {
-    val batchDig = batch.select(col("doc_id"), sha2(col("text"), 256).as("dg"))
-    val batchBands = bandKeys(batch)
-    val exactIds = digestPrefilter(batchDig)
-      .join(index.digests, Seq("dg"), "left_semi")
-      .select(col("doc_id")).withColumn("is_exact", lit(true))
-    val nearIds = batchBands.join(index.buckets, Seq("band", "band_key"), "left_semi")
-      .select(col("doc_id")).distinct().withColumn("is_near", lit(true))
-    val out = batch.select(col("doc_id"))
-      .join(exactIds, Seq("doc_id"), "left")
-      .join(nearIds, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("is_exact"), lit("exact_dup"))
-          .when(col("is_near"), lit("near_dup"))
-          .otherwise(lit("new")).as("status"))
-    if (ordered) out.orderBy(col("doc_id")) else out
+  /** One batch checked against a corpus index: every batch doc's digest
+    * (`doc_id, dg, hit`) and band keys (`doc_id, band, band_key, hit`),
+    * LEFT-joined to the index with a match flag. The matched rows give
+    * the status; the unmatched keys are exactly what an absorb must add
+    * (the complement of the matches), so one scan of each index table
+    * feeds both. Linear in |batch| + |index|: no pairwise comparison,
+    * band-bucket membership is the near-dup candidate test. */
+  final class Classified private[LlmOps] (digests: DataFrame, bands: DataFrame) {
+
+    /** `exact_dup` (digest in the index) over `near_dup` (a band key in
+      * the index) over `new`, one row per batch doc, unordered. */
+    def status: DataFrame = {
+      val near = bands.filter(col("hit")).select(col("doc_id")).distinct()
+        .withColumn("is_near", lit(true))
+      digests.join(near, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("hit"), lit("exact_dup"))
+            .when(col("is_near"), lit("near_dup"))
+            .otherwise(lit("new")).as("status"))
+    }
+
+    /** The absorb set: the batch's distinct keys the index lacks. */
+    def unmatched: CorpusIndex = CorpusIndex(
+      digests.filter(!col("hit")).select(col("dg")).distinct(),
+      bands.filter(!col("hit")).select(col("band"), col("band_key")).distinct())
+
+    /** Both frames materialized once. An eager localCheckpoint, not
+      * persist: an append to an index table invalidates every cached plan
+      * that reads it, so a persisted classification would be recomputed
+      * — the index re-scanned — by whatever runs after the first append
+      * (the same trap as [[writeBm25Gen]]'s). */
+    def pinned: Classified =
+      new Classified(digests.localCheckpoint(true), bands.localCheckpoint(true))
+  }
+
+  /** Classify `batch` against `index` ([[Classified]]). `mayMatch`, a
+    * predicate on the digest `dg`, narrows the digest join's input BELOW
+    * its shuffle (the bloom path); the rows it rejects are unmatched
+    * without a join, so it must never reject a true member. The default
+    * folds away: the rejected branch is an empty relation. */
+  def classify(index: CorpusIndex, batch: DataFrame,
+      mayMatch: Column = lit(true)): Classified = {
+    def flagged(keys: DataFrame, idx: DataFrame, on: Seq[String]): DataFrame =
+      keys.join(idx.select(on.map(col): _*).withColumn("hit", lit(true)), on, "left")
+        .withColumn("hit", col("hit").isNotNull)
+    val dig = batch.select(col("doc_id"), sha2(col("text"), 256).as("dg"))
+    new Classified(
+      flagged(dig.filter(mayMatch), index.digests, Seq("dg"))
+        .unionByName(dig.filter(!mayMatch).withColumn("hit", lit(false))),
+      flagged(bandKeys(batch), index.buckets, Seq("band", "band_key")))
   }
 
   def probeDelta(index: CorpusIndex, batch: DataFrame): DataFrame =
-    probeDeltaImpl(index, batch, identity)
-
-  /** [[probeDelta]] minus the global sort — for the streaming drains'
-    * PER-BATCH parquet sink, where the declared result is re-sorted once
-    * when the landed batches are read back (the per-batch orderBy bought
-    * nothing but a range-partitioning sample pass + sort per micro-batch:
-    * two extra jobs each). Row SET per batch is identical. */
-  private[graft] def probeDeltaUnsorted(index: CorpusIndex,
-      batch: DataFrame): DataFrame =
-    probeDeltaImpl(index, batch, identity, ordered = false)
+    classify(index, batch).status.orderBy(col("doc_id"))
 
   /** The probe's scale optimization (the q_bloom_join discipline applied
     * to the ingest path): a 128 KiB bloom over the digest index — always
     * broadcastable, whatever the index cardinality — prunes the batch's
-    * digest-probe input BELOW its shuffle, so the exact semi-join ships
-    * only likely-duplicate rows (on a mostly-novel ingest batch, almost
+    * digest-probe input BELOW its shuffle, so the exact join ships only
+    * likely-duplicate rows (on a mostly-novel ingest batch, almost
     * none). Keys are xxhash64 folds of the hex digest; the bloom has no
     * false negatives (ScalaCheck-spec'd in BloomSpec), and the exact
-    * semi-join scrubs its false positives — the rewrite is semantically
+    * join scrubs its false positives — the rewrite is semantically
     * INVISIBLE, which is why the declared query's oracle is the plain
     * qCorpusDeltaSql. */
   def probeDeltaBloom(index: CorpusIndex, batch: DataFrame): DataFrame = {
@@ -1700,8 +1722,8 @@ object LlmOps {
     val bits: Array[Long] = index.digests
       .select(xxhash64(col("dg")).as[Long])
       .select(new Bloom.BloomAggregator().toColumn).head()
-    probeDeltaImpl(index, batch,
-      dig => dig.filter(Bloom.mightContain(xxhash64(col("dg")), bits)))
+    classify(index, batch, Bloom.mightContain(xxhash64(col("dg")), bits))
+      .status.orderBy(col("doc_id"))
   }
 
   /** q_corpus_delta: the declared fixture split — doc_id % 10 < 8 plays
@@ -1876,7 +1898,7 @@ object LlmOps {
 
   /** REFCOUNTED corpus index: same keys as `buildCorpusIndex` plus a
     * per-key contributor count (docs per digest / docs per band bucket).
-    * The probe ignores `cnt` — the semi-joins touch keys only — so a
+    * The probe ignores `cnt` — [[classify]] joins on keys only — so a
     * refcounted index answers every `probeDelta` exactly like the
     * distinct-set index over the same corpus (CorpusGcSpec pins it).
     * The counts exist for the DELETE half of the lifecycle: dropping a

@@ -702,37 +702,12 @@ object Streaming {
     * the drain and persisted as BUCKETED tables on the probe join keys
     * (the production contract: ingest maintains an index TABLE, it never
     * recomputes — or reshuffles — the corpus; the bucketed layout means
-    * every per-batch probe semi-join reads the index exchange-free, see
-    * PlanSpec), via foreachBatch probe-by-semi-join. Per-batch results
-    * land in an appended parquet sink — the scale-honest sink: nothing
-    * corpus-sized ever collects on the driver. Classification is a pure
-    * per-doc function of (doc, index), so the result is batching-
-    * invariant and the oracle is EXACTLY qCorpusDeltaSql. */
-  def qStreamDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    GenTables.scratch(spark, "graft_delta") { (idxName, dir) =>
-      val (inDir, outDir) = (s"$dir/in", s"$dir/out")
-      LlmOps.saveBucketedIndex(spark,
-        LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)), dir, idxName)
-      val idx = LlmOps.loadBucketedIndex(spark, idxName)
-      LlmOps.deltaBatch(docs)
-        .repartition(4).write.mode("overwrite").parquet(inDir)
-      val schema = spark.read.parquet(inDir).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      drain(stream.writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // one OVERWRITTEN subdir per batch id: a retried micro-batch
-          // replaces its own output instead of appending a duplicate —
-          // the idempotent foreachBatch file-sink contract
-          LlmOps.probeDeltaUnsorted(idx, b)
-            .write.mode("overwrite").parquet(s"$outDir/b$id")
-          ()
-        }, "q_stream_delta", minDataBatches = 2)
-      Iterate.cut(spark.read.option("recursiveFileLookup", "true")
-        .parquet(outDir).orderBy(col("doc_id")))
-    }
-  }
+    * every per-batch probe reads the index exchange-free, see PlanSpec).
+    * The drain is q_stream_absorb's without the absorb. Classification
+    * is a pure per-doc function of (doc, index), so the result is
+    * batching-invariant and the oracle is EXACTLY qCorpusDeltaSql. */
+  def qStreamDelta(spark: SparkSession, sfDir: String): DataFrame =
+    streamClassifyAbsorbDrain(spark, sfDir, absorb = false, compactEvery = 0)
 
   /** q_stream_absorb: the FULL production ingest loop under streaming —
     * every micro-batch CLASSIFIES against the as-of view of the bucketed
@@ -751,7 +726,7 @@ object Streaming {
     * silently. The oracle replays file membership and the strict
     * earlier-file visibility rule. */
   def qStreamAbsorb(spark: SparkSession, sfDir: String): DataFrame =
-    streamClassifyAbsorbDrain(spark, sfDir, compactEvery = 0, inspectFinal = None)
+    streamClassifyAbsorbDrain(spark, sfDir, absorb = true, compactEvery = 0)
 
   /** q_stream_compact: the absorb loop WITH its maintenance schedule —
     * after every 2nd micro-batch the foreachBatch hook runs a size-TIERED
@@ -779,34 +754,37 @@ object Streaming {
     * strictly below kept bytes per pass, base partition untouched, and a
     * bounded generation count at drain end. */
   def qStreamCompact(spark: SparkSession, sfDir: String): DataFrame =
-    streamClassifyAbsorbDrain(spark, sfDir, compactEvery = 2, inspectFinal = None)
+    streamClassifyAbsorbDrain(spark, sfDir, absorb = true, compactEvery = 2)
 
-  /** The shared classify-then-absorb drain; `compactEvery` = 0 never
-    * compacts, k > 0 compacts after batches (id+1) % k == 0;
-    * `inspectFinal` (spec hook) runs with the index table name after the
-    * drain guard, before cleanup; `tierLog` (spec hook) receives each
-    * compaction pass's [[GenTables.TierCompaction]] report (None = the pass
-    * found nothing worth folding). */
+  /** The one classify-then-absorb drain of the dedup ingest queries.
+    * Each micro-batch lands its status under `b$id`, then, if `absorb`,
+    * absorbs its new keys as generation `id` ([[LlmOps.ingest]]);
+    * without `absorb` (q_stream_delta) it only classifies, against the
+    * standing index. `compactEvery` = 0 never compacts, k > 0 compacts
+    * after batches (id+1) % k == 0; `inspectFinal` (spec hook) runs with
+    * the index table name after the drain guard, before cleanup;
+    * `tierLog` (spec hook) receives each compaction pass's
+    * [[GenTables.TierCompaction]] report (None = the pass found nothing
+    * worth folding). */
   private[graft] def streamClassifyAbsorbDrain(spark: SparkSession,
-      sfDir: String, compactEvery: Int,
-      inspectFinal: Option[String => Unit],
+      sfDir: String, absorb: Boolean, compactEvery: Int,
+      inspectFinal: Option[String => Unit] = None,
       tierLog: Option[java.util.Queue[Option[GenTables.TierCompaction]]] = None): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val what = if (compactEvery > 0) "q_stream_compact" else "q_stream_absorb"
-    GenTables.scratch(spark, "graft_sabs") { (idxName, dir) =>
+    val (what, prefix, batch) =
+      if (!absorb) ("q_stream_delta", "graft_delta", LlmOps.deltaBatch(docs))
+      else (if (compactEvery > 0) "q_stream_compact" else "q_stream_absorb",
+        "graft_sabs", LlmOps.streamAbsorbBatch(docs))
+    GenTables.scratch(spark, prefix) { (idxName, dir) =>
       val (stageDir, inDir, outDir) = (s"$dir/stage", s"$dir/in", s"$dir/out")
       LlmOps.saveBucketedIndex(spark,
         LlmOps.buildCorpusIndex(docs.filter(col("doc_id") % 10 < 8)),
         dir, idxName, gen = -1L)
       java.nio.file.Files.createDirectory(java.nio.file.Paths.get(inDir))
-      val batch = LlmOps.streamAbsorbBatch(docs)
       val base = System.currentTimeMillis() - 3600000L
-      // stage all four slice files in ONE write job (dynamic partitioning:
-      // the single coalesced task opens one file per f= value) instead of
-      // four sequential filter+coalesce(1) jobs — slice membership is
-      // identical (f = doc_id % 4, the declared assignment) and only the
-      // job count changes; the files then move under inDir with strictly
-      // ascending mtimes exactly as before
+      // stage the four slice files (f = doc_id % 4, the declared
+      // assignment) in ONE write job — dynamic partitioning, one file per
+      // f= value — then move them under inDir with ascending mtimes
       batch.withColumn("f", pmod(col("doc_id"), lit(4)).cast("int"))
         .coalesce(1).write.mode("overwrite")
         .partitionBy("f").parquet(stageDir)
@@ -824,32 +802,18 @@ object Streaming {
         .option("maxFilesPerTrigger", "1").parquet(inDir)
       drain(stream.writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
-          // classify + absorb drive 5 actions over this micro-batch
-          // (digest probe, band probe, status join, two maintenance
-          // appends) — persist spares 4 re-reads of the staged file and
-          // 4 recomputes of the batch minhash bands
-          val batch = b.persist()
-          try {
-            val asOf = LlmOps.loadBucketedIndex(spark, idxName,
-              maxGenExclusive = Some(id))
-            // probe and absorb are INDEPENDENT halves of the batch: the
-            // probe classifies against gens < id and the absorb appends
-            // gen = id, so even if the absorb's visibility refresh lands
-            // mid-probe the probe's partition filter prunes the new
-            // generation — overlap them (guide §2.6), like the absorb's
-            // own paired digest/bucket appends one level down.
-            // FAILURE MODE of the overlap: a probe failure no longer
-            // prevents the absorb from committing gen = id, so a batch
-            // can be absorbed while its $outDir/b$id output is missing —
-            // consumers must not infer probe completeness from absorbed
-            // generations. The RETRY itself stays deterministic: the
-            // retried probe's maxGenExclusive = id still fences out the
-            // batch's own generation, and the b$id rewrite is
-            // mode=overwrite.
-            LlmOps.inParallelAll(
-              () => LlmOps.probeDeltaUnsorted(asOf, batch)
-                .write.mode("overwrite").parquet(s"$outDir/b$id"),
-              () => LlmOps.absorbInto(spark, idxName, batch, gen = id))
+          // one OVERWRITTEN subdir per batch id: a retried micro-batch
+          // replaces its own output instead of appending a duplicate —
+          // the idempotent foreachBatch file-sink contract
+          def land(status: DataFrame): Unit =
+            status.write.mode("overwrite").parquet(s"$outDir/b$id")
+          if (!absorb)
+            land(LlmOps.classify(LlmOps.loadBucketedIndex(spark, idxName), b).status)
+          else {
+            // status first, then the absorb — a retried batch re-classifies
+            // against gens < id and overwrites both its b$id output and
+            // its own gen = id
+            LlmOps.ingest(spark, idxName, b, gen = id)(land)
             if (compactEvery > 0 && (id + 1) % compactEvery == 0) {
               // tiered maintenance, in place: fold only the small
               // generations (never this batch's own gen = id — a retried
@@ -858,14 +822,13 @@ object Streaming {
                 currentGen = id)
               tierLog.foreach(q => { q.add(report); () })
             }
-          } finally { batch.unpersist(); () }
-        }, what)
+          }
+        }, what, minDataBatches = 2)
       // order guard: batch b's output must be exactly the doc_id % 4 == b
       // slice — anything else means the file source broke the declared
       // order and the gen-scoped classification no longer matches the
-      // oracle's earlier-file rule. ONE job over all four batch dirs
-      // (batch id recovered from the file path) instead of four
-      // read+count jobs — the predicate per row is unchanged.
+      // oracle's earlier-file rule. ONE job over all four batch dirs, the
+      // batch id recovered from the file path.
       val off = spark.read.parquet((0 until 4).map(b => s"$outDir/b$b"): _*)
         .select(col("doc_id"),
           regexp_extract(input_file_name(), "/b(\\d+)/", 1).cast("int").as("b"))

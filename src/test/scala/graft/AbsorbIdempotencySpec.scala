@@ -7,10 +7,10 @@ import graft.engine.LlmOps
   * round-12 verdict named alongside the tiered fold (directive 4):
   *
   *  - [[LlmOps.absorbInto]]'s digests/buckets appends are not atomic as a
-  *    pair, but the anti-join discipline makes a RETRY self-healing: rows
-  *    already present append nothing, missing rows (a lost second append,
-  *    a torn partial commit) are re-derived from the batch and filled in.
-  *    These tests crash the pass both ways and pin retry == clean twin.
+  *    pair, but each append REPLACES its generation, so a RETRY is
+  *    self-healing: a lost second append or a torn partial commit is
+  *    re-derived from the batch and rewritten whole. These tests crash
+  *    the pass both ways and pin retry == clean twin.
   *  - [[LlmOps.compactIndexCutover]] fences the build-then-drop offline
   *    compaction: a retry from any crash point (partial build, between
   *    build and drop, mid-drop, after drop) converges to exactly one
@@ -32,19 +32,9 @@ class AbsorbIdempotencySpec extends SparkSpec {
       v.buckets.collect().map(r => (r.getInt(0), r.getLong(1))).toSet)
   }
 
-  private def rmTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
-
   test("absorbInto retried after a crash between the pair's appends converges") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_absA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_absB").toString
+    val dirA = tempDir("graft_absA")
+    val dirB = tempDir("graft_absB")
     val (a, b) = ("graft_spec_abs_a", "graft_spec_abs_b")
     try {
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirA, a)
@@ -58,21 +48,20 @@ class AbsorbIdempotencySpec extends SparkSpec {
       hfs.delete(bloc, true)
       spark.catalog.refreshTable(s"${a}_buckets")
 
-      // the replayed batch re-runs the SAME absorb: digests anti-join
-      // appends nothing, buckets absorbs what the crash lost
+      // the replayed batch re-runs the SAME absorb: both generations are
+      // rewritten, buckets regains what the crash lost
       LlmOps.absorbInto(spark, a, batch, gen = 1L)
       LlmOps.absorbInto(spark, b, batch, gen = 1L)
       assert(contentOf(a) == contentOf(b),
         "retried absorb must equal the uninterrupted twin row-for-row")
     } finally {
       LlmOps.dropBucketedIndex(spark, a); LlmOps.dropBucketedIndex(spark, b)
-      rmTree(dirA); rmTree(dirB)
     }
   }
 
   test("absorbInto retried after a TORN digests append back-fills the lost rows") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_absTA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_absTB").toString
+    val dirA = tempDir("graft_absTA")
+    val dirB = tempDir("graft_absTB")
     val (a, b) = ("graft_spec_abst_a", "graft_spec_abst_b")
     try {
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirA, a)
@@ -96,30 +85,31 @@ class AbsorbIdempotencySpec extends SparkSpec {
         "the torn state must have been missing rows for this test to mean anything")
     } finally {
       LlmOps.dropBucketedIndex(spark, a); LlmOps.dropBucketedIndex(spark, b)
-      rmTree(dirA); rmTree(dirB)
     }
   }
 
   test("probe∥absorb: a batch whose absorb committed but whose probe was lost retries to the clean twin") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_paA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_paB").toString
+    val dirA = tempDir("graft_paA")
+    val dirB = tempDir("graft_paB")
     val (a, b) = ("graft_spec_pa_a", "graft_spec_pa_b")
+    def rows(status: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      status.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     def probe(name: String, asOf: Option[Long]): Seq[(Long, String)] =
-      LlmOps.probeDeltaUnsorted(LlmOps.loadBucketedIndex(spark, name, asOf), batch)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+      rows(LlmOps.probeDelta(LlmOps.loadBucketedIndex(spark, name, asOf), batch))
     try {
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirA, a, gen = -1L)
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dirB, b, gen = -1L)
 
-      // batch 0 on `a`, as the streaming drain overlaps it: the absorb
-      // committed gen 0, the probe's output was lost
+      // batch 0 on `a`: the absorb committed gen 0, the status output was
+      // lost
       LlmOps.absorbInto(spark, a, batch, gen = 0L)
-      // the retried batch 0: probe the as-of view, absorb again
-      val retried = probe(a, Some(0L))
-      LlmOps.absorbInto(spark, a, batch, gen = 0L)
+      // the retried batch 0: the fused step classifies the as-of view,
+      // lands the status, absorbs again
+      var retried = Seq.empty[(Long, String)]
+      LlmOps.ingest(spark, a, batch, gen = 0L)(st => retried = rows(st))
       // the clean twin runs batch 0 once
-      val clean = probe(b, Some(0L))
-      LlmOps.absorbInto(spark, b, batch, gen = 0L)
+      var clean = Seq.empty[(Long, String)]
+      LlmOps.ingest(spark, b, batch, gen = 0L)(st => clean = rows(st))
 
       assert(retried == clean, "the retried probe must equal the clean probe row for row")
       assert(contentOf(a) == contentOf(b), "the retried index must equal the clean twin")
@@ -128,12 +118,11 @@ class AbsorbIdempotencySpec extends SparkSpec {
         "an unfenced probe must differ, or this test shows nothing")
     } finally {
       LlmOps.dropBucketedIndex(spark, a); LlmOps.dropBucketedIndex(spark, b)
-      rmTree(dirA); rmTree(dirB)
     }
   }
 
   test("compactIndexCutover converges from every crash point") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cut").toString
+    val dir = tempDir("graft_cut")
     val (from, to) = ("graft_spec_cut_from", "graft_spec_cut_to")
     try {
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), s"$dir/g", from)
@@ -176,7 +165,6 @@ class AbsorbIdempotencySpec extends SparkSpec {
       assert(boom.getMessage.contains("cutover"), boom.getMessage)
     } finally {
       LlmOps.dropBucketedIndex(spark, from); LlmOps.dropBucketedIndex(spark, to)
-      rmTree(dir)
     }
   }
 }

@@ -21,16 +21,6 @@ class Bm25IndexSpec extends SparkSpec {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
       .map(_.getPath.getName.stripPrefix("gen=").toLong).toSet
 
-  private def rmTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
-
   test("re-absorb is a no-op; merged top-k == rebuild; tiered fold preserves answers") {
     val docs = Tables.documents(spark, sf)
     // 80/10/10: the two batch generations must each sit at or below HALF
@@ -41,7 +31,7 @@ class Bm25IndexSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val b2 = docs.filter(col("doc_id") % 10 === 9)
       .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25ix").toString
+    val dir = tempDir("graft_bm25ix")
     val name = "graft_spec_bm25"
     try {
       LlmOps.saveBm25Index(spark, corpus, dir, name)
@@ -88,7 +78,6 @@ class Bm25IndexSpec extends SparkSpec {
         "the tiered fold must not change a single answer")
     } finally {
       LlmOps.dropBm25Index(spark, name)
-      rmTree(dir)
     }
   }
 
@@ -103,7 +92,7 @@ class Bm25IndexSpec extends SparkSpec {
       Seq((41L, "apple zebra"), (42L, "apple zebra"))).toDF("doc_id", "text")
     val batch1 = Seq((101L, "apple plum"), (102L, "apple plum")).toDF("doc_id", "text")
     val batch2 = Seq((201L, "apple grape"), (202L, "apple grape")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25col").toString
+    val dir = tempDir("graft_bm25col")
     val name = "graft_spec_bm25col"
     try {
       LlmOps.saveBm25Index(spark, corpus, dir, name)
@@ -123,7 +112,6 @@ class Bm25IndexSpec extends SparkSpec {
         s"fold collapsed colliding tdf rows: $before -> ${mergedDf()}")
     } finally {
       LlmOps.dropBm25Index(spark, name)
-      rmTree(dir)
     }
   }
 }

@@ -39,7 +39,7 @@ class ChangelogSpec extends SparkSpec {
   }
 
   test("stream == batch over the changelog; updates land in later windows than their originals") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cl_ck").toString
+    val ckpt = tempDir("graft_cl_ck")
     graft.engine.Streaming.drain(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", N.toString).option("pageSize", "500")
       .option("windowRows", "1000")

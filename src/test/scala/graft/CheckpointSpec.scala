@@ -10,9 +10,9 @@ import graft.engine.{Streaming, Tables}
 class CheckpointSpec extends SparkSpec {
 
   test("restart from checkpoint processes only new files, no duplicates") {
-    val in = java.nio.file.Files.createTempDirectory("graft_ck_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_ck_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_ck_state").toString
+    val in = tempDir("graft_ck_in")
+    val out = tempDir("graft_ck_out")
+    val ck = tempDir("graft_ck_state")
     val raw = Tables.eventsRaw(spark, sf)
     val schema = raw.schema
     val firstHalf = raw.filter(col("event_id") < 500)
@@ -48,9 +48,9 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("dedup state survives restart: replay arriving after restart is absorbed") {
-    val in = java.nio.file.Files.createTempDirectory("graft_dk_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_dk_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft_dk_state").toString
+    val in = tempDir("graft_dk_in")
+    val out = tempDir("graft_dk_out")
+    val ck = tempDir("graft_dk_state")
     val events = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val schema = events.schema

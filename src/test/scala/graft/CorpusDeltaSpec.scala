@@ -93,7 +93,7 @@ class CorpusDeltaSpec extends SparkSpec {
     val corpus = docs.filter(col("doc_id") % 10 < 6)
     val batch1 = docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8)
       .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bidx").toString
+    val dir = tempDir("graft_bidx")
     val name = "graft_spec_bidx"
     try {
       LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), dir, name)
@@ -131,13 +131,6 @@ class CorpusDeltaSpec extends SparkSpec {
       }
     } finally {
       LlmOps.dropBucketedIndex(spark, name)
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
     }
   }
 
@@ -177,7 +170,7 @@ class CorpusDeltaSpec extends SparkSpec {
 
   test("compaction: collapses generations and small files, probe-invisible") {
     val docs = graft.engine.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cidx").toString
+    val dir = tempDir("graft_cidx")
     val name = "graft_spec_cidx"
     // recursive: table data now lives under per-generation partition dirs
     def parquetFiles(d: String): Int = {
@@ -213,13 +206,6 @@ class CorpusDeltaSpec extends SparkSpec {
     } finally {
       LlmOps.dropBucketedIndex(spark, name)
       LlmOps.dropBucketedIndex(spark, s"${name}_c")
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
     }
   }
 

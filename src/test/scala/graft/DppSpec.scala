@@ -12,7 +12,7 @@ import graft.engine.Tables
 class DppSpec extends SparkSpec {
 
   test("join through a filtered dim prunes fact partitions dynamically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp")
     // fact: orders partitioned by priority; dim: one row per priority
     Tables.orders(spark, sf)
       .write.partitionBy("o_orderpriority").parquet(s"$dir/fact")

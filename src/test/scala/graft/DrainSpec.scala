@@ -12,7 +12,7 @@ class DrainSpec extends SparkSpec {
 
   /** A file-source stream over `files` one-file batches of `rows` ids. */
   private def idStream(files: Int, rows: Int): DataFrame = {
-    val dir = StreamRuns.tempDir("graft_drain_in")
+    val dir = tempDir("graft_drain_in")
     for (f <- 0 until files) {
       val staged = s"$dir/stage$f"
       spark.range(f * rows, (f + 1) * rows).coalesce(1).write.parquet(staged)

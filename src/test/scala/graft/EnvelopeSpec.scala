@@ -68,7 +68,7 @@ class EnvelopeSpec extends SparkSpec {
 
   test("embed e2e: empty document survives the rendered query (oracle LEFT JOIN convention)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm").toString
+    val dir = tempDir("graft_mm")
     Seq((1L, ""), (2L, "hello world")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Multimodal.qMultimodalEmbed(spark, dir).orderBy(col("doc_id")).collect()
@@ -80,7 +80,7 @@ class EnvelopeSpec extends SparkSpec {
 
   test("frame hash: engine fold equals the oracle's unsigned byte algebra on non-ASCII payloads") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mmf").toString
+    val dir = tempDir("graft_mmf")
     // multi-byte UTF-8 throughout: 2-byte (ü), 3-byte (— / 漢), 4-byte (🎬)
     // chars land >= 0x80 payload bytes at varied frame offsets
     val texts = Seq(

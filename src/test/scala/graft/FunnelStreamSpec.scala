@@ -13,10 +13,10 @@ class FunnelStreamSpec extends SparkSpec {
   test("streamed funnel stage times == batch userStages across micro-batches") {
     val raw = Tables.eventsRaw(spark, sf)
     val cut = lit(raw.selectExpr("percentile_approx(ts, 0.5) AS c").head().get(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fun_mb").toString
+    val dir = tempDir("graft_fun_mb")
     raw.filter(col("ts") <= cut).coalesce(1).write.parquet(s"$dir/f1")
     raw.filter(col("ts") > cut).coalesce(1).write.parquet(s"$dir/f2")
-    val flat = java.nio.file.Files.createTempDirectory("graft_fun_flat").toString
+    val flat = tempDir("graft_fun_flat")
     var idx = 0
     for (sub <- Seq("f1", "f2"); f <- new java.io.File(s"$dir/$sub").listFiles()
          if f.getName.endsWith(".parquet")) {

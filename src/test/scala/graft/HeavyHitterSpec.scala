@@ -115,7 +115,7 @@ class HeavyHitterSpec extends SparkSpec {
     val docs = engine.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val n = docs.count()
-    val in = java.nio.file.Files.createTempDirectory("hh_in").toString
+    val in = tempDir("hh_in")
     docs.filter(col("doc_id") * 3 < n).coalesce(1).write.parquet(s"$in/a")
     docs.filter(col("doc_id") * 3 >= n && col("doc_id") * 3 < 2 * n)
       .coalesce(1).write.parquet(s"$in/b")

@@ -352,7 +352,7 @@ class HttpPagedSpec extends SparkSpec {
 
   test("AvailableNow drain over HTTP == batch read (multi-window, multi-page)") {
     withFixture(Map("events" -> 2500L)) { fx =>
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_http_ck").toString
+      val ckpt = tempDir("graft_http_ck")
       StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", 2500L).option("pageSize", 300)
         .option("windowRows", 1000L)
@@ -427,14 +427,14 @@ class HttpPagedSpec extends SparkSpec {
         reqs.sorted
       }
       fx.requests.clear()
-      run(StreamRuns.tempDir("graft_http_pp"), availableNow = false)
+      run(tempDir("graft_http_pp"), availableNow = false)
       val perPoll = pageRequests()
       assert(landed.get() == 3400L)
       // customer: windows 1000/300 → 4 + 1 pages; invoice: 1000/1000/100
       // → 4 + 4 + 1 pages
       assert(perPoll.size == 14, s"per-poll drain sent $perPoll")
 
-      val ckpt = StreamRuns.tempDir("graft_http_an")
+      val ckpt = tempDir("graft_http_an")
       run(ckpt, availableNow = true)
       assert(landed.get() == 3400L)
       assert(StreamRuns.offsetJsons(ckpt).length == 1)

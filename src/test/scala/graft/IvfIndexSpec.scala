@@ -10,7 +10,7 @@ import graft.engine.{IvfIndex, LlmOps, Tables}
 class IvfIndexSpec extends SparkSpec {
 
   test("probe over the persisted index == inline q_sim_ivf; scans only probed cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf")
     val emb = Tables.embeddings(spark, sf)
     IvfIndex.build(emb, dir, k = 16, iters = 2)
 

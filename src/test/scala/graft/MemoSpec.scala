@@ -10,9 +10,6 @@ import graft.engine.{LlmOps, Memo, Quantize, Tables}
   * next build pay the compute. */
 class MemoSpec extends SparkSpec {
 
-  private def tempDir(): String =
-    Files.createTempDirectory("graft_memo").toString
-
   /** Jobs `f` runs, counted by a RunListener. */
   private def jobs(f: => Any): Int = {
     val rl = new RunListener
@@ -23,7 +20,7 @@ class MemoSpec extends SparkSpec {
 
   test("a table rewritten at its path is loaded with its new schema") {
     import spark.implicits._
-    val dir = tempDir()
+    val dir = tempDir("graft_memo")
     Seq((1L, "a")).toDF("id", "s").write.parquet(s"$dir/t.parquet")
     assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s"))
     Seq((2L, "b", 3)).toDF("id", "s", "n")
@@ -34,7 +31,7 @@ class MemoSpec extends SparkSpec {
   }
 
   test("q_span_dedup on a rewritten documents table is not served stale") {
-    val dir = tempDir()
+    val dir = tempDir("graft_memo")
     val docs = s"$dir/documents.parquet"
     Files.copy(Paths.get(s"$sf/documents.parquet"), Paths.get(docs))
     def top20() = LlmOps.qSpanDedup(spark, dir).collect().map(_.toString).toSeq

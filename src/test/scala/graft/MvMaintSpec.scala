@@ -68,7 +68,7 @@ class MvMaintSpec extends SparkSpec {
 
   test("streaming maintenance: foreachBatch merge over micro-batches == batch recompute") {
     // stage events as 3 files; maxFilesPerTrigger=1 forces 3 micro-batches
-    val in = java.nio.file.Files.createTempDirectory("mv_in").toString
+    val in = tempDir("mv_in")
     val raw = Tables.eventsRaw(spark, sf)
     val n = raw.count()
     raw.filter(col("event_id") * 3 < n).coalesce(1).write.parquet(s"$in/s1")
@@ -144,7 +144,7 @@ class MvMaintSpec extends SparkSpec {
       .select(to_timestamp(col("us") / 1000000L).as("ts"),
         lit("s").as("event_type"), col("value"),
         lit(1L).as("event_id"), lit(1L).as("user_id"), lit("{}").as("props"))
-    val dir = java.nio.file.Files.createTempDirectory("interp").toString
+    val dir = tempDir("interp")
     df.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = Resample.qInterpolate(spark, dir)
       .select(col("bucket_us"), col("interp_cents")).collect()

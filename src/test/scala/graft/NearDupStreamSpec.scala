@@ -26,10 +26,10 @@ class NearDupStreamSpec extends SparkSpec {
         (100L, base.replace("word30", "changed")), // near-dup of doc 1
         (101L, Seq.tabulate(50)(j => s"fresh_$j").mkString(" "))
       ).toDF("doc_id", "text")
-      val dir = java.nio.file.Files.createTempDirectory("graft_nd").toString
+      val dir = tempDir("graft_nd")
       b1.coalesce(1).write.parquet(s"$dir/f1")
       b2.coalesce(1).write.parquet(s"$dir/f2")
-      val flat = java.nio.file.Files.createTempDirectory("graft_nd_flat").toString
+      val flat = tempDir("graft_nd_flat")
       var idx = 0
       for (sub <- Seq("f1", "f2"); f <- new java.io.File(s"$dir/$sub").listFiles()
            if f.getName.endsWith(".parquet")) {
@@ -70,9 +70,9 @@ class NearDupStreamSpec extends SparkSpec {
       val b1 = Seq((1L, base)).toDF("doc_id", "text")
       val dup = Seq((100L, base.replace("word30", "changed"))).toDF("doc_id", "text")
       def run(name: String, batches: Seq[org.apache.spark.sql.DataFrame]): Seq[(Long, Long, Int)] = {
-        val flat = java.nio.file.Files.createTempDirectory(name).toString
+        val flat = tempDir(name)
         batches.zipWithIndex.foreach { case (b, i) =>
-          val tmp = java.nio.file.Files.createTempDirectory(s"${name}_w").toString
+          val tmp = tempDir(s"${name}_w")
           b.coalesce(1).write.mode("overwrite").parquet(tmp)
           val src = new java.io.File(tmp).listFiles()
             .filter(_.getName.endsWith(".parquet")).head

@@ -52,7 +52,7 @@ class PagedRetrySpec extends SparkSpec {
 
   test("fault-injected AvailableNow drain == clean drain; offset log shows retry_count > 0") {
     def drained(view: String, availableNow: Boolean): Seq[PagedStreamOffset] = {
-      val ckpt = StreamRuns.tempDir("graft_rt_ck")
+      val ckpt = tempDir("graft_rt_ck")
       val df = spark.readStream.format("graft.sources.PagedEntitySource")
         .option("rows", "2500").option("pageSize", "300")
         .option("windowRows", "1000")
@@ -95,7 +95,7 @@ class PagedRetrySpec extends SparkSpec {
     // row → reset: cursor back to 0, entity rescheduled to id 1440; the
     // 2500-row extent passes that mark, so the window reopens and
     // re-serves [0, 600) — the reference's at-least-once replay
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rs_ck").toString
+    val ckpt = tempDir("graft_rs_ck")
     StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("rows", "2500").option("pageSize", "300")
       .option("windowRows", "1000")
@@ -126,7 +126,7 @@ class PagedRetrySpec extends SparkSpec {
     // both entities exhaust the page at pos 600 for 10 polls in a row; the
     // 11th poll must reset BOTH — one entity's reset must not retire the
     // outage the other is still counting — and both replay [0, 600)
-    val ckpt = StreamRuns.tempDir("graft_me_ck")
+    val ckpt = tempDir("graft_me_ck")
     StreamRuns.drainToMemory(spark.readStream.format("graft.sources.PagedEntitySource")
       .option("entities", "a,b").option("rows", "2500").option("pageSize", "300")
       .option("windowRows", "1000")
@@ -150,7 +150,7 @@ class PagedRetrySpec extends SparkSpec {
   test("reset parks the entity when data growth has not passed the reschedule mark") {
     // target 1200 < reschedule mark 1440 ⇒ after the reset the drain ends
     // with the entity parked; a later run with more data resumes it
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pk_ck").toString
+    val ckpt = tempDir("graft_pk_ck")
     def drain(rows: Long): Seq[Long] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
       StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
@@ -257,7 +257,7 @@ class PagedRetrySpec extends SparkSpec {
     val batch = src(stream = false)
       .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
     def drained(view: String, availableNow: Boolean): Int = {
-      val ckpt = StreamRuns.tempDir("graft_mf_ck")
+      val ckpt = tempDir("graft_mf_ck")
       StreamRuns.drainToMemory(src(stream = true), view, ckpt, availableNow)
       val got = spark.table(view)
         .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq

@@ -28,7 +28,7 @@ class PagedStreamSpec extends SparkSpec {
 
   test("stream == batch over a multi-window replay; offsets carry the reference state shape") {
     // per-poll run: under ProcessingTime a micro-batch is still one poll
-    val perPollCkpt = StreamRuns.tempDir("graft_pp_ck")
+    val perPollCkpt = tempDir("graft_pp_ck")
     StreamRuns.drainToMemory(stream(), "paged_stream_polls", perPollCkpt,
       availableNow = false)
     val batch = spark.read.format("graft.sources.PagedEntitySource")
@@ -68,7 +68,7 @@ class PagedStreamSpec extends SparkSpec {
 
     // AvailableNow: the same polls, committed as ONE micro-batch — the
     // same rows and the same final 7-field offset, logged once
-    val ckpt = StreamRuns.tempDir("graft_ps_ck")
+    val ckpt = tempDir("graft_ps_ck")
     StreamRuns.drainToMemory(stream(), "paged_stream", ckpt, availableNow = true)
     assert(sorted("paged_stream") == batch)
     val drained = StreamRuns.offsetJsons(ckpt)
@@ -95,7 +95,7 @@ class PagedStreamSpec extends SparkSpec {
     // COMMITTED last_processed — nothing re-read, nothing skipped.
     // Simulated by growing `rows` between two AvailableNow runs over one
     // checkpoint (the generator's extent IS "data available now").
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pg_ck").toString
+    val ckpt = tempDir("graft_pg_ck")
     def drain(rows: Long): Seq[Long] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
       StreamRuns.drain(spark.readStream.format("graft.sources.PagedEntitySource")
@@ -131,7 +131,7 @@ class PagedStreamSpec extends SparkSpec {
     val batch = src(reader = true)
       .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
     def drained(view: String, availableNow: Boolean): Seq[String] = {
-      val ckpt = StreamRuns.tempDir("graft_pm_ck")
+      val ckpt = tempDir("graft_pm_ck")
       StreamRuns.drainToMemory(src(reader = false), view, ckpt, availableNow)
       val got = spark.table(view)
         .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
@@ -192,7 +192,7 @@ class PagedStreamSpec extends SparkSpec {
   }
 
   test("entity added to the config after a checkpoint starts from INITIAL_LOAD") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pa_ck").toString
+    val ckpt = tempDir("graft_pa_ck")
     def drain(entities: String, opts: Map[String, String]): Seq[(String, Long)] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
       var r = spark.readStream.format("graft.sources.PagedEntitySource")

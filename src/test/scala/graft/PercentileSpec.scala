@@ -63,7 +63,7 @@ class PercentileSpec extends SparkSpec {
       }
     }
     val df = data.toDF("l_returnflag", "l_quantity", "l_extendedprice", "l_discount")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pexact").toString
+    val dir = tempDir("graft_pexact")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val ours = Relational.qPercentileExact(spark, dir).collect()
     val builtin = df.groupBy(col("l_returnflag"))
@@ -99,7 +99,7 @@ class PercentileSpec extends SparkSpec {
       }
     }
     val df = data.toDF("l_returnflag", "l_extendedprice")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pct").toString
+    val dir = tempDir("graft_pct")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val ours = Relational.qPercentileDisc(spark, dir).collect()
     val builtin = df.groupBy(col("l_returnflag"))

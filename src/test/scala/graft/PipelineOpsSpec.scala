@@ -221,10 +221,10 @@ class PipelineOpsSpec extends SparkSpec {
   test("streamed anomaly gate == batch q_anomaly across two micro-batches") {
     val raw = Tables.eventsRaw(spark, sf)
     val cut = lit(raw.selectExpr("percentile_approx(ts, 0.5) AS c").head().get(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom_mb").toString
+    val dir = tempDir("graft_anom_mb")
     raw.filter(col("ts") <= cut).coalesce(1).write.parquet(s"$dir/f1")
     raw.filter(col("ts") > cut).coalesce(1).write.parquet(s"$dir/f2")
-    val flat = java.nio.file.Files.createTempDirectory("graft_anom_flat").toString
+    val flat = tempDir("graft_anom_flat")
     var idx = 0
     for (sub <- Seq("f1", "f2"); f <- new java.io.File(s"$dir/$sub").listFiles()
          if f.getName.endsWith(".parquet")) {

@@ -62,7 +62,7 @@ class PlanSpec extends SparkSpec {
       1L, 499L, 500L, 999L, 1000L, 1500L, 2000L)
     // parquet, not a local relation: ConvertToLocalRelation would evaluate
     // the original predicate before extraOptimizations ever run
-    val dir = java.nio.file.Files.createTempDirectory("graft_nanos").toString
+    val dir = tempDir("graft_nanos")
     xs.toDF("x").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
     // every (op, µs-bound) pair the rule rewrites, around zero where the
@@ -164,11 +164,12 @@ class PlanSpec extends SparkSpec {
       "q_cosine_pairs"    -> ((7, 0, false)),
       "q_pagerank"        -> ((0, 0, false)), // cut leaves; see Graph.scala
       "q_ann_recall"      -> ((9, 1, true)),
-      // round-9: the incremental-ingest probe — index-side distincts +
-      // batch digest/band aggs + the three status joins; ZERO broadcasts
-      // pinned deliberately (at 100 TB neither the index nor the batch is
-      // small; the probes must stay shuffle semi-joins)
-      "q_corpus_delta"    -> ((17, 0, true)))
+      // the incremental-ingest probe — index-side distincts + one
+      // flagged left join per index table + the near distinct and the
+      // one status join (17 before the single classification); ZERO
+      // broadcasts pinned deliberately (at 100 TB neither the index nor
+      // the batch is small; the probes must stay shuffle joins)
+      "q_corpus_delta"    -> ((11, 0, true)))
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {

@@ -14,7 +14,7 @@ class RocksDbStateSpec extends SparkSpec {
   test("streaming dedup under the RocksDB state store matches the default store") {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val saved = spark.conf.getOption(key)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocks").toString
+    val dir = tempDir("graft_rocks")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/a.parquet"))

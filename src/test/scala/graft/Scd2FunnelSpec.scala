@@ -74,8 +74,8 @@ class Scd2FunnelSpec extends SparkSpec {
     // poll (one page) per micro-batch; AvailableNow would land the whole
     // drain as one batch.
     import org.apache.spark.sql.{DataFrame, functions => F}
-    val store = java.nio.file.Files.createTempDirectory("graft_scd2_inc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_scd2_ck").toString
+    val store = tempDir("graft_scd2_inc")
+    val ckpt = tempDir("graft_scd2_ck")
     val ver = new java.util.concurrent.atomic.AtomicInteger(0)
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
 

@@ -17,37 +17,26 @@ class ScratchCleanupSpec extends SparkSpec {
     spark.catalog.listTables().collect().map(_.name).toSet
       .filter(_.startsWith(prefix)))
 
-  private def rmTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
-
   test("a failed index build leaves no scratch dir or table: q_stream_delta, q_stream_compact") {
-    val badSf = java.nio.file.Files.createTempDirectory("graft_spec_badsf").toString
-    try {
-      spark.range(40).select(col("id").as("doc_id"), col("id").as("text"))
-        .write.parquet(s"$badSf/documents.parquet")
-      Seq("q_stream_delta" -> "graft_delta", "q_stream_compact" -> "graft_sabs")
-        .foreach { case (query, prefix) =>
-          val before = leftovers(prefix)
-          intercept[Exception](SparkEntry.queries(query)(spark, badSf))
-          val (dirs, tables) = leftovers(prefix)
-          assert(dirs == before._1,
-            s"$query leaked temp dirs: ${(dirs -- before._1).mkString(", ")}")
-          assert(tables == before._2,
-            s"$query leaked tables: ${(tables -- before._2).mkString(", ")}")
-        }
-    } finally rmTree(badSf)
+    val badSf = tempDir("graft_spec_badsf")
+    spark.range(40).select(col("id").as("doc_id"), col("id").as("text"))
+      .write.parquet(s"$badSf/documents.parquet")
+    Seq("q_stream_delta" -> "graft_delta", "q_stream_compact" -> "graft_sabs")
+      .foreach { case (query, prefix) =>
+        val before = leftovers(prefix)
+        intercept[Exception](SparkEntry.queries(query)(spark, badSf))
+        val (dirs, tables) = leftovers(prefix)
+        assert(dirs == before._1,
+          s"$query leaked temp dirs: ${(dirs -- before._1).mkString(", ")}")
+        assert(tables == before._2,
+          s"$query leaked tables: ${(tables -- before._2).mkString(", ")}")
+      }
   }
 
   test("a completed run leaves no scratch dir or table, its second index included") {
     Seq("q_corpus_compact" -> "graft_compact", "q_corpus_gc" -> "graft_gc",
-      "q_ivf_serve" -> "graft_ivf_serve").foreach { case (query, prefix) =>
+      "q_ivf_serve" -> "graft_ivf_serve", "q_stream_absorb" -> "graft_sabs",
+      "q_stream_delta" -> "graft_delta").foreach { case (query, prefix) =>
       val before = leftovers(prefix)
       assert(SparkEntry.queries(query)(spark, sf).count() > 0)
       assert(leftovers(prefix) == before, s"$query left ${leftovers(prefix)}")

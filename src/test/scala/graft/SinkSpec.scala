@@ -19,7 +19,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("partitioned write lays out _entity_type/dt dirs and readers prune them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir("graft_sink")
     val df = graft.engine.Envelope.enriched(
       Tables.events(spark, sf), "events", "INITIAL_LOAD", 0L)
     Sink.writePartitioned(df, dir, "ts")
@@ -31,7 +31,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("compact partitioned write bounds files per partition dir") {
-    val base = java.nio.file.Files.createTempDirectory("graft_cmp").toString
+    val base = tempDir("graft_cmp")
     // many upstream partitions × many dt values = the small-files setup
     val df = graft.engine.Envelope.enriched(
       Tables.events(spark, sf), "events", "INITIAL_LOAD", 0L).repartition(8)
@@ -108,7 +108,7 @@ class SinkSpec extends SparkSpec {
   }
 
   test("idempotent batch writer: replaying a batch does not duplicate") {
-    val out = java.nio.file.Files.createTempDirectory("graft_idem").toString
+    val out = tempDir("graft_idem")
     val e = Tables.events(spark, sf).limit(100)
     Sink.idempotentBatchWriter(out)(e, 7L)
     Sink.idempotentBatchWriter(out)(e, 7L) // replay of the same micro-batch

@@ -186,7 +186,7 @@ class SketchQuantChunkSpec extends SparkSpec {
     import spark.implicits._
     val posting = (0L until 64L).map(i => (i % 8, i, Array.fill(4)((i % 100).toInt)))
       .toDF("cid", "vec_id", "qv")
-    val dir = java.nio.file.Files.createTempDirectory("graft_serve_spec").toString
+    val dir = tempDir("graft_serve_spec")
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try {
       val pruned = graft.engine.Quantize.servePruned(
@@ -201,10 +201,6 @@ class SketchQuantChunkSpec extends SparkSpec {
     } finally {
       spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
       spark.sql("DROP TABLE IF EXISTS graft_serve_spec_t_postings")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
     }
   }
 

@@ -7,7 +7,7 @@ import graft.engine.{Streaming, Tables}
 class SourcesSpec extends SparkSpec {
 
   test("CSV and JSON round-trip the events table with explicit schemas") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = tempDir("graft_fmt")
     val e = Tables.events(spark, sf)
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("user_id"), col("event_type"), col("value"))
@@ -21,7 +21,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ORC round-trips the events table losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc")
     val e = Tables.events(spark, sf)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     e.write.orc(s"$dir/orc")
@@ -35,7 +35,7 @@ class SourcesSpec extends SparkSpec {
 
   test("schema evolution: mergeSchema unifies old and new layouts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tempDir("graft_evo")
     Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/v1")
     Seq((2L, "b", 9.5)).toDF("id", "name", "score").write.parquet(s"$dir/v2")
     val merged = spark.read.option("mergeSchema", "true").parquet(s"$dir/v1", s"$dir/v2")
@@ -46,7 +46,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("malformed JSON records: PERMISSIVE captures them, FAILFAST rejects") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bad").toString
+    val dir = tempDir("graft_bad")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/data.json"),
       """{"id": 1, "v": "ok"}
@@ -73,8 +73,8 @@ class SourcesSpec extends SparkSpec {
   test("streaming foreachBatch lands enveloped micro-batches in the partitioned sink") {
     // the complete reference pipeline, streaming end to end: file-source
     // micro-batches -> envelope -> topic-per-entity partitioned parquet
-    val in = java.nio.file.Files.createTempDirectory("graft_etl_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_etl_out").toString
+    val in = tempDir("graft_etl_in")
+    val out = tempDir("graft_etl_out")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$in/events.parquet"))

@@ -10,7 +10,7 @@ import graft.engine.{Streaming, Tables}
 class StatefulStreamingSpec extends SparkSpec {
 
   test("streaming upsertLatest state equals batch latestPerKey") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_state").toString
+    val dir = tempDir("graft_state")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -32,7 +32,7 @@ class StatefulStreamingSpec extends SparkSpec {
     // the reference's catch-up: several windows processed back-to-back,
     // state carried between them — here two parquet files become two
     // micro-batches and the state store carries the counts across
-    val dir = java.nio.file.Files.createTempDirectory("graft_mb").toString
+    val dir = tempDir("graft_mb")
     val e = Tables.events(spark, sf)
     // write the RAW (nanos-as-long) form: the stream reads with the raw
     // schema, and a converted TimestampType column would round-trip as
@@ -41,7 +41,7 @@ class StatefulStreamingSpec extends SparkSpec {
     raw.filter(col("event_id") < 500).write.parquet(s"$dir/f1")
     raw.filter(col("event_id") >= 500).write.parquet(s"$dir/f2")
     // flatten into one dir as two files
-    val flat = java.nio.file.Files.createTempDirectory("graft_mb_flat").toString
+    val flat = tempDir("graft_mb_flat")
     var idx = 0
     for (sub <- Seq("f1", "f2"); f <- new java.io.File(s"$dir/$sub").listFiles()
          if f.getName.endsWith(".parquet")) {
@@ -69,7 +69,7 @@ class StatefulStreamingSpec extends SparkSpec {
     // 0-4 — by then every key's 1ms TTL has lapsed, so keys absent from
     // batch 2 must surface once as evicted=true and leave the store
     val raw = Tables.eventsRaw(spark, sf)
-    val flat = java.nio.file.Files.createTempDirectory("graft_ttl").toString
+    val flat = tempDir("graft_ttl")
     raw.coalesce(1).write.parquet(s"$flat/stage1")
     raw.filter(col("user_id") < 5).coalesce(1).write.parquet(s"$flat/stage2")
     var idx = 0

@@ -34,7 +34,7 @@ class StreamCompactSpec extends SparkSpec {
     var digestFiles: Array[String] = null
     var bucketFiles: Array[String] = null
     val compacted = engine.Streaming.streamClassifyAbsorbDrain(
-      spark, sf, compactEvery = 2,
+      spark, sf, absorb = true, compactEvery = 2,
       inspectFinal = Some { name =>
         digestFiles = spark.table(s"${name}_digests").inputFiles
         bucketFiles = spark.table(s"${name}_buckets").inputFiles
@@ -75,7 +75,7 @@ class StreamCompactSpec extends SparkSpec {
 
   test("replay contract: batch id's as-of view is row-identical across a compaction at id") {
     val docs = engine.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ridx").toString
+    val dir = tempDir("graft_ridx")
     val name = "graft_spec_ridx"
     def asOf2(): (Set[String], Set[(Int, Long)]) = {
       val v = LlmOps.loadBucketedIndex(spark, name, maxGenExclusive = Some(2L))
@@ -109,19 +109,12 @@ class StreamCompactSpec extends SparkSpec {
         "gen 2's own absorbed rows must exist outside the as-of view")
     } finally {
       LlmOps.dropBucketedIndex(spark, name)
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
     }
   }
 
   test("compactIndexTiered: base partition byte-untouched, folded dirs gone, probe-invisible") {
     val docs = engine.Tables.documents(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft_tidx").toString
+    val dir = tempDir("graft_tidx")
     val name = "graft_spec_tidx"
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sessionState.newHadoopConf())
@@ -197,13 +190,6 @@ class StreamCompactSpec extends SparkSpec {
         "major compaction must be probe-equal to a fresh index over the same corpus")
     } finally {
       LlmOps.dropBucketedIndex(spark, name)
-      val root = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(root)) {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
     }
   }
 }

@@ -18,7 +18,7 @@ import graft.engine.{Streaming, Tables}
 class StreamJoinSpec extends SparkSpec {
 
   private def stageEvents(copies: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sjoin").toString
+    val dir = tempDir("graft_sjoin")
     (1 to copies).foreach { i =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sf/events.parquet"),

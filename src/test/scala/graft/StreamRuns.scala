@@ -37,7 +37,4 @@ object StreamRuns {
     * `rows=` stream keys its one entity as `events`). */
   def entityOffsets(ckpt: String, entity: String = "events"): Seq[PagedStreamOffset] =
     offsetJsons(ckpt).map(j => MultiPagedStreamOffset.fromJson(j).entities(entity))
-
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
 }

@@ -15,10 +15,10 @@ class StreamSessionizeSpec extends SparkSpec {
     // encoding-generic median: raw ts is a ns long OR an NTZ timestamp —
     // lit() round-trips either into the comparison below
     val cut = lit(raw.selectExpr("percentile_approx(ts, 0.5) AS c").head().get(0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_mb").toString
+    val dir = tempDir("graft_sess_mb")
     raw.filter(col("ts") <= cut).coalesce(1).write.parquet(s"$dir/f1")
     raw.filter(col("ts") > cut).coalesce(1).write.parquet(s"$dir/f2")
-    val flat = java.nio.file.Files.createTempDirectory("graft_sess_flat").toString
+    val flat = tempDir("graft_sess_flat")
     var idx = 0
     for (sub <- Seq("f1", "f2"); f <- new java.io.File(s"$dir/$sub").listFiles()
          if f.getName.endsWith(".parquet")) {

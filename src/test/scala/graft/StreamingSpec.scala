@@ -11,7 +11,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming tumbling agg over events == batch tumbling agg") {
     // the file source tails a directory: stage the events file into one
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))

@@ -40,19 +40,9 @@ class TierIdempotencySpec extends SparkSpec {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
       .map(_.getPath.getName.stripPrefix("gen=").toLong).toSet
 
-  private def rmTree(dir: String): Unit = {
-    val root = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(root)) {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
-
   test("a pass crashed between the pair's folds resumes to the uninterrupted layout") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_tierA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_tierB").toString
+    val dirA = tempDir("graft_tierA")
+    val dirB = tempDir("graft_tierB")
     val (a, b) = ("graft_spec_tier_a", "graft_spec_tier_b")
     try {
       buildIndex(dirA, a)
@@ -109,13 +99,12 @@ class TierIdempotencySpec extends SparkSpec {
     } finally {
       LlmOps.dropBucketedIndex(spark, a)
       LlmOps.dropBucketedIndex(spark, b)
-      rmTree(dirA); rmTree(dirB)
     }
   }
 
   test("a TORN append (crash mid-job-commit, partial target partition) resumes losslessly") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_tierTA").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_tierTB").toString
+    val dirA = tempDir("graft_tierTA")
+    val dirB = tempDir("graft_tierTB")
     val (a, b) = ("graft_spec_torn_a", "graft_spec_torn_b")
     try {
       buildIndex(dirA, a)
@@ -164,12 +153,11 @@ class TierIdempotencySpec extends SparkSpec {
     } finally {
       LlmOps.dropBucketedIndex(spark, a)
       LlmOps.dropBucketedIndex(spark, b)
-      rmTree(dirA); rmTree(dirB)
     }
   }
 
   test("a stale manifest from an abandoned run is discarded, not resumed") {
-    val dirA = java.nio.file.Files.createTempDirectory("graft_tierSM").toString
+    val dirA = tempDir("graft_tierSM")
     val a = "graft_spec_stale_m"
     try {
       buildIndex(dirA, a)
@@ -190,7 +178,6 @@ class TierIdempotencySpec extends SparkSpec {
       assert(!hfs.exists(stale), "the completed pass must leave no manifest")
     } finally {
       LlmOps.dropBucketedIndex(spark, a)
-      rmTree(dirA)
     }
   }
 }

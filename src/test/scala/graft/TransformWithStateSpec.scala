@@ -25,7 +25,7 @@ class TransformWithStateSpec extends SparkSpec {
 
   test("transformWithState upsert equals batch latestPerKey") {
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tws").toString
+      val dir = tempDir("graft_tws")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sf/events.parquet"),
         java.nio.file.Paths.get(s"$dir/events.parquet"))
@@ -51,7 +51,7 @@ class TransformWithStateSpec extends SparkSpec {
       // micro-batches, so batch 2's output must carry ONLY the batch-2
       // count (state restarted), where the no-TTL run would carry n1 + n2.
       val raw = Tables.eventsRaw(spark, sf)
-      val flat = java.nio.file.Files.createTempDirectory("graft_tws_ttl").toString
+      val flat = tempDir("graft_tws_ttl")
       raw.coalesce(1).write.parquet(s"$flat/stage1")
       raw.filter(col("user_id") < 5 && col("event_id") % 3 === 0)
         .coalesce(1).write.parquet(s"$flat/stage2")

@@ -70,7 +70,7 @@ class ZOrderSpec extends SparkSpec {
   test("z-ordered layout: parquet zone maps skip row groups for both key columns") {
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = tempDir("graft_zorder")
     li.repartition(4).write.mode("overwrite").parquet(s"$base/plain")
     ZOrder.zorderLayout(li, "l_partkey", "l_suppkey", 4)
       .write.mode("overwrite").parquet(s"$base/zorder")
