@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.engine.{JsonStringCast, MinHashBands, PiiScrub, RepetitionStats, RollingFingerprint, ShingleHashes, SimHash64, SortableDoubleBits, TokenCounts, XorShiftMix}
-import graft.engine.{FloatDotProduct, IntSqDist, QuantizeU8}
+import graft.engine._
 import graft.plans.NanosRangePushdown
 
 /** Session-extension entry point for cluster deployments:
@@ -17,77 +16,49 @@ import graft.plans.NanosRangePushdown
   * injects the engine's Catalyst additions into every session built on
   * the cluster without any imperative setup call:
   *
-  *  - `NanosRangePushdown` optimizer rule (restores parquet row-group
+  *  - the `NanosRangePushdown` optimizer rule (restores parquet row-group
   *    pruning for range predicates written against converted
   *    TIMESTAMP(NANOS) columns — plans/NanosRangePushdown.scala);
-  *  - `json_string_cast` SQL function (the StringCast SMT's scalar,
-  *    engine/Cast.scala).
+  *  - one SQL function per entry of `GraftExtensions.functions`: every
+  *    `NativeUnary` kernel (`simhash64`, `tokens`, ...), the vector
+  *    kernels, and `json_string_cast` (the StringCast SMT's scalar).
   *
   * Local/programmatic sessions get the same behavior lazily —
-  * `Tables.load` installs the rule idempotently and `qStringCast`
-  * registers the function — so the extension is additive, not required.
+  * `Tables.load` installs the rule idempotently, the queries build the
+  * kernels through their Column helpers, and `qStringCast` registers
+  * `json_string_cast` — so the extension is additive, not required.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.{unary, binary}
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => NanosRangePushdown)
-    ext.injectFunction((
-      new FunctionIdentifier("json_string_cast"),
-      new ExpressionInfo(classOf[JsonStringCast].getName, "json_string_cast"),
-      unary("json_string_cast")(JsonStringCast.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      unary("simhash64")(SimHash64.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("float_dot_product"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "float_dot_product"),
-      binary("float_dot_product")(FloatDotProduct.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      unary("shingle_hashes")(ShingleHashes.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-      unary("token_counts")(TokenCounts.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      unary("minhash_bands")(MinHashBands.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName, "rolling_fingerprint"),
-      unary("rolling_fingerprint")(RollingFingerprint.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("repetition_stats"),
-      new ExpressionInfo(classOf[RepetitionStats].getName, "repetition_stats"),
-      unary("repetition_stats")(RepetitionStats.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("pii_scrub"),
-      new ExpressionInfo(classOf[PiiScrub].getName, "pii_scrub"),
-      unary("pii_scrub")(PiiScrub.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("xorshift_mix"),
-      new ExpressionInfo(classOf[XorShiftMix].getName, "xorshift_mix"),
-      unary("xorshift_mix")(XorShiftMix.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("sortable_double_bits"),
-      new ExpressionInfo(classOf[SortableDoubleBits].getName, "sortable_double_bits"),
-      unary("sortable_double_bits")(SortableDoubleBits.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("quantize_u8"),
-      new ExpressionInfo(classOf[QuantizeU8].getName, "quantize_u8"),
-      unary("quantize_u8")(QuantizeU8.apply)))
-    ext.injectFunction((
-      new FunctionIdentifier("int_sq_dist"),
-      new ExpressionInfo(classOf[IntSqDist].getName, "int_sq_dist"),
-      binary("int_sq_dist")(IntSqDist.apply)))
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
 }
 
 object GraftExtensions {
+  type Builder = Seq[Expression] => Expression
+
+  /** Every SQL-callable kernel as (identifier, info, arity-checked
+    * builder). Each is named by the `prettyName` of the expression it
+    * builds (built once here over null literals), so a kernel states its
+    * SQL name once, in its own declaration. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =
+    Seq[Expression => Expression](
+      SimHash64(_), ShingleHashes(_), Tokens(_), MinHashBands(_),
+      MinHashBandsSweep(_), TokenCounts(_), RollingFingerprint(_),
+      RepetitionStats(_), PiiScrub(_), XorShiftMix(_), SortableDoubleBits(_),
+      QuantizeU8(_), JsonStringCast(_)
+    ).map(f => describe(f(Literal(null)), unary(_)(f))) ++
+      Seq[(Expression, Expression) => Expression](FloatDotProduct(_, _), IntSqDist(_, _))
+        .map(f => describe(f(Literal(null), Literal(null)), binary(_)(f)))
+
+  private def describe(e: Expression,
+      build: String => Builder): (FunctionIdentifier, ExpressionInfo, Builder) = {
+    val name = e.prettyName
+    (new FunctionIdentifier(name), new ExpressionInfo(e.getClass.getName, name), build(name))
+  }
+
   /** Arity-checked function builders: a wrong argument count raises the
     * same WRONG_NUM_ARGS AnalysisException Spark's builtin registry
     * raises, instead of an IndexOutOfBoundsException escaping from
@@ -102,14 +73,13 @@ object GraftExtensions {
         "actualNum" -> actual.toString,
         "docroot" -> "https://spark.apache.org/docs/latest"))
 
-  private[graft] def unary(name: String)(
-      f: Expression => Expression): Seq[Expression] => Expression = {
+  private[graft] def unary(name: String)(f: Expression => Expression): Builder = {
     case Seq(e) => f(e)
     case exprs => throw wrongNumArgs(name, 1, exprs.size)
   }
 
   private[graft] def binary(name: String)(
-      f: (Expression, Expression) => Expression): Seq[Expression] => Expression = {
+      f: (Expression, Expression) => Expression): Builder = {
     case Seq(a, b) => f(a, b)
     case exprs => throw wrongNumArgs(name, 2, exprs.size)
   }

@@ -1,8 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.GraftColumnBridge
 import org.apache.spark.sql.types._
 
@@ -26,35 +25,22 @@ import org.apache.spark.sql.types._
   * SIGNED long with no further correction (negatives stay negative longs,
   * positives stay positive).
   */
-case class SortableDoubleBits(child: Expression) extends UnaryExpression {
+case class SortableDoubleBits(child: Expression)
+    extends NativeUnary("sortable_double_bits", LongType, DoubleType) {
 
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case DoubleType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"sortable_double_bits needs a double child, got $other")
-    }
-
-  override def nullSafeEval(input: Any): Any = {
-    val b = java.lang.Double.doubleToLongBits(input.asInstanceOf[Double])
-    b ^ ((b >> 63) & Long.MaxValue)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d => {
-      val b = ctx.freshName("bits")
-      s"""
-         |long $b = Double.doubleToLongBits($d);
-         |${ev.value} = ($b ^ (($b >> 63) & Long.MAX_VALUE));
-       """.stripMargin
-    })
+  override def nullSafeEval(input: Any): Any =
+    SortableDoubleBits.compute(input.asInstanceOf[Double])
 
   override protected def withNewChildInternal(newChild: Expression): SortableDoubleBits =
     copy(child = newChild)
+}
 
-  override def prettyName: String = "sortable_double_bits"
+object SortableDoubleBits {
+  /** Static entry shared by interpreted eval and generated code. */
+  def compute(d: Double): Long = {
+    val b = java.lang.Double.doubleToLongBits(d)
+    b ^ ((b >> 63) & Long.MaxValue)
+  }
 }
 
 /** Two seeded xorshift64 rounds over a long key — the deterministic
@@ -68,28 +54,14 @@ case class SortableDoubleBits(child: Expression) extends UnaryExpression {
   * evaluated once. Bit-identical to the column composition (same steps,
   * same seed); the DuckDB oracle replays the same arithmetic in HUGEINT,
   * so the hash-verified stratum counts pin it end-to-end. */
-case class XorShiftMix(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"xorshift_mix needs a bigint child, got $other")
-    }
+case class XorShiftMix(child: Expression)
+    extends NativeUnary("xorshift_mix", LongType, LongType) {
 
   override def nullSafeEval(input: Any): Any =
     XorShiftMix.compute(input.asInstanceOf[Long])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.engine.XorShiftMix.compute($x);")
-
   override protected def withNewChildInternal(newChild: Expression): XorShiftMix =
     copy(child = newChild)
-
-  override def prettyName: String = "xorshift_mix"
 }
 
 object XorShiftMix {

@@ -25,27 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * the empty token (tokens() never produces them); pinned bit-exact
   * against a plain-Scala reference by LlmOpsSpec.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 needs array<string>, got $other")
-  }
+case class SimHash64(child: Expression)
+    extends NativeUnary("simhash64", LongType, ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     SimHash64.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.SimHash64.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
 }
 
 object SimHash64 {
@@ -89,27 +76,14 @@ object SimHash64 {
   * bucket contents, and the q_dedup_groups oracle asserts LSH recall
   * against the exhaustive closure, so the replay has to be bit-exact.
   * Pinned against a plain-Scala reference fold by LlmOpsSpec. */
-case class ShingleHashes(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"shingle_hashes needs array<string>, got $other")
-  }
+case class ShingleHashes(child: Expression) extends NativeUnary(
+    "shingle_hashes", ArrayType(LongType, containsNull = false), ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     ShingleHashes.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.ShingleHashes.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
-
-  override def prettyName: String = "shingle_hashes"
 }
 
 object ShingleHashes {
@@ -165,27 +139,14 @@ object ShingleHashes {
   * the filter drops exactly those — i.e. the maximal non-space runs, in
   * order, which is what the byte loop emits. Pinned element-exact
   * against the HOF formulation by LlmOpsSpec. */
-case class Tokens(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"tokens needs string, got $other")
-  }
+case class Tokens(child: Expression)
+    extends NativeUnary("tokens", ArrayType(StringType, containsNull = false), StringType) {
 
   override def nullSafeEval(input: Any): Any =
     Tokens.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.engine.Tokens.compute($s);")
-
   override protected def withNewChildInternal(newChild: Expression): Tokens =
     copy(child = newChild)
-
-  override def prettyName: String = "tokens"
 }
 
 object Tokens {
@@ -294,27 +255,14 @@ object SpanHashes {
   * constants derive from splitmix64 and are embedded identically in the
   * oracle SQL (LlmOps.qDedupMinhashSql — single source of truth).
   * Pinned against a plain-Scala reference by LlmOpsSpec. */
-case class MinHashBands(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands needs array<bigint> (shingle hashes), got $other")
-  }
+case class MinHashBands(child: Expression) extends NativeUnary(
+    "minhash_bands", ArrayType(LongType, containsNull = false), ArrayType(LongType)) {
 
   override def nullSafeEval(input: Any): Any =
     MinHashBands.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.MinHashBands.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): MinHashBands =
     copy(child = newChild)
-
-  override def prettyName: String = "minhash_bands"
 }
 
 object MinHashBands {
@@ -394,27 +342,14 @@ object MinHashBands {
   * Both counts come from one pass over the raw UTF-8 bytes, no
   * allocation. Pinned byte-equal to the regex/split formulation by
   * LlmOpsSpec on the real corpus plus unicode edge strings. */
-case class TokenCounts(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = TokenCounts.schema
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"token_counts needs a string child, got $other")
-  }
+case class TokenCounts(child: Expression)
+    extends NativeUnary("token_counts", TokenCounts.schema, StringType) {
 
   override def nullSafeEval(input: Any): Any =
     TokenCounts.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.engine.TokenCounts.compute($s);")
-
   override protected def withNewChildInternal(newChild: Expression): TokenCounts =
     copy(child = newChild)
-
-  override def prettyName: String = "token_counts"
 }
 
 object TokenCounts {
@@ -468,27 +403,14 @@ object TokenCounts {
   * 2¹⁰⁴ ≪ 2¹²⁷, no overflow), where XXH64's stripe schedule is not
   * practically expressible in SQL. Pinned bit-exact against a plain-Scala
   * reference fold by LlmOpsSpec. */
-case class RollingFingerprint(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"rolling_fingerprint needs array<string>, got $other")
-  }
+case class RollingFingerprint(child: Expression)
+    extends NativeUnary("rolling_fingerprint", LongType, ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     RollingFingerprint.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.RollingFingerprint.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): RollingFingerprint =
     copy(child = newChild)
-
-  override def prettyName: String = "rolling_fingerprint"
 }
 
 object RollingFingerprint {
@@ -537,27 +459,14 @@ object RollingFingerprint {
   * semantics incl. the <3-token fallback (single joined shingle → 1/1) —
   * pinned by CurationSpec against a plain-Scala model and end-to-end by
   * the unchanged exhaustive DuckDB oracle. */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = RepetitionStats.schema
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"repetition_stats needs array<string>, got $other")
-  }
+case class RepetitionStats(child: Expression)
+    extends NativeUnary("repetition_stats", RepetitionStats.schema, ArrayType(StringType)) {
 
   override def nullSafeEval(input: Any): Any =
     RepetitionStats.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.RepetitionStats.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
     copy(child = newChild)
-
-  override def prettyName: String = "repetition_stats"
 }
 
 object RepetitionStats {
@@ -637,27 +546,14 @@ object RepetitionStats {
   * All pattern classes are pure ASCII, so byte-level scanning is exact on
   * UTF-8 (multibyte sequence bytes all have the high bit set and never
   * class-match). */
-case class PiiScrub(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = PiiScrub.schema
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pii_scrub needs a string child, got $other")
-  }
+case class PiiScrub(child: Expression)
+    extends NativeUnary("pii_scrub", PiiScrub.schema, StringType) {
 
   override def nullSafeEval(input: Any): Any =
     PiiScrub.compute(input.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.engine.PiiScrub.compute($s);")
-
   override protected def withNewChildInternal(newChild: Expression): PiiScrub =
     copy(child = newChild)
-
-  override def prettyName: String = "pii_scrub"
 }
 
 object PiiScrub {
@@ -819,30 +715,18 @@ object PiiScrub {
   * fold the identical formula with a different row span. This is the
   * tuning table a 100 TB dedup operator consults: more bands = higher
   * recall but more candidate pairs — measured, not assumed. */
-case class MinHashBandsSweep(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("bands", IntegerType, nullable = false),
-    StructField("band", IntegerType, nullable = false),
-    StructField("key", LongType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands_sweep needs array<bigint> (shingle hashes), got $other")
-  }
+case class MinHashBandsSweep(child: Expression) extends NativeUnary(
+    "minhash_bands_sweep", ArrayType(StructType(Seq(
+      StructField("bands", IntegerType, nullable = false),
+      StructField("band", IntegerType, nullable = false),
+      StructField("key", LongType, nullable = false))), containsNull = false),
+    ArrayType(LongType)) {
 
   override def nullSafeEval(input: Any): Any =
     MinHashBandsSweep.compute(input.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.engine.MinHashBandsSweep.compute($a);")
-
   override protected def withNewChildInternal(newChild: Expression): MinHashBandsSweep =
     copy(child = newChild)
-
-  override def prettyName: String = "minhash_bands_sweep"
 }
 
 object MinHashBandsSweep {

@@ -1,8 +1,12 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
+
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -20,7 +24,9 @@ import graft.{Bench, RunListener, Sessions, SparkEntry}
   *    DataFrame construction, schema reads, analysis, eager stages), plan
   *    (`executedPlan`: optimization, physical planning) and exec
   *    (`toRdd.count()`: scheduling, tasks, result). Sample 1 is cold in
-  *    the plan caches, 2-3 are warm.
+  *    the plan caches, 2-3 are warm. Each sample also counts its Janino
+  *    compiles (Spark's codegen cache misses) with their ms, and the JVM
+  *    classes it loaded.
   *  - `stage`: one run's completed stages — wall, tasks, run/CPU/GC time,
   *    shuffle bytes and spill — with the stage name (operator callsite).
   *  - `job`: one run's jobs with their durations, task counts, callsites
@@ -51,10 +57,20 @@ object Profile {
       throw new IllegalArgumentException(s"unknown query: $q"))
   }
 
-  final case class Phase(buildS: Double, planS: Double, execS: Double)
+  /** One sample's phase seconds, plus what it cost the JVM: Janino
+    * compiles (codegen cache misses), their compile ms and the classes
+    * loaded, all deltas over the whole sample. */
+  final case class Phase(buildS: Double, planS: Double, execS: Double,
+      compiles: Long, compileMs: Double, classesLoaded: Long)
+
+  private def jvmCounters(): (Long, Long, Long) = (
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    CodeGenerator.compileTime,
+    ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount)
 
   def phases(spark: SparkSession, fn: Query, sfDir: String): Seq[Phase] =
     (1 to 3).map { _ =>
+      val (c0, ns0, cl0) = jvmCounters()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val t1 = System.nanoTime()
@@ -62,7 +78,9 @@ object Profile {
       val t2 = System.nanoTime()
       df.queryExecution.toRdd.count()
       val t3 = System.nanoTime()
-      Phase((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+      val (c1, ns1, cl1) = jvmCounters()
+      Phase((t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9,
+        c1 - c0, (ns1 - ns0) / 1e6, cl1 - cl0)
     }
 
   /** Wall seconds of one run, with `rl`'s stage and job records reset
@@ -135,7 +153,8 @@ object Profile {
           phases(spark, fn, sfDir).zipWithIndex.foreach { case (p, i) =>
             println(f"[profile] phase $name%-22s s${i + 1}  build=${p.buildS}%6.3f  " +
               f"plan=${p.planS}%6.3f  exec=${p.execS}%6.3f  " +
-              f"total=${p.buildS + p.planS + p.execS}%6.3f")
+              f"total=${p.buildS + p.planS + p.execS}%6.3f  compiles=${p.compiles}%4d  " +
+              f"compileMs=${p.compileMs}%8.1f  classes=${p.classesLoaded}%5d")
           }
         case "stage" =>
           val wall = traced(spark, rl, fn, sfDir)

@@ -3,7 +3,7 @@ package graft
 import graft.tools.Profile
 
 /** tools.Profile's views on the shared session at sf0.001: the phase
-  * split, stage records that account for every task the listener saw, and
+  * split and its compile counters, stage records that account for every task the listener saw, and
   * the drain view's micro-batch count. */
 class ProfileSpec extends SparkSpec {
 
@@ -11,6 +11,9 @@ class ProfileSpec extends SparkSpec {
     val ps = Profile.phases(spark, Profile.resolve("q_join_multiway"), sf)
     assert(ps.size == 3)
     ps.foreach(p => assert(p.buildS > 0 && p.planS > 0 && p.execS > 0, p))
+    // the first sample fills the codegen cache; the warm ones hit it
+    assert(ps.drop(1).forall(_.compiles == 0), ps)
+    ps.foreach(p => assert((p.compileMs == 0) == (p.compiles == 0), p))
   }
 
   test("stage view: summed stage run ms == the listener's task total") {

@@ -11,6 +11,9 @@ every replica). Dimension tables region/nation are copied once.
 Documents/embeddings replicate with identical text/vectors — exact
 duplicates across replicas, which is precisely the workload the dedup
 and similarity operators exist for.
+
+Each written table's row count is checked against N times its source's
+(once for region/nation); a short table exits non-zero, naming it.
 """
 import sys, os
 import duckdb
@@ -36,6 +39,10 @@ OFFSETS = {
 def main():
     os.makedirs(OUT, exist_ok=True)
     con = duckdb.connect()
+    # DuckDB keeps its own host-derived memory limit; give it a temp dir
+    # under the output dir so the 100x lineitem COPY spills at that limit
+    # instead of dying, as tools/diffcheck.py does
+    con.sql(f"SET temp_directory='{OUT}/.duckdb_tmp'")
     base = {}  # owner -> max+1
     def stride(owner):
         if owner not in base:
@@ -68,6 +75,9 @@ def main():
                 parts.append(f"SELECT * REPLACE ({repl}) FROM {src}")
             con.sql(f"COPY ({' UNION ALL '.join(parts)}) TO '{dst}' (FORMAT PARQUET)")
         n = con.sql(f"SELECT count(*) FROM '{dst}'").fetchone()[0]
+        want = con.sql(f"SELECT count(*) FROM {src}").fetchone()[0] * (1 if off is None else N)
+        if n != want:
+            sys.exit(f"scalegen: {t}: wrote {n:,} rows to {dst}, expected {want:,}")
         print(f"{t:12s} {n:>10,} rows -> {dst}")
 
 if __name__ == "__main__":
