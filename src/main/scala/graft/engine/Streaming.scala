@@ -159,13 +159,20 @@ object Streaming {
     * every offset/commit-log write; measured per micro-batch:
     * walCommit 34 ms + commitOffsets 34 ms with the default manager vs
     * 11 + 12 ms with the FileSystem-based one (same rename-based atomic
-    * commit, File.renameTo under the hood, no subprocess). Every
+    * commit, File.renameTo under the hood, no `ls` per rename). Every
     * AvailableNow drain here pays this 2× per micro-batch, so a 24-batch
-    * drain would lose ~1.1 s to subprocess forks. Applied once per session,
-    * only when no explicit manager is configured and the session's
-    * checkpoint root (if any) is local — on a real cluster with an HDFS/
-    * object-store checkpoint dir this never fires and the FileContext
-    * default stands. */
+    * drain would lose ~1.1 s to subprocess forks. The FileSystem-based
+    * manager still forks: without Hadoop's native library,
+    * `RawLocalFileSystem.setPermission` runs `chmod` for every directory
+    * it makes and every file it creates. A JFR `jdk.ProcessStart` trace
+    * of a one-batch drain shows 9 `chmod` forks: 3 for the checkpoint
+    * directories, and 6 for the metadata, offsets and commits temp files,
+    * each with its `.crc`. The offsets and commits files (4 forks) recur
+    * every micro-batch, on the stream execution thread. Applied once
+    * per session, only when no explicit manager is configured and the
+    * session's checkpoint root (if any) is local — on a real cluster with
+    * an HDFS/object-store checkpoint dir this never fires and the
+    * FileContext default stands. */
   private[graft] def tuneLocalCheckpointIo(spark: SparkSession): Unit = {
     val key = "spark.sql.streaming.checkpointFileManagerClass"
     def isLocal(loc: String): Boolean = {

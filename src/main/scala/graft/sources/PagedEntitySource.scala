@@ -35,20 +35,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The "remote system" is simulated by a deterministic generator (id-dense,
   * one record per minute per id) so the connector is self-contained and
-  * its pushdown behavior is exactly checkable. With `endpoint=http://…`
-  * the generator is swapped for a GENUINE HTTP page fetch: each planned
-  * page issues the reference's request verbatim —
+  * its pushdown behavior is exactly checkable. The generator never fails.
+  * With `endpoint=http://…` the generator is swapped for a GENUINE HTTP
+  * page fetch: each planned page issues the reference's request verbatim —
   * `GET {endpoint}/{entity}?limit=&offset=&where=ts_us:GTE:a,ts_us:LT:b
   * &order=ts_us:ASC&fields=…` under Basic auth
   * (ChargeOverApiClient.java:80-145), unwraps the `{"response":[…]}`
   * envelope (:149-158), treats 429 as the rate-limited failure flavor
   * (:169-171) and any other non-200 as a transient fetch failure
-  * (:171-175) — all under the same reference-exact retry loop
-  * (fetchBatchWithRetry, ChargeOverSourceTask.java:296-343) the
-  * generator's fault plan exercises. Tests serve the generator's records
-  * over a localhost `com.sun.net.httpserver` fixture, so the retry path
-  * runs against real sockets and real status codes with no new
-  * dependencies.
+  * (:171-175). R12 has one fault path: those HTTP answers, under the
+  * reference-exact retry loop (fetchBatchWithRetry,
+  * ChargeOverSourceTask.java:296-343). Tests serve the generator's records
+  * over a localhost `com.sun.net.httpserver` fixture that answers chosen
+  * pages with 429/5xx, so the retry path runs against real sockets and
+  * real status codes with no new dependencies.
   *
   * Usage:
   * {{{
@@ -263,18 +263,10 @@ object PagedEntitySource {
   def recordVer(p: Long, updateEvery: Int): Int =
     if (updateEvery >= 2 && p % updateEvery == updateEvery - 1) 1 else 0
 
-  /** R12 fault injection — the knobs that make the deterministic "remote"
-    * fail the way a real REST backend does, so the reference-exact retry
-    * loop (fetchBatchWithRetry, ChargeOverSourceTask.java:296-343) runs on
-    * the LIVE data path instead of only in unit-tested formula form:
+  /** R12's knobs. Page faults are real HTTP answers (429/5xx from the
+    * `endpoint`), retried by the reader's loop under the first two; the
+    * third is the driver-side poll failure no HTTP answer can reach:
     *
-    *  - `failEveryNthPage=n`: the fetch of every page whose ordinal
-    *    (startId / pageSize) is a multiple of n fails TRANSIENTLY on its
-    *    first `failAttempts` attempts — recovered by the in-fetch
-    *    exponential-backoff retries when failAttempts <= maxRetries;
-    *  - `rateLimit=true`: those transient failures are HTTP-429-shaped
-    *    (ChargeOverRateLimitException, ApiClient.java:169-171) — the retry
-    *    waits the flat 60 s instead of the exponential curve;
     *  - `maxRetries`: the reference's max.retries (default 3,
     *    Config.java:69-73) — attempts = maxRetries + 1, then rethrow;
     *  - `retryBackoffScale`: scales the SLEEP only (tests use 1e-4); the
@@ -289,36 +281,14 @@ object PagedEntitySource {
     * Jitter is derived from (pageStart, attempt) via splitmix64 so every
     * run — and every Spark task RETRY of the same page — replays the same
     * backoff schedule. */
-  final case class FaultPlan(failEveryNthPage: Int, failAttempts: Int,
-      rateLimit: Boolean, maxRetries: Int, backoffScale: Double,
-      pollFailAt: Map[Long, Int]) {
-    def pageFault(startId: Long, pageSize: Int): PageFault =
-      if (failEveryNthPage > 0 && (startId / pageSize) % failEveryNthPage == 0)
-        PageFault(failAttempts, rateLimit, maxRetries, backoffScale)
-      else PageFault(0, rateLimited = false, maxRetries, backoffScale)
-  }
-  object FaultPlan {
-    val none: FaultPlan = FaultPlan(0, 0, rateLimit = false, 3, 1.0, Map.empty)
-  }
-
-  /** The planner's verdict for ONE page: how many fetch attempts fail
-    * before the page loads. Computed at planning time so the executor-side
-    * reader stays a pure retry loop. */
-  final case class PageFault(failAttempts: Int, rateLimited: Boolean,
-      maxRetries: Int, backoffScale: Double)
-  object PageFault {
-    val none: PageFault = PageFault(0, rateLimited = false, 3, 1.0)
-  }
+  final case class FaultPlan(maxRetries: Int, backoffScale: Double,
+      pollFailAt: Map[Long, Int])
 
   private[sources] def faultPlan(props: util.Map[String, String]): FaultPlan = {
-    val n = props.getOrDefault("failEveryNthPage", "0").toInt
-    val attempts = props.getOrDefault("failAttempts", "2").toInt
-    val rate = props.getOrDefault("rateLimit", "false").toBoolean
     val maxRetries = props.getOrDefault("maxRetries", "3").toInt
     val scale = props.getOrDefault("retryBackoffScale", "1.0").toDouble
-    if (n < 0 || attempts < 0 || maxRetries < 0)
-      throw new IllegalArgumentException(
-        s"failEveryNthPage/failAttempts/maxRetries must be >= 0")
+    if (maxRetries < 0)
+      throw new IllegalArgumentException(s"maxRetries must be >= 0, got $maxRetries")
     if (!(scale > 0.0))
       throw new IllegalArgumentException(s"retryBackoffScale must be > 0, got $scale")
     val pollFailAt = props.getOrDefault("pollFailAt", "").split(",")
@@ -329,7 +299,7 @@ object PagedEntitySource {
       }).toMap
     if (pollFailAt.exists(_._2 < 0))
       throw new IllegalArgumentException("pollFailAt counts must be >= 0")
-    FaultPlan(n, attempts, rate, maxRetries, scale, pollFailAt)
+    FaultPlan(maxRetries, scale, pollFailAt)
   }
 
   /** splitmix64 → [0,1): the deterministic stand-in for the reference's
@@ -351,7 +321,7 @@ object PagedEntitySource {
 
 class PagedEntityTable(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
     multi: Boolean, windowRows: Long = 0L,
-    faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
+    faults: PagedEntitySource.FaultPlan)
     extends Table with SupportsRead {
   override def name(): String = s"paged_${confs.map(_.name).mkString("+")}"
   override def schema(): StructType =
@@ -364,7 +334,7 @@ class PagedEntityTable(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
 
 class PagedScanBuilder(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
     multi: Boolean, windowRows: Long = 0L,
-    faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
+    faults: PagedEntitySource.FaultPlan)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownOffset with SupportsPushDownTopN {
 
@@ -472,7 +442,7 @@ class PagedScanBuilder(confs: Seq[PagedEntitySource.EntityConf], pageSize: Int,
   * (entity-level parallelism, the partitioned-source reading of R15). */
 class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
     confs: Seq[PagedEntitySource.EntityConf], windowRows: Long = 0L,
-    faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
+    faults: PagedEntitySource.FaultPlan)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -495,12 +465,12 @@ class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
       (0 until pages).map { p =>
         val start = eLo + p.toLong * pageSize
         PagedPartition(Seq(PagedPage(start, math.min(eHi, start + pageSize), conf,
-          faults.pageFault(start, pageSize), eLo, eHi))): InputPartition
+          eLo, eHi))): InputPartition
       }
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagedReaderFactory(required)
+    new PagedReaderFactory(required, faults)
 }
 
 /** One planned API page. `windowLoId`/`windowHiId` carry the enclosing
@@ -510,7 +480,6 @@ class PagedScan(lo: Long, hi: Long, pageSize: Int, required: StructType,
   * where-window by offset, ChargeOverApiClient.java:86-112). */
 case class PagedPage(startId: Long, endId: Long,
   conf: PagedEntitySource.EntityConf,
-  fault: PagedEntitySource.PageFault = PagedEntitySource.PageFault.none,
   windowLoId: Long = -1L, windowHiId: Long = -1L) {
   def winLo: Long = if (windowLoId >= 0) windowLoId else startId
   def winHi: Long = if (windowHiId >= 0) windowHiId else endId
@@ -545,9 +514,10 @@ object PagedPartition {
       .map(_.sparkContext.defaultParallelism).getOrElse(1)
 }
 
-class PagedReaderFactory(required: StructType) extends PartitionReaderFactory {
+class PagedReaderFactory(required: StructType,
+    faults: PagedEntitySource.FaultPlan) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new PagedPartitionReader(partition.asInstanceOf[PagedPartition], required)
+    new PagedPartitionReader(partition.asInstanceOf[PagedPartition], required, faults)
 }
 
 /** Page-fetch failure — IOException-shaped like the reference's
@@ -563,13 +533,14 @@ class PagedFetchException(msg: String, val rateLimited: Boolean,
   extends java.io.IOException(msg)
 
 /** The page fetches of one partition's run, in order
-  * (ChargeOverApiClient.fetchChangesWithPagination analog): a
-  * deterministic record generator in place of the HTTP GET. Per-entity
-  * `fields=` means unrequested data columns come back null (a schemaless
-  * record that lacks the field); `category_mod` stands in for an arbitrary
-  * extra query param the remote honors.
+  * (ChargeOverApiClient.fetchChangesWithPagination analog), through one
+  * row loop: each page yields its rows either from the deterministic
+  * record generator or from [[HttpPageFetch.fetch]]. Per-entity `fields=`
+  * means unrequested data columns come back null (a schemaless record
+  * that lacks the field); `category_mod` stands in for an arbitrary extra
+  * query param the remote honors.
   *
-  * The fetch runs under the reference-exact retry loop
+  * The HTTP fetch runs under the reference-exact retry loop
   * (fetchBatchWithRetry, ChargeOverSourceTask.java:296-343): up to
   * maxRetries+1 attempts, exponential backoff `min(2^attempt·1s + 0-10%
   * jitter, 30s)` between general failures, a flat 60 s after a 429, and a
@@ -578,44 +549,24 @@ class PagedFetchException(msg: String, val rateLimited: Boolean,
   * framework's next poll() provides in the reference. Backoff values come
   * from StateMachine.backoffMillis (the PropertySpec'd formula); only the
   * SLEEP is scaled by retryBackoffScale so specs drain in milliseconds. */
-class PagedPartitionReader(part: PagedPartition, required: StructType)
+class PagedPartitionReader(part: PagedPartition, required: StructType,
+    faults: PagedEntitySource.FaultPlan)
     extends PartitionReader[InternalRow] {
   private val fields = required.fieldNames
   private val pages = part.pages.iterator
-  // the page being read: generator mode walks positions up to its endId,
-  // HTTP mode the fetched page, already mapped to rows
-  private var page: PagedPage = null
-  private var id = 0L
-  private var httpRows: Iterator[InternalRow] = Iterator.empty
+  private var rows: Iterator[InternalRow] = Iterator.empty
   private var cur: InternalRow = null
-  private def served(f: String): Boolean = page.conf.fields.forall(_.contains(f))
-
-  /** One fetch ATTEMPT. Generator mode: a no-op, except the planned fault
-    * fails the first `failAttempts` attempts. HTTP mode: a real GET in the
-    * reference's request grammar — the server's own status codes (429 /
-    * 5xx) raise the same two failure flavors the fault plan simulates, so
-    * the retry loop below is identical either way. */
-  private def attemptFetch(attempt: Int): Unit = page.conf.remote match {
-    case None =>
-      if (attempt < page.fault.failAttempts)
-        throw new PagedFetchException(
-          s"simulated ${if (page.fault.rateLimited) "429 rate limit" else "fetch failure"} " +
-          s"for page@${page.startId} attempt ${attempt + 1}", page.fault.rateLimited)
-    case Some(api) =>
-      httpRows = HttpPageFetch.fetch(api, page, required).iterator
-  }
 
   /** fetchBatchWithRetry (ChargeOverSourceTask.java:296-343): up to
     * maxRetries+1 attempts, exponential backoff between general failures,
     * flat 60 s after a 429, rethrow once exhausted. Runs once per page,
     * when the reader reaches it. */
-  private def fetchWithRetry(): Unit = {
-    val f = page.fault
-    var fetched = false
+  private def fetchWithRetry(api: PagedEntitySource.RemoteApi,
+      page: PagedPage): Array[InternalRow] = {
     var attempt = 0
     var lastEx: Exception = null
-    while (!fetched && attempt <= f.maxRetries) {
-      try { attemptFetch(attempt); fetched = true }
+    while (attempt <= faults.maxRetries) {
+      try return HttpPageFetch.fetch(api, page, required)
       catch {
         case e: PagedFetchException if e.permanent =>
           // a contract violation, not a transient fault — the backend will
@@ -625,52 +576,50 @@ class PagedPartitionReader(part: PagedPartition, required: StructType)
           throw e
         case e: PagedFetchException =>
           lastEx = e
-          if (attempt < f.maxRetries) {
+          if (attempt < faults.maxRetries) {
             val backoff = graft.engine.StateMachine.backoffMillis(attempt,
               e.rateLimited, PagedEntitySource.jitterUnit(page.startId, attempt))
-            Thread.sleep(math.max(0L, (backoff * f.backoffScale).toLong))
+            Thread.sleep(math.max(0L, (backoff * faults.backoffScale).toLong))
           }
           attempt += 1
       }
     }
-    if (!fetched)
-      throw new java.io.IOException(
-        s"Failed after ${f.maxRetries + 1} attempts", lastEx)
+    throw new java.io.IOException(
+      s"Failed after ${faults.maxRetries + 1} attempts", lastEx)
   }
 
-  /** Steps within the current page; false once it is spent. */
-  private def advance(): Boolean =
-    if (page.conf.remote.isDefined) {
-      if (httpRows.hasNext) { cur = httpRows.next(); true } else false
-    } else { id += 1; id < page.endId }
-
-  override def next(): Boolean = {
-    while (page == null || !advance()) {
-      if (!pages.hasNext) return false
-      page = pages.next()
-      id = page.startId - 1
-      fetchWithRetry()
-    }
-    true
-  }
-
-  override def get(): InternalRow = if (page.conf.remote.isDefined) cur else {
-    // `id` here is the stream POSITION; the record id diverges from it
-    // only in changelog mode (update positions re-emit an earlier id)
-    val conf = page.conf
-    val rid = PagedEntitySource.recordId(id, conf.updateEvery)
-    val ver = PagedEntitySource.recordVer(id, conf.updateEvery)
+  /** The generator's record at stream POSITION `p`; the record id diverges
+    * from it only in changelog mode (update positions re-emit an earlier
+    * id). */
+  private def generated(conf: PagedEntitySource.EntityConf, p: Long): InternalRow = {
+    val rid = PagedEntitySource.recordId(p, conf.updateEvery)
+    val ver = PagedEntitySource.recordVer(p, conf.updateEvery)
     val vals: Array[Any] = fields.map {
       case "_entity_type" => UTF8String.fromString(conf.name)
       case "id" => java.lang.Long.valueOf(rid)
-      case f if !served(f) => null
-      case "ts_us" => java.lang.Long.valueOf(PagedEntitySource.tsOf(id))
+      case f if !conf.fields.forall(_.contains(f)) => null
+      case "ts_us" => java.lang.Long.valueOf(PagedEntitySource.tsOf(p))
       case "value" =>
         java.lang.Double.valueOf(((rid * 7919 + ver * 1000003L) % 100000) / 100.0)
       case "category" => UTF8String.fromString(s"cat${rid % conf.categoryMod}")
     }
     new GenericInternalRow(vals)
   }
+
+  override def next(): Boolean = {
+    while (!rows.hasNext) {
+      if (!pages.hasNext) return false
+      val page = pages.next()
+      rows = page.conf.remote match {
+        case Some(api) => fetchWithRetry(api, page).iterator
+        case None => (page.startId until page.endId).iterator.map(generated(page.conf, _))
+      }
+    }
+    cur = rows.next()
+    true
+  }
+
+  override def get(): InternalRow = cur
 
   override def close(): Unit = ()
 }
@@ -830,7 +779,7 @@ private[sources] object HttpPageFetch {
   *                             EXHAUSTED its in-fetch retries
   *                             (handleFetchError, :349-366) — 0 on any
   *                             successful poll; climbs only while the
-  *                             fault plan keeps a page down
+  *                             `pollFailAt` keeps a poll down
   *  - `next_scheduled_run`     0 while windows open immediately; a batch
   *                             reset after >10 consecutive failures
   *                             (:356-361) reschedules the entity to
@@ -944,7 +893,7 @@ object MultiPagedStreamOffset {
   * backpressure control (maxOffsetsPerTrigger's role). */
 class PagedMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
     pageSize: Int, windowRows: Long, required: StructType,
-    faults: PagedEntitySource.FaultPlan = PagedEntitySource.FaultPlan.none)
+    faults: PagedEntitySource.FaultPlan)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset, ReadLimit}
@@ -962,9 +911,9 @@ class PagedMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
   /** Each entity's poll-failure budget still in force, keyed by position.
     * A batch reset CONSUMES the entry for the position that caused it: a
     * real transient outage ends, so the replayed window must eventually
-    * pass — keeping the entry would re-fail the same page forever (an
-    * injected permanent outage, which is what `failAttempts > maxRetries`
-    * is for). Per entity, like the reference's per-entity retry_count: one
+    * pass — keeping the entry would re-fail the same page forever (a
+    * permanent outage is an HTTP backend that keeps answering 5xx).
+    * Per entity, like the reference's per-entity retry_count: one
     * entity's reset must not retire an outage another entity is still
     * counting. Driver-local by design: a driver restart re-arms the plan,
     * which only adds zero-progress batches — committed rows stay
@@ -1031,12 +980,12 @@ class PagedMicroBatchStream(confs: Seq[PagedEntitySource.EntityConf],
       PagedMicroBatchStream.replay(
         sm.getOrElse(c.name, PagedStreamOffset.Initial),
         em.getOrElse(c.name, PagedStreamOffset.Initial),
-        pageSize, winOf(c), c, faults)
+        pageSize, winOf(c), c)
     }, PagedPartition.slots)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagedReaderFactory(required)
+    new PagedReaderFactory(required, faults)
 
   override def deserializeOffset(json: String): SOffset =
     MultiPagedStreamOffset.fromJson(json)
@@ -1139,8 +1088,8 @@ object PagedMicroBatchStream {
 
   /** The pages of one entity's logged batch: the successful polls from
     * `start` to `end`, replayed with the pure [[step]] one page at a time
-    * and without the fault plan (a failing poll serves nothing and ends
-    * its batch). Each page carries its poll's OPEN WINDOW, not its own
+    * and without `pollFailAt` (a failing poll serves nothing and ends its
+    * batch). Each page carries its poll's OPEN WINDOW, not its own
     * bounds, so an HTTP fetch reproduces the reference's poll request
     * exactly: `where=` holds [last_processed, batch_end) and `offset=` the
     * cursor within it (ChargeOverSourceTask.java:221-226 paging a fixed
@@ -1150,8 +1099,8 @@ object PagedMicroBatchStream {
     * re-plans a logged batch to the same pages; it is raised to the
     * start's reschedule mark so a resumed entity is not parked again. */
   private[sources] def replay(start: PagedStreamOffset, end: PagedStreamOffset,
-      pageSize: Int, windowRows: Long, conf: PagedEntitySource.EntityConf,
-      faults: PagedEntitySource.FaultPlan): Seq[PagedPage] = {
+      pageSize: Int, windowRows: Long,
+      conf: PagedEntitySource.EntityConf): Seq[PagedPage] = {
     val bound = math.max(if (end.isProcessingBatch) end.batchEndId else end.pos,
       start.nextScheduledRunId)
     val pages = Seq.newBuilder[PagedPage]
@@ -1162,8 +1111,8 @@ object PagedMicroBatchStream {
       if (next eq cur)
         throw new IllegalStateException(s"offset ${end.json()} is not " +
           s"reachable from ${start.json()} in whole polls")
-      pages += PagedPage(cur.pos, next.pos, conf,
-        faults.pageFault(cur.pos, pageSize), cur.lastProcessedId, next.batchEndId)
+      pages += PagedPage(cur.pos, next.pos, conf, cur.lastProcessedId,
+        next.batchEndId)
       cur = next
     }
     pages.result()

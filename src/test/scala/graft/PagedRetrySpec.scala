@@ -3,91 +3,66 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.sources.{PagedMicroBatchStream, PagedStreamOffset}
+import PagedHttpFixture.serving
 
 /** R12 on the LIVE data path: the reference-exact retry loop
   * (fetchBatchWithRetry, ChargeOverSourceTask.java:296-343) wrapping the
-  * simulated page fetch, poll-level retry_count surfacing in the stream
+  * HTTP page fetch, poll-level retry_count surfacing in the stream
   * offset log (handleFetchError, :349-366), and the >10-consecutive-
   * failures batch reset (:356-361) producing the reference's documented
-  * at-least-once window replay — repaired downstream by dedup. */
+  * at-least-once window replay — repaired downstream by dedup. Page
+  * faults are real 429/5xx answers from [[PagedHttpFixture]]; the batch
+  * read's retry cases are HttpPagedSpec's. */
 class PagedRetrySpec extends SparkSpec {
 
   private val Scale = "0.0001" // 30 s backoff cap → 3 ms sleeps
 
-  test("transient page faults: fault-injected batch read == clean read") {
-    def read(faulty: Boolean) = {
-      var r = spark.read.format("graft.sources.PagedEntitySource")
-        .option("rows", "2500").option("pageSize", "300")
-      if (faulty) r = r.option("failEveryNthPage", "2")
-        .option("failAttempts", "3").option("maxRetries", "3")
-        .option("retryBackoffScale", Scale)
-      r.load().orderBy(col("id")).collect().map(_.toSeq).toSeq
-    }
-    assert(read(faulty = true) == read(faulty = false))
-  }
-
-  test("rate-limited page faults (429 → flat 60 s) recover identically") {
-    val rows = spark.read.format("graft.sources.PagedEntitySource")
-      .option("rows", "1000").option("pageSize", "500")
-      .option("failEveryNthPage", "1").option("failAttempts", "1")
-      .option("rateLimit", "true").option("retryBackoffScale", Scale)
-      .load().orderBy(col("id")).collect().map(_.getLong(0)).toSeq
-    assert(rows == (0L until 1000L))
-  }
-
-  test("attempts exhausted: the read fails with the reference's final error") {
-    val e = intercept[org.apache.spark.SparkException] {
-      spark.read.format("graft.sources.PagedEntitySource")
-        .option("rows", "100").option("pageSize", "100")
-        .option("failEveryNthPage", "1").option("failAttempts", "5")
-        .option("maxRetries", "2").option("retryBackoffScale", Scale)
-        .load().collect()
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: chain(t.getCause)
-    val msgs = chain(e).map(x => Option(x.getMessage).getOrElse(""))
-    assert(msgs.exists(_.contains("Failed after 3 attempts")),
-      s"expected max.retries+1 exhaustion message, got: $msgs")
-  }
-
   test("fault-injected AvailableNow drain == clean drain; offset log shows retry_count > 0") {
-    def drained(view: String, availableNow: Boolean): Seq[PagedStreamOffset] = {
-      val ckpt = tempDir("graft_rt_ck")
-      val df = spark.readStream.format("graft.sources.PagedEntitySource")
-        .option("rows", "2500").option("pageSize", "300")
-        .option("windowRows", "1000")
-        .option("failEveryNthPage", "3").option("failAttempts", "2")
-        .option("retryBackoffScale", Scale)
-        .option("pollFailAt", "600:2,1300:1") // exhausted polls mid-window
-        .load()
-      StreamRuns.drainToMemory(df, view, ckpt, availableNow)
-      val got = spark.table(view)
-        .orderBy(col("id")).collect().map(_.toSeq).toSeq
-      val clean = spark.read.format("graft.sources.PagedEntitySource")
-        .option("rows", "2500").option("pageSize", "300").load()
-        .orderBy(col("id")).collect().map(_.toSeq).toSeq
-      assert(got == clean, "fault-injected drain must be row-identical to a clean drain")
-      val parsed = StreamRuns.entityOffsets(ckpt)
-      // retry_count climbs 1→2 at pos 600, hits 1 at pos 1300, and every
-      // successful poll resets it to 0 (Task.java:224 "reset on success")
-      assert(parsed.map(_.retryCount).filter(_ > 0) == Seq(1, 2, 1),
-        s"retry counts: ${parsed.map(_.retryCount)}")
-      val failed = parsed.filter(_.retryCount > 0)
-      assert(failed.map(_.pos) == Seq(600L, 600L, 1300L))
-      assert(failed.forall(_.isProcessingBatch), "failed polls keep the window open")
-      assert(parsed.last.retryCount == 0 && parsed.last.pos == 2500L)
-      parsed
+    serving(Map("events" -> 2500L)) { fx =>
+      def drained(view: String, availableNow: Boolean): Seq[PagedStreamOffset] = {
+        // page faults the in-fetch retries heal: 503 twice, 429 once
+        fx.requests.clear()
+        fx.failFirst("events", 0L, times = 2, status = 503)
+        fx.failFirst("events", 900L, times = 1, status = 429)
+        val ckpt = tempDir("graft_rt_ck")
+        val df = spark.readStream.format("graft.sources.PagedEntitySource")
+          .option("rows", "2500").option("pageSize", "300")
+          .option("windowRows", "1000")
+          .option("endpoint", fx.endpoint)
+          .option("retryBackoffScale", Scale)
+          .option("pollFailAt", "600:2,1300:1") // exhausted polls mid-window
+          .load()
+        StreamRuns.drainToMemory(df, view, ckpt, availableNow)
+        val got = spark.table(view)
+          .orderBy(col("id")).collect().map(_.toSeq).toSeq
+        val clean = spark.read.format("graft.sources.PagedEntitySource")
+          .option("rows", "2500").option("pageSize", "300").load()
+          .orderBy(col("id")).collect().map(_.toSeq).toSeq
+        assert(got == clean, "fault-injected drain must be row-identical to a clean drain")
+        // 10 pages plus the 3 failed attempts; an exhausted poll plans no page
+        assert(fx.requests.size == 10 + 3, s"requests: ${fx.requests.size}")
+        val parsed = StreamRuns.entityOffsets(ckpt)
+        // retry_count climbs 1→2 at pos 600, hits 1 at pos 1300, and every
+        // successful poll resets it to 0 (Task.java:224 "reset on success")
+        assert(parsed.map(_.retryCount).filter(_ > 0) == Seq(1, 2, 1),
+          s"retry counts: ${parsed.map(_.retryCount)}")
+        val failed = parsed.filter(_.retryCount > 0)
+        assert(failed.map(_.pos) == Seq(600L, 600L, 1300L))
+        assert(failed.forall(_.isProcessingBatch), "failed polls keep the window open")
+        assert(parsed.last.retryCount == 0 && parsed.last.pos == 2500L)
+        parsed
+      }
+      // per poll (ProcessingTime): the 10 clean micro-batches plus one
+      // zero-progress batch per exhausted poll (2 at pos 600, 1 at pos 1300)
+      val perPoll = drained("paged_retry_polls", availableNow = false)
+      assert(perPoll.length == 13, s"expected 13 micro-batches, got ${perPoll.length}")
+      // AvailableNow: each exhausted poll ends its batch — [0, 600) then the
+      // failure, the second failure alone, [600, 1300) then the failure,
+      // then the rest
+      val once = drained("paged_retry", availableNow = true)
+      assert(once.length == 4, s"expected 4 micro-batches, got ${once.length}")
+      assert(once == perPoll.filter(_.retryCount > 0) :+ perPoll.last)
     }
-    // per poll (ProcessingTime): the 10 clean micro-batches plus one
-    // zero-progress batch per exhausted poll (2 at pos 600, 1 at pos 1300)
-    val perPoll = drained("paged_retry_polls", availableNow = false)
-    assert(perPoll.length == 13, s"expected 13 micro-batches, got ${perPoll.length}")
-    // AvailableNow: each exhausted poll ends its batch — [0, 600) then the
-    // failure, the second failure alone, [600, 1300) then the failure,
-    // then the rest
-    val once = drained("paged_retry", availableNow = true)
-    assert(once.length == 4, s"expected 4 micro-batches, got ${once.length}")
-    assert(once == perPoll.filter(_.retryCount > 0) :+ perPoll.last)
   }
 
   test(">10 consecutive exhausted polls reset the batch; replay duplicates repair by dedup") {
@@ -225,7 +200,6 @@ class PagedRetrySpec extends SparkSpec {
       opts.foreach { case (k, v) => r = r.option(k, v) }
       r.load().collect()
     }
-    intercept[IllegalArgumentException] { load("failEveryNthPage" -> "-1") }
     intercept[IllegalArgumentException] { load("maxRetries" -> "-2") }
     intercept[IllegalArgumentException] { load("retryBackoffScale" -> "0") }
     intercept[IllegalArgumentException] { load("pollFailAt" -> "banana") }
@@ -239,37 +213,41 @@ class PagedRetrySpec extends SparkSpec {
   }
 
   test("multi-entity: faults + per-batch admission split still equal the batch read") {
-    def src(stream: Boolean) = {
-      val opts = Map("entities" -> "customer,invoice", "customer.rows" -> "700",
-        "invoice.rows" -> "1200", "pageSize" -> "300", "windowRows" -> "500",
-        "failEveryNthPage" -> "2", "failAttempts" -> "2",
-        "retryBackoffScale" -> Scale)
-      if (stream) {
-        var r = spark.readStream.format("graft.sources.PagedEntitySource")
-        opts.foreach { case (k, v) => r = r.option(k, v) }
-        r.load()
-      } else {
-        var r = spark.read.format("graft.sources.PagedEntitySource")
-        opts.foreach { case (k, v) => r = r.option(k, v) }
-        r.load()
-      }
-    }
-    val batch = src(stream = false)
+    val opts = Map("entities" -> "customer,invoice", "customer.rows" -> "700",
+      "invoice.rows" -> "1200", "pageSize" -> "300", "windowRows" -> "500",
+      "retryBackoffScale" -> Scale)
+    var r = spark.read.format("graft.sources.PagedEntitySource")
+    opts.foreach { case (k, v) => r = r.option(k, v) }
+    val batch = r.load()
       .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
-    def drained(view: String, availableNow: Boolean): Int = {
-      val ckpt = tempDir("graft_mf_ck")
-      StreamRuns.drainToMemory(src(stream = true), view, ckpt, availableNow)
-      val got = spark.table(view)
-        .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
-      assert(got.length == 1900 && got == batch)
-      StreamRuns.offsetJsons(ckpt).length
+    serving(Map("customer" -> 700L, "invoice" -> 1200L)) { fx =>
+      def drained(view: String, availableNow: Boolean): Int = {
+        // each entity has a page answering 503 twice and one answering 429
+        // once; the batch read above is the generator's
+        fx.requests.clear()
+        fx.failFirst("customer", 0L, times = 2, status = 503)
+        fx.failFirst("customer", 300L, times = 1, status = 429)
+        fx.failFirst("invoice", 0L, times = 1, status = 429)
+        fx.failFirst("invoice", 300L, times = 2, status = 503)
+        var s = spark.readStream.format("graft.sources.PagedEntitySource")
+          .option("endpoint", fx.endpoint)
+        opts.foreach { case (k, v) => s = s.option(k, v) }
+        val ckpt = tempDir("graft_mf_ck")
+        StreamRuns.drainToMemory(s.load(), view, ckpt, availableNow)
+        val got = spark.table(view)
+          .orderBy(col("_entity_type"), col("id")).collect().map(_.toSeq).toSeq
+        assert(got.length == 1900 && got == batch)
+        // 3 customer and 5 invoice pages plus the 6 failed attempts
+        assert(fx.requests.size == 8 + 6, s"requests: ${fx.requests.size}")
+        StreamRuns.offsetJsons(ckpt).length
+      }
+      // the declared default limit (pageSize × entities) splits back to one
+      // page per entity per poll: same 5 per-poll micro-batches as the
+      // clean spec, and one under AvailableNow (page faults heal in-fetch)
+      val perPoll = drained("paged_multi_fault_polls", availableNow = false)
+      assert(perPoll == 5, s"expected 5 micro-batches, got $perPoll")
+      val once = drained("paged_multi_fault", availableNow = true)
+      assert(once == 1, s"expected 1 micro-batch, got $once")
     }
-    // the declared default limit (pageSize × entities) splits back to one
-    // page per entity per poll: same 5 per-poll micro-batches as the
-    // clean spec, and one under AvailableNow (page faults heal in-fetch)
-    val perPoll = drained("paged_multi_fault_polls", availableNow = false)
-    assert(perPoll == 5, s"expected 5 micro-batches, got $perPoll")
-    val once = drained("paged_multi_fault", availableNow = true)
-    assert(once == 1, s"expected 1 micro-batch, got $once")
   }
 }
