@@ -24,9 +24,9 @@ import graft.plans.NanosRangePushdown
   *    kernels, and `json_string_cast` (the StringCast SMT's scalar).
   *
   * Local/programmatic sessions get the same behavior lazily —
-  * `Tables.load` installs the rule idempotently, the queries build the
-  * kernels through their Column helpers, and `qStringCast` registers
-  * `json_string_cast` — so the extension is additive, not required.
+  * `Tables.load` installs the rule idempotently, and the queries build
+  * every kernel, `json_string_cast` included, through its Column helper
+  * — so the extension is additive, not required.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,12 +1,13 @@
 package graft.engine
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,8 +70,14 @@ object JsonStringCast {
     case (x, _) => x.asInstanceOf[AnyRef] // Int/Long/Double/Boolean/... box as-is
   }
 
-  /** Register as a SQL function so callers can use `expr("json_string_cast(c)")`
-    * without touching Column internals. Idempotent. */
+  /** Column-level cast: how the engine's own queries build it. */
+  def column(c: Column): Column =
+    GraftColumnBridge.column(JsonStringCast(GraftColumnBridge.expression(c)))
+
+  /** Register as a session SQL function, for SQL text that calls
+    * `json_string_cast(c)` (perfbench's `Harness.cdcDrain`, CastSpec's SQL
+    * cases); the engine's queries use [[column]] and never register it.
+    * Idempotent. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "json_string_cast", exprs => JsonStringCast(exprs.head), "scala_udf")
@@ -85,13 +92,12 @@ object Cast {
     * The whole query is a narrow projection: one codegen stage over the
     * scan, no shuffle, order by key for the diff. */
   def qStringCast(spark: SparkSession, sfDir: String): DataFrame = {
-    JsonStringCast.register(spark)
     Tables.events(spark, sfDir)
       .select(
         col("event_id"),
-        expr("json_string_cast(user_id)").as("user_id_cast"),
-        expr("json_string_cast(event_type)").as("event_type_cast"),
-        expr("json_string_cast(props)").as("props_cast"))
+        JsonStringCast.column(col("user_id")).as("user_id_cast"),
+        JsonStringCast.column(col("event_type")).as("event_type_cast"),
+        JsonStringCast.column(col("props")).as("props_cast"))
   }
 
   /** Jackson parity in SQL: longs print bare, strings get quoted with inner

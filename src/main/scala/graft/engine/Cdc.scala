@@ -56,9 +56,8 @@ object Cdc {
     * [[Envelope.routed]]), then latest-wins compaction per (entity, id),
     * ordered by (entity, id). */
   def castRouteCompact(landed: DataFrame): DataFrame = {
-    JsonStringCast.register(landed.sparkSession)
     val enriched = Envelope.routed(Envelope.keyed(
-      landed.withColumn("category_cast", expr("json_string_cast(category)")),
+      landed.withColumn("category_cast", JsonStringCast.column(col("category"))),
       "id"), "chargeover")
     val w = Window.partitionBy(col("_entity_type"), col("id"))
       .orderBy(col("ts_us").desc)

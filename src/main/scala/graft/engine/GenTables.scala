@@ -88,8 +88,7 @@ object GenTables {
       .filter(maxGenExclusive.fold(gen >= Long.MinValue)(gen < _)).drop("gen")
   }
 
-  /** Drop `tables` in list order — an order a family's fence may rely on
-    * (see [[LlmOps.compactIndexCutover]]). */
+  /** Drop `tables`. */
   def drop(spark: SparkSession, tables: Seq[String]): Unit =
     tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
@@ -200,9 +199,14 @@ object GenTables {
     * window); `tornAppendAt` commits table i's append, then deletes one
     * of its data files and throws BEFORE the marker — the torn
     * mid-job-commit state where the target dir exists but is missing
-    * rows. */
+    * rows.
+    *
+    * `foldAll` plans the major compaction on every pass: all candidates
+    * fold, as the [[MaxLiveGens]] backstop does. A resumed pass follows
+    * its manifest either way. */
   private[graft] def compactTieredTables(spark: SparkSession, name: String,
       tables: Seq[(String, Seq[String])], currentGen: Long,
+      foldAll: Boolean = false,
       crashAfterTables: Int = Int.MaxValue,
       tornAppendAt: Int = -1): Option[TierCompaction] = {
     import org.apache.hadoop.fs.Path
@@ -262,7 +266,7 @@ object GenTables {
         val candidates = bytes - currentGen
         val maxBytes = if (candidates.isEmpty) 0L else candidates.values.max
         val f =
-          if (bytes.size > MaxLiveGens) candidates.keys.toSeq.sorted
+          if (foldAll || bytes.size > MaxLiveGens) candidates.keys.toSeq.sorted
           else candidates.filter(_._2 * 2 <= maxBytes).keys.toSeq.sorted
         if (f.size < 2) return None
         val tmp = new Path(locs.head, s"._tier_plan_gen_$currentGen.tmp")
@@ -297,7 +301,7 @@ object GenTables {
         // append-from-self is safe here: the pruned scan's file listing is
         // snapshotted at planning and the write lands only under the (new)
         // target partition, disjoint from every file being read.
-        // distinct() is load-bearing, same as in compactIndex: without a
+        // distinct() is load-bearing, not just a dedup: without a
         // real bucketing consumer the planner elides the repartition AND
         // disables the bucketed scan — per-input-file write tasks,
         // multi-file buckets, no compaction (observed: 22 files for 8

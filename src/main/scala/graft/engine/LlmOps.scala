@@ -1521,118 +1521,63 @@ object LlmOps {
       gen: Long = 1L): Unit =
     ingest(spark, name, batch, gen)(_ => ())
 
-  /** Digests first: [[compactIndexCutover]]'s fence relies on it. */
+  /** Drop the index's two tables. */
   def dropBucketedIndex(spark: SparkSession, name: String): Unit =
     GenTables.drop(spark, Seq(s"${name}_digests", s"${name}_buckets"))
 
-  /** Index COMPACTION — the maintenance step that completes the table
-    * lifecycle (build → absorb* → compact → probe …): fold every
-    * generation into a single-generation snapshot under a fresh dir/name.
-    * Each absorb appends one small file per bucket, so after many ingests
-    * a bucket is a pile of tiny files (the classic small-files problem);
-    * the rewrite restores one-file-per-bucket (and with it the sortBy
+  /** Index COMPACTION in place — the maintenance step that completes the
+    * table lifecycle (build → absorb* → compact → probe …). Each absorb
+    * appends one small file per bucket, so after many ingests a bucket is
+    * a pile of tiny files (the classic small-files problem); a fold
+    * rewrites generations as one file per bucket (and with it the sortBy
     * metadata a bucketed SMJ can exploit). Probe answers are UNCHANGED by
-    * construction — rows are preserved exactly, only gen collapses — the
-    * invariant q_corpus_compact declares under the exact probe's oracle. */
-  def compactIndex(spark: SparkSession, from: String, dir: String,
-      name: String, gen: Long = 0L): Unit = {
-    // distinct() is load-bearing beyond defensive dedup: re-writing the
-    // bare bucketed scan elides saveBucketedIndex's repartition (the
-    // scan's claimed HashPartitioning satisfies it) and the planner then
-    // DISABLES the unconsumed bucketed scan — packed multi-bucket tasks,
-    // multi-file buckets, no compaction (observed: 16 files stayed 16).
-    // The aggregate is a real bucketing consumer, so rows reach the
-    // writer genuinely clustered by the bucket key.
-    val idx = loadBucketedIndex(spark, from)
-    saveBucketedIndex(spark,
-      CorpusIndex(idx.digests.distinct(), idx.buckets.distinct()),
-      dir, name, gen)
-  }
-
-  /** [[compactIndex]] + drop as ONE idempotent maintenance pass — the
-    * crash-and-retry audit of the offline compaction (VERDICT r12 #4).
-    * The pass has three non-atomic steps (build `to`, drop `from`'s two
-    * tables, in order), and a retry must converge from every crash point:
+    * construction — rows are preserved exactly, only gen collapses.
     *
-    *  - crash mid-build or between build and drop: `from` still exists →
-    *    the retry re-runs the build (mode=overwrite rewrites any partial
-    *    `to` completely) and drops — converges;
-    *  - crash mid-drop (digests dropped, buckets not) or after the drop:
-    *    `from`'s digests table is gone → the build already committed in
-    *    full (the drop only starts after it), so the retry just finishes
-    *    dropping the leftovers and returns — previously this state
-    *    wedged: re-running [[compactIndex]] against the half-dropped
-    *    source threw, and the batch could never complete.
+    * `foldAll` chooses the plan:
     *
-    * The asymmetric fence is sound because dropBucketedIndex removes
-    * digests FIRST: "digests missing" can only be observed after the
-    * build fully committed. */
-  def compactIndexCutover(spark: SparkSession, from: String, dir: String,
-      to: String, gen: Long = 0L): Unit = {
-    if (spark.catalog.tableExists(s"${from}_digests")) {
-      compactIndex(spark, from, dir, to, gen)
-      dropBucketedIndex(spark, from)
-    } else {
-      require(spark.catalog.tableExists(s"${to}_digests") &&
-        spark.catalog.tableExists(s"${to}_buckets"),
-        s"compaction cutover $from -> $to: source gone but target absent — " +
-          "the index was dropped outside this protocol")
-      // finish a torn drop (buckets may have survived the crash)
-      dropBucketedIndex(spark, from)
-    }
-  }
-
-  /** Size-TIERED index compaction — the in-loop maintenance schedule's
-    * scale-safe form. [[compactIndex]] folds EVERY generation and rewrites
-    * the whole index: fine as an offline step, but on an in-loop schedule
-    * it pays O(index) I/O per compaction, a quadratic total rewrite cost
-    * over a long ingest stream. This pass folds ONLY the small
-    * generations, in place:
+    *  - `false`, the in-loop schedule's size-TIERED pass: fold ONLY the
+    *    small generations. Candidates are every generation except
+    *    `currentGen` (the batch whose foreachBatch invocation is running)
+    *    — leaving the current batch's own rows unfolded keeps a RETRIED
+    *    batch's as-of view (`gen < currentGen`) byte-identical across the
+    *    compaction boundary, so recovery replays are deterministic. Of
+    *    those, generations holding at most HALF the largest candidate's
+    *    bytes fold; the big compacted base exceeds the half-of-max
+    *    threshold and is NEVER rewritten. Bytes touched per pass are
+    *    therefore O(recent generations), and a given byte is rewritten
+    *    only when its tier has roughly doubled — O(log N) times over the
+    *    stream's life, the LSM size-tiering discipline — versus O(N)
+    *    rewrites of the base if every pass folded everything.
+    *  - `true`, the major compaction: every candidate folds, whatever its
+    *    size — the offline step, O(index) I/O. The tiered pass takes this
+    *    same plan as its backstop when live generations exceed
+    *    [[GenTables.MaxLiveGens]] (the equal-tier regime, where graduated
+    *    fold outputs would otherwise pile up); in the dominant-base regime
+    *    (batches ≪ base, the 100 TB shape) the backstop never fires.
     *
-    *  - candidates are every generation except `currentGen` (the batch
-    *    whose foreachBatch invocation is running) — leaving the current
-    *    batch's own rows unfolded keeps a RETRIED batch's as-of view
-    *    (`gen < currentGen`) byte-identical across the compaction
-    *    boundary, so recovery replays are deterministic;
-    *  - of those, generations holding at most HALF the largest
-    *    candidate's bytes fold into one fresh file-per-bucket generation
-    *    `-(currentGen + 2)` (unique, since batch ids only grow; negative,
-    *    so `< every batch id` — every later as-of probe still sees the
-    *    folded rows exactly as before). The big compacted base exceeds
-    *    the half-of-max threshold and is NEVER rewritten.
-    *
-    * Bytes touched per pass are therefore O(recent generations), and a
-    * given byte is rewritten only when its tier has roughly doubled —
-    * O(log N) times over the stream's life, the LSM size-tiering
-    * discipline — versus the full fold's O(N) rewrites of the base.
-    *
-    * Backstop for the equal-tier regime: when batches are LARGE relative
-    * to the base, graduated fold outputs (each above half-of-max) can
-    * pile up without ever qualifying to fold again. If live generations
-    * exceed [[GenTables.MaxLiveGens]], the pass folds EVERY candidate —
-    * one big merge, the LSM major compaction. It costs O(index) but can only
-    * trigger after the small-fold rule has graduated several tiers,
-    * i.e. after ingest comparable to the index itself, so the amortized
-    * bound is unchanged; in the dominant-base regime (batches ≪ base,
-    * the 100 TB shape) it never fires.
-    *
-    * Mechanically the fold is a partition-level rewrite, which is what
-    * the gen-partitioned layout buys: the folded gens stream through a
-    * partition-PRUNED scan (the base's files are never opened), land as
-    * one file per bucket under the target gen, and the source partitions
-    * are then dropped and their directories deleted. foreachBatch runs
-    * the loop single-writer, so the append→drop pair needs no external
-    * coordination; a real deployment stages the pair in a transactional
-    * table format (same note as [[ingest]]). Returns None — no table
-    * change at all — when fewer than two generations qualify. */
+    * Either way the folded generations land in one fresh generation
+    * `-(currentGen + 2)` of the same tables (unique, since batch ids only
+    * grow; negative, so `< every batch id` — every later as-of probe still
+    * sees the folded rows exactly as before). Mechanically the fold is a
+    * partition-level rewrite, which is what the gen-partitioned layout
+    * buys: the folded gens stream through a partition-PRUNED scan (kept
+    * gens' files are never opened), land as one file per bucket under
+    * the target gen, and the source partitions are then dropped and their
+    * directories deleted. The manifest and per-table commit markers of
+    * [[GenTables.compactTieredTables]] make the pass retry-safe from every
+    * crash point with no rename; a real deployment stages the append→drop
+    * pair in a transactional table format (same note as [[ingest]]).
+    * Returns None — no table change at all — when fewer than two
+    * generations qualify. */
   def compactIndexTiered(spark: SparkSession, name: String,
-      currentGen: Long): Option[GenTables.TierCompaction] =
-    GenTables.compactTieredTables(spark, name, indexTables, currentGen)
+      currentGen: Long, foldAll: Boolean): Option[GenTables.TierCompaction] =
+    GenTables.compactTieredTables(spark, name, indexTables, currentGen, foldAll)
 
 
   /** q_corpus_compact: build gen 0 over %10 < 6, absorb %10 in (6,7) as
-    * gen 1, COMPACT the two-generation index to a fresh single-generation
-    * table pair, drop the original, probe `deltaBatch` against the
+    * gen 1, COMPACT the two-generation index in place (the fold-all pass
+    * at `currentGen` 2, the next unwritten generation: gens 0 and 1 fold
+    * into gen -4 of the same tables), probe `deltaBatch` against the
     * compacted index. The index content equals the %10 < 8 index either
     * way, so the oracle is EXACTLY qCorpusDeltaSql — compaction must be
     * semantically invisible, the q_skew_join rewrite-invisibility
@@ -1646,8 +1591,8 @@ object LlmOps {
       absorbInto(spark, name,
         docs.filter(col("doc_id") % 10 >= 6 && col("doc_id") % 10 < 8)
           .select(col("doc_id"), col("text")), gen = 1L)
-      compactIndexCutover(spark, name, s"$dir/c", s"${name}_c")
-      Iterate.cut(probeDelta(loadBucketedIndex(spark, s"${name}_c"), deltaBatch(docs)))
+      compactIndexTiered(spark, name, currentGen = 2L, foldAll = true)
+      Iterate.cut(probeDelta(loadBucketedIndex(spark, name), deltaBatch(docs)))
     }
   }
 

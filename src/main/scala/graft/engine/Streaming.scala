@@ -826,7 +826,7 @@ object Streaming {
               // generations (never this batch's own gen = id — a retried
               // batch re-reads an identical as-of view), base untouched
               val report = LlmOps.compactIndexTiered(spark, idxName,
-                currentGen = id)
+                currentGen = id, foldAll = false)
               tierLog.foreach(q => { q.add(report); () })
             }
           }

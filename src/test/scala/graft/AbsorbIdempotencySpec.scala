@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.engine.LlmOps
 
-/** Crash-and-retry audit of the two non-atomic maintenance passes the
-  * round-12 verdict named alongside the tiered fold (directive 4):
-  *
-  *  - [[LlmOps.absorbInto]]'s digests/buckets appends are not atomic as a
-  *    pair, but each append REPLACES its generation, so a RETRY is
-  *    self-healing: a lost second append or a torn partial commit is
-  *    re-derived from the batch and rewritten whole. These tests crash
-  *    the pass both ways and pin retry == clean twin.
-  *  - [[LlmOps.compactIndexCutover]] fences the build-then-drop offline
-  *    compaction: a retry from any crash point (partial build, between
-  *    build and drop, mid-drop, after drop) converges to exactly one
-  *    index — the state that previously wedged (source half-dropped,
-  *    rebuild impossible) now completes the drop and returns. */
+/** Crash-and-retry audit of the non-atomic absorb pass the round-12
+  * verdict named alongside the tiered fold (directive 4):
+  * [[LlmOps.absorbInto]]'s digests/buckets appends are not atomic as a
+  * pair, but each append REPLACES its generation, so a RETRY is
+  * self-healing: a lost second append or a torn partial commit is
+  * re-derived from the batch and rewritten whole. These tests crash the
+  * pass both ways and pin retry == clean twin. (The compaction's crash
+  * points are TierIdempotencySpec's.) */
 class AbsorbIdempotencySpec extends SparkSpec {
 
   private val hfs = org.apache.hadoop.fs.FileSystem.getLocal(
@@ -118,53 +113,6 @@ class AbsorbIdempotencySpec extends SparkSpec {
         "an unfenced probe must differ, or this test shows nothing")
     } finally {
       LlmOps.dropBucketedIndex(spark, a); LlmOps.dropBucketedIndex(spark, b)
-    }
-  }
-
-  test("compactIndexCutover converges from every crash point") {
-    val dir = tempDir("graft_cut")
-    val (from, to) = ("graft_spec_cut_from", "graft_spec_cut_to")
-    try {
-      LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), s"$dir/g", from)
-      LlmOps.absorbInto(spark, from, batch, gen = 1L)
-      val want = contentOf(from)
-
-      // crash point 1: a PARTIAL build of `to` (one file torn away), from
-      // intact — the retry's overwrite must rewrite `to` completely
-      LlmOps.compactIndex(spark, from, s"$dir/c", to)
-      val tdir = new org.apache.hadoop.fs.Path(s"$dir/c/digests/gen=0")
-      val part = hfs.listStatus(tdir)
-        .filter(_.getPath.getName.startsWith("part-")).head.getPath
-      hfs.delete(part, false)
-      spark.catalog.refreshTable(s"${to}_digests")
-      LlmOps.compactIndexCutover(spark, from, s"$dir/c", to)
-      assert(contentOf(to) == want, "retry after a partial build must rebuild in full")
-      assert(!spark.catalog.tableExists(s"${from}_digests"),
-        "the cutover must have dropped the source")
-
-      // crash point 2: mid-drop — digests dropped, buckets left behind.
-      // Rebuild the torn state, then the retry must finish the drop
-      // WITHOUT touching the committed target
-      LlmOps.saveBucketedIndex(spark, LlmOps.buildCorpusIndex(corpus), s"$dir/g2", from)
-      spark.sql(s"DROP TABLE ${from}_digests")
-      LlmOps.compactIndexCutover(spark, from, s"$dir/c", to)
-      assert(!spark.catalog.tableExists(s"${from}_buckets"),
-        "the retry must finish the torn drop")
-      assert(contentOf(to) == want, "the committed target must be untouched")
-
-      // crash point 3: after the drop (retry of a fully completed pass)
-      LlmOps.compactIndexCutover(spark, from, s"$dir/c", to)
-      assert(contentOf(to) == want)
-
-      // and the fence: source gone AND target gone is a real error, not
-      // a silent no-op
-      spark.sql(s"DROP TABLE ${to}_digests")
-      val boom = intercept[IllegalArgumentException] {
-        LlmOps.compactIndexCutover(spark, from, s"$dir/c", to)
-      }
-      assert(boom.getMessage.contains("cutover"), boom.getMessage)
-    } finally {
-      LlmOps.dropBucketedIndex(spark, from); LlmOps.dropBucketedIndex(spark, to)
     }
   }
 }

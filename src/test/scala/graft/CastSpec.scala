@@ -60,4 +60,19 @@ class CastSpec extends SparkSpec {
       expr("json_string_cast(named_struct('b', 2, 'a', 1))").as("c"))
     assert(df.collect()(0).getString(0) == """{"b":2,"a":1}""")
   }
+
+  test("q_string_cast builds the cast as a Column: it registers no session function") {
+    val fresh = spark.newSession()
+    val rows = graft.engine.Cast.qStringCast(fresh, sf).collect().toSet
+    assert(!fresh.sessionState.functionRegistry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("json_string_cast")),
+      "q_string_cast must not register json_string_cast in its session")
+    // the same rows as the cast called by its SQL name
+    JsonStringCast.register(spark)
+    val bySql = graft.engine.Tables.events(spark, sf).selectExpr("event_id",
+      "json_string_cast(user_id) AS user_id_cast",
+      "json_string_cast(event_type) AS event_type_cast",
+      "json_string_cast(props) AS props_cast").collect().toSet
+    assert(rows.nonEmpty && rows == bySql)
+  }
 }

@@ -190,22 +190,24 @@ class CorpusDeltaSpec extends SparkSpec {
       val before = LlmOps.probeDelta(LlmOps.loadBucketedIndex(spark, name), batch)
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
       val filesBefore = parquetFiles(s"$dir/g/digests")
-      LlmOps.compactIndex(spark, name, s"$dir/c", s"${name}_c")
-      val after = LlmOps.probeDelta(LlmOps.loadBucketedIndex(spark, s"${name}_c"), batch)
+      val rep = LlmOps.compactIndexTiered(spark, name, currentGen = 2L, foldAll = true)
+        .getOrElse(fail("the fold-all pass must fold gens 0 and 1"))
+      val after = LlmOps.probeDelta(LlmOps.loadBucketedIndex(spark, name), batch)
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
       assert(after == before, "compaction must be probe-invisible")
       // the small-files problem is actually fixed: the absorb left >1
-      // file in at least one bucket; the rewrite is one file per bucket
-      val filesAfter = parquetFiles(s"$dir/c/digests")
+      // file in at least one bucket; the folded table is one file per
+      // bucket, its source generations' files gone
+      val filesAfter = parquetFiles(s"$dir/g/digests")
       assert(filesBefore > 8, s"fixture must show multi-file buckets, got $filesBefore")
       assert(filesAfter <= 8, s"compacted table must be one file per bucket, got $filesAfter")
-      // and the generation column collapsed
-      val gens = spark.table(s"${name}_c_digests").select(col("gen")).distinct()
+      // and the generation column collapsed onto the fold target
+      val gens = spark.table(s"${name}_digests").select(col("gen")).distinct()
         .collect().map(_.getLong(0)).toSet
-      assert(gens == Set(0L), s"compacted index must be single-generation, got $gens")
+      assert(rep.targetGen == -4L && gens == Set(-4L),
+        s"compacted index must be single-generation, got $gens")
     } finally {
       LlmOps.dropBucketedIndex(spark, name)
-      LlmOps.dropBucketedIndex(spark, s"${name}_c")
     }
   }
 

@@ -33,8 +33,9 @@ class LateralSessionSpec extends SparkSpec {
       (4L, ts(60), 1L, "view", 1.0, "{}"),
       (5L, ts(5), 2L, "view", 1.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    events.write.mode("overwrite").parquet("/tmp/graft_sess/events.parquet")
-    val got = Relational.qSessionize(spark, "/tmp/graft_sess")
+    val dir = tempDir("graft_sess")
+    events.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val got = Relational.qSessionize(spark, dir)
       .select(col("event_id"), col("session_seq"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 1L), s"got $got")

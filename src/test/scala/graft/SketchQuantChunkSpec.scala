@@ -227,9 +227,10 @@ class SketchQuantChunkSpec extends SparkSpec {
       (5L, toks(150))    // starts 0,48,96,144 → 4 chunks: 64,64,54,6
     ).toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("source", lit("s")).withColumn("n_chars", length(col("text")))
-    docs.write.mode("overwrite").parquet("/tmp/graft_chunk_docs/documents.parquet")
+    val dir = tempDir("graft_chunk_docs")
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // the other tables aren't read by qChunkDocs; point at the planted dir
-    val out = graft.engine.Curation.qChunkDocs(spark, "/tmp/graft_chunk_docs")
+    val out = graft.engine.Curation.qChunkDocs(spark, dir)
       .select(col("doc_id"), col("chunk_id"), col("start_token"), col("n_tokens"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2))
@@ -244,10 +245,11 @@ class SketchQuantChunkSpec extends SparkSpec {
   test("chunk text content: overlap region repeats, concatenation covers the doc") {
     import spark.implicits._
     val text = (0 until 100).map(i => s"w$i").mkString(" ")
+    val dir = tempDir("graft_chunk_one")
     Seq((7L, text)).toDF("doc_id", "text").withColumn("lang", lit("en"))
       .withColumn("source", lit("s")).withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet("/tmp/graft_chunk_one/documents.parquet")
-    val chunks = graft.engine.Curation.qChunkDocs(spark, "/tmp/graft_chunk_one")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val chunks = graft.engine.Curation.qChunkDocs(spark, dir)
       .orderBy(col("chunk_id")).select(col("chunk_text")).as[String].collect()
     assert(chunks.length == 3) // starts 0, 48, 96
     val c0 = chunks(0).split(" "); val c1 = chunks(1).split(" ")

@@ -11,8 +11,9 @@ import graft.engine.{GenTables, LlmOps}
   * strictly fewer bytes than it keeps (the big base never rewrites, the
   * in-flight batch's own generation never folds), and the drain ends on
   * a bounded generation count with the folded generation at one file per
-  * bucket. The full-fold [[LlmOps.compactIndex]] stays the OFFLINE step;
-  * this schedule is what a 100 TB ingest loop can actually afford. */
+  * bucket. The same pass with `foldAll` is q_corpus_compact's OFFLINE
+  * full fold; the tiered schedule is what a 100 TB ingest loop can
+  * actually afford. */
 class StreamCompactSpec extends SparkSpec {
 
   private def genOf(path: String): Long = {
@@ -96,7 +97,7 @@ class StreamCompactSpec extends SparkSpec {
       assert(before._1.nonEmpty && before._2.nonEmpty)
       // the in-loop pass at batch 2 folds gens {0, 1} but never gen 2 —
       // the replay-determinism half of the contract
-      val rep = LlmOps.compactIndexTiered(spark, name, currentGen = 2L)
+      val rep = LlmOps.compactIndexTiered(spark, name, currentGen = 2L, foldAll = false)
         .getOrElse(fail("two small gens below the cut must fold"))
       assert(rep.foldedGens == Seq(0L, 1L) && !rep.foldedGens.contains(2L))
       assert(asOf2() == before,
@@ -135,7 +136,7 @@ class StreamCompactSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
       val baseBefore = Seq("digests", "buckets").map(baseStatus)
 
-      val rep = LlmOps.compactIndexTiered(spark, name, currentGen = 3L)
+      val rep = LlmOps.compactIndexTiered(spark, name, currentGen = 3L, foldAll = false)
         .getOrElse(fail("three small gens against a big base must fold"))
       assert(rep.foldedGens == Seq(0L, 1L, 2L) && rep.targetGen == -5L)
 
@@ -155,7 +156,7 @@ class StreamCompactSpec extends SparkSpec {
       assert(after == before, "tiered compaction must be probe-invisible")
       // a second pass right away finds one small gen (the fold output)
       // against the base — nothing left worth folding
-      assert(LlmOps.compactIndexTiered(spark, name, currentGen = 3L).isEmpty,
+      assert(LlmOps.compactIndexTiered(spark, name, currentGen = 3L, foldAll = false).isEmpty,
         "re-running the pass immediately must be a no-op")
 
       // the live-generation backstop: pile up gens past MaxLiveGens and
@@ -167,7 +168,7 @@ class StreamCompactSpec extends SparkSpec {
           docs.filter(col("doc_id") % 10 >= 8 &&
               expr("(doc_id DIV 10) % 5") === (g - 10L))
             .select(col("doc_id"), col("text")), gen = g)
-      val major = LlmOps.compactIndexTiered(spark, name, currentGen = 15L)
+      val major = LlmOps.compactIndexTiered(spark, name, currentGen = 15L, foldAll = false)
         .getOrElse(fail("over-cap generation count must trigger the major fold"))
       assert(major.keptGens.isEmpty,
         s"major compaction must fold every candidate, kept ${major.keptGens}")
