@@ -122,10 +122,10 @@ object Sink {
     * its own `batch_id=<id>` partition with dynamic overwrite, so a
     * REPLAYED batch (the reference's at-least-once window re-read,
     * SURVEY §2a quirk) overwrites itself instead of duplicating —
-    * exactly-once effect on an append-only file sink. */
-  def idempotentBatchWriter(outDir: String)(df: DataFrame, batchId: Long): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    * exactly-once effect on an append-only file sink. Dynamic mode is a
+    * per-write option, so the shared session's conf is left as it was. */
+  def idempotentBatchWriter(outDir: String)(df: DataFrame, batchId: Long): Unit =
     df.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("batch_id").parquet(outDir)
-  }
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(outDir)
 }

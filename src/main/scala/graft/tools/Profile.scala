@@ -52,7 +52,7 @@ object Profile {
     case "dedup_pairs_kernel" => (spark, sfDir) =>
       graft.engine.LlmOps.sparseJaccardPairs(
         graft.engine.Tables.documents(spark, sfDir)
-          .select(lit("all").as("source"), col("doc_id"), col("text")))
+          .select(lit("all").as("source"), col("doc_id"), col("text")))._1
     case q => SparkEntry.queries.getOrElse(q,
       throw new IllegalArgumentException(s"unknown query: $q"))
   }

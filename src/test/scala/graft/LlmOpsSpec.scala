@@ -19,7 +19,7 @@ class LlmOpsSpec extends SparkSpec {
     val docs = (Seq((0L, base), (1L, nearDup)) ++
       others.zipWithIndex.map { case (t, i) => ((i + 2).toLong, t) })
       .toDF("doc_id", "text")
-    val pairs = LlmOps.minhashCandidatePairs(docs)
+    val pairs = LlmOps.minhashCandidatePairs(docs)._1
       .filter(col("jaccard") > 0.5).collect()
     assert(pairs.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L),
       s"expected (0,1) pair, got ${pairs.mkString(",")}")
@@ -30,19 +30,40 @@ class LlmOpsSpec extends SparkSpec {
     val text = Seq.tabulate(40)(j => s"tok$j").mkString(" ")
     val docs = (0L until 5L).map(i => (i, text)).toDF("doc_id", "text")
     // identical docs share every band bucket: full run emits all C(5,2) pairs
-    assert(LlmOps.minhashCandidatePairs(docs).count() == 10)
+    val (full, fullCapped) = LlmOps.minhashCandidatePairs(docs)
+    assert(full.count() == 10 && fullCapped == 0L)
     // cap=2 keeps the 2 smallest doc_ids per bucket → exactly the (0,1) pair;
     // a degenerate bucket degrades to cap² work instead of n²
-    val capped = LlmOps.minhashCandidatePairs(docs, cap = 2)
-      .select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
-    assert(capped == Set((0L, 1L)), s"got $capped")
+    val (capped, nCapped) = LlmOps.minhashCandidatePairs(docs, cap = 2)
+    val kept = capped.select(col("doc_a"), col("doc_b")).as[(Long, Long)].collect().toSet
+    assert(kept == Set((0L, 1L)), s"got $kept")
+    // all four band buckets hold the five docs, so all four overflow cap=2
+    assert(nCapped == 4L, s"capped buckets: $nCapped")
+  }
+
+  test("explodeSortedPairs emits every i < j pair, or each list's lex-first k") {
+    import spark.implicits._
+    // disjoint member ranges, so the pair multiset names its list; 14 and
+    // 15 members straddle k = 100 (C(14,2) = 91, C(15,2) = 105)
+    val lists = Seq(0, 1, 2, 14, 15, 101).zipWithIndex.map { case (n, l) =>
+      Seq.tabulate(n)(i => l * 1000L + i)
+    }
+    def reference(k: Int): Seq[(Long, Long)] = lists.flatMap { m =>
+      (for (i <- m.indices; j <- m.indices if i < j) yield (m(i), m(j))).take(k)
+    }.sorted
+    val grouped = lists.toDF("m")
+    for (k <- Seq(None, Some(100))) {
+      val got = LlmOps.explodeSortedPairs(grouped, "m", k)
+        .as[(Long, Long)].collect().toSeq.sorted
+      assert(got == reference(k.getOrElse(Int.MaxValue)), s"firstK=$k")
+    }
   }
 
   test("minhash does not pair unrelated documents above threshold") {
     import spark.implicits._
     val docs = (0 until 10).map(i =>
       (i.toLong, Seq.tabulate(50)(j => s"w${i}x$j").mkString(" "))).toDF("doc_id", "text")
-    val pairs = LlmOps.minhashCandidatePairs(docs).filter(col("jaccard") > 0.5)
+    val pairs = LlmOps.minhashCandidatePairs(docs)._1.filter(col("jaccard") > 0.5)
     assert(pairs.count() == 0)
   }
 
@@ -161,7 +182,7 @@ class LlmOpsSpec extends SparkSpec {
     val docs = rows.toDF("doc_id", "source", "text")
     val fast = graft.engine.LlmOps.ngramJaccardTop100(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val naive = graft.engine.LlmOps.sparseJaccardPairs(docs)
+    val naive = graft.engine.LlmOps.sparseJaccardPairs(docs)._1
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b")).limit(100)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(fast == naive, s"first diff: ${fast.zip(naive).find(p => p._1 != p._2)}")
@@ -180,10 +201,24 @@ class LlmOpsSpec extends SparkSpec {
       graft.engine.LlmOps.dedupGroups(docs, 0.1, cap = 3)
     }
     assert(e1.getMessage.contains("q_dedup_groups") && e1.getMessage.contains("cap=3"))
+    assert(e1.getMessage.contains(" 1 posting list(s)"), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
       graft.engine.LlmOps.ngramJaccardTop100(docs, cap = 3)
     }
     assert(e2.getMessage.contains("q_ngram_jaccard"))
+    // the sparse caller counts exactly the lists longer than its cap: only
+    // "x y z" (6 docs) is longer than 3, and no list is longer than 6
+    Seq(3 -> 1L, 6 -> 0L).foreach { case (cap, lists) =>
+      val (pairs, capped) = graft.engine.LlmOps.sparseJaccardPairs(docs, cap)
+      pairs.count()
+      assert(capped() == lists, s"cap=$cap")
+    }
+    // no shared shingle: the pair stage is empty, AQE prunes the observed
+    // subtree, and the count still reads 0
+    val apart = Seq((0L, "s0", "a b c"), (1L, "s0", "d e f"))
+      .toDF("doc_id", "source", "text")
+    val (none, noneCapped) = graft.engine.LlmOps.sparseJaccardPairs(apart)
+    assert(none.count() == 0 && noneCapped() == 0L)
     // the same corpus under an adequate cap runs to completion
     assert(graft.engine.LlmOps.dedupGroups(docs, 0.1).count() == 6)
     assert(graft.engine.LlmOps.ngramJaccardTop100(docs).count() > 0)

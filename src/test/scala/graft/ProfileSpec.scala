@@ -3,7 +3,8 @@ package graft
 import graft.tools.Profile
 
 /** tools.Profile's views on the shared session at sf0.001: the phase
-  * split and its compile counters, stage records that account for every task the listener saw, and
+  * split and its compile counters (also of the dedup pair kernel),
+  * stage records that account for every task the listener saw, and
   * the drain view's micro-batch count. */
 class ProfileSpec extends SparkSpec {
 
@@ -14,6 +15,17 @@ class ProfileSpec extends SparkSpec {
     // the first sample fills the codegen cache; the warm ones hit it
     assert(ps.drop(1).forall(_.compiles == 0), ps)
     ps.foreach(p => assert((p.compileMs == 0) == (p.compiles == 0), p))
+  }
+
+  test("phase view of dedup_pairs_kernel runs the posting-pair kernel") {
+    val kernel = Profile.resolve("dedup_pairs_kernel")
+    val ps = Profile.phases(spark, kernel, sf)
+    assert(ps.size == 3)
+    ps.foreach(p => assert(p.buildS > 0 && p.planS > 0 && p.execS > 0, p))
+    // the kernel's capped-list count is an observed metric of its plan
+    val df = kernel(spark, sf)
+    assert(df.columns.toSeq == Seq("doc_a", "doc_b", "jaccard"))
+    assert(df.queryExecution.executedPlan.toString.contains("CollectMetrics"))
   }
 
   test("stage view: summed stage run ms == the listener's task total") {

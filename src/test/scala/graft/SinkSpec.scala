@@ -110,9 +110,13 @@ class SinkSpec extends SparkSpec {
   test("idempotent batch writer: replaying a batch does not duplicate") {
     val out = tempDir("graft_idem")
     val e = Tables.events(spark, sf).limit(100)
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
     Sink.idempotentBatchWriter(out)(e, 7L)
     Sink.idempotentBatchWriter(out)(e, 7L) // replay of the same micro-batch
     Sink.idempotentBatchWriter(out)(e, 8L)
+    assert(spark.conf.getOption(mode) == modeBefore,
+      "the writer must not change the shared session's overwrite mode")
     val landed = spark.read.parquet(out)
     assert(landed.count() == 200, "batch 7 must land exactly once despite replay")
     assert(landed.select(col("batch_id")).distinct().count() == 2)
